@@ -6,10 +6,10 @@ instance on an iterable, get a dict back.  This module re-expresses that
 contract on Spark RDDs so the same user code distributes:
 
 * map phase        → ``rdd.flatMap`` (narrow stage)
-* partition + sort → ``groupByKey`` + per-group Python sort (shuffle)
-* reduce phase     → ``flatMap`` over grouped keys (narrow stage)
-* second shuffle   → ``groupByKey`` again (reducers may re-key)
-* output           → ``collect()`` into a dict + ``output()`` hook
+* partition + sort → ``groupByKey`` + per-group Python sort (one shuffle)
+* reduce phase     → same stage; output rows tagged with reducer-call order
+* output           → ``collect()``, then the second partition + sort over
+  the tag-sorted rows and the ``output()`` hook, on the driver
 
 Behavioral parity targets (all verified against the reference — see
 SURVEY.md Appendix; citations are to /root/reference/tinymr.py):
@@ -30,7 +30,8 @@ SURVEY.md Appendix; citations are to /root/reference/tinymr.py):
 
 Scale note: this layer is **correctness-first** — ``groupByKey`` +
 arbitrary Python objects is the faithful semantics, and ``collect()``
-is the faithful action.  The capability layer
+is the faithful action.  A call runs one Spark job, plus a ``first()``
+job on RDD input to read the mapper's arity.  The capability layer
 (:mod:`mr_python_spark.operators` and friends) is the **scale-first**
 path: native DataFrame aggregates with map-side partial aggregation,
 no driver materialization.
@@ -131,6 +132,19 @@ def _sorted_group(
     return first_order, values
 
 
+def _reduce_group(kv, reducer, is_gen, has_sort, sort_with_value, reverse):
+    """Order one group, run the reducer on it, tag each output row.
+
+    The tag is ``(first order of the input key, index in this call)``:
+    sorted by tag, rows replay the reference's sequential reducer
+    stream over keys in first-appearance order (tinymr.py:209-211).
+    """
+    key, entries = kv
+    order, values = _sorted_group(entries, has_sort, sort_with_value, reverse)
+    for j, t in enumerate(_emit(reducer, is_gen, key, values)):
+        yield (order, j), t
+
+
 def _expand_mapper(item, mapper):
     """Run a generator mapper eagerly so a process pool can pickle it.
 
@@ -151,8 +165,19 @@ def _expand_reducer(key_values, reducer):
     return tuple(reducer(*key_values))
 
 
+def _has_sort(first) -> bool:
+    """Arity dispatch on a phase's first tuple (tinymr.py:301-308)."""
+    if len(first) not in (2, 3):
+        raise ElementCountError(
+            f"Expected data of size 2 or 3, not {len(first)}. "
+            f"Example: {first!r}"
+        )
+    return len(first) == 3
+
+
 def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> dict:
-    """One in-process partition+sort phase (the pooled path's shuffle).
+    """One in-process partition+sort phase (both of the pooled path's,
+    the Spark path's second).
 
     Same semantics as the distributed ``_shape_rows`` + ``_sorted_group``
     pair: first-tuple-only arity validation, ``StopIteration`` on empty
@@ -163,12 +188,7 @@ def _local_partition(rows: Iterable, sort_with_value: bool, reverse: bool) -> di
     """
     rows = iter(rows)
     first = next(rows)  # empty input: unprotected peek, like tinymr.py:302
-    if len(first) not in (2, 3):
-        raise ElementCountError(
-            f"Expected data of size 2 or 3, not {len(first)}. "
-            f"Example: {first!r}"
-        )
-    has_sort = len(first) == 3
+    has_sort = _has_sort(first)
     buckets: dict[Any, list] = {}
     if has_sort:
         for t in itertools.chain((first,), rows):
@@ -212,6 +232,13 @@ class MapReduce(abc.ABC):
     through the supplied callables — identical semantics, no Spark job.
     With none supplied, Spark owns parallelism and the pipeline runs
     distributed.
+
+    On the Spark path the arity of the mapper's first tuple picks the
+    sort mode before the job runs, so the mapper runs twice on a prefix
+    of the input: on in-memory input this process runs it over the
+    items up to the one that yields the first tuple; on an RDD a
+    ``first()`` job does.  This is invisible for pure mappers, the same
+    assumption Spark's task retries already make.
     """
 
     #: Optional SparkSession; resolved lazily if left None.
@@ -286,36 +313,8 @@ class MapReduce(abc.ABC):
 
         return get_spark()
 
-    def _phase(self, rdd, hook_name: str, sort_with_value: bool, reverse: bool):
-        """One partition-and-sort round: validate, group, order, strip.
-
-        Returns an RDD of ``(key, (first_order, values_list))``.
-        """
-        tagged = _tag_order(rdd)
-        tagged.cache()
-        try:
-            first = tagged.first()[1]
-        except ValueError:
-            # Empty input is unsupported, exactly like the reference's
-            # unprotected peek (tinymr.py:302).
-            tagged.unpersist()
-            raise StopIteration(f"empty {hook_name} output")
-        if len(first) not in (2, 3):
-            tagged.unpersist()
-            raise ElementCountError(
-                f"Expected data of size 2 or 3, not {len(first)}. "
-                f"Example: {first!r}"
-            )
-        has_sort = len(first) == 3
-        keyed = _shape_rows(tagged, has_sort)
-        grouped = keyed.groupByKey()
-        result = grouped.mapValues(
-            lambda entries: _sorted_group(entries, has_sort, sort_with_value, reverse)
-        )
-        return result, tagged
-
     def __call__(self, sequence, map=None, mapper_map=None, reducer_map=None):
-        """Run the full map → shuffle → reduce → shuffle → output pipeline.
+        """Run the map → partition → reduce → partition → output pipeline.
 
         ``map`` is the default pool for both phases; ``mapper_map`` /
         ``reducer_map`` override it per phase (tinymr.py:156-173).  Any
@@ -326,59 +325,48 @@ class MapReduce(abc.ABC):
         reducer_map = reducer_map or map
         if mapper_map is not None or reducer_map is not None:
             return self._run_pooled(sequence, mapper_map, reducer_map)
-        spark = self._get_spark()
-        sc = spark.sparkContext
+        sc = self._get_spark().sparkContext
 
         from pyspark import RDD
 
+        reducer_is_gen = isgeneratorfunction(self.reducer)
+        map_item = partial(_emit, self.mapper, isgeneratorfunction(self.mapper))
+
+        # Arity peek: in-memory input runs the mapper here, on the prefix
+        # up to its first tuple, and launches no job; an RDD costs one.
+        # Empty output raises StopIteration (tinymr.py:302).
         if isinstance(sequence, RDD):
-            rdd = sequence
+            mapped = sequence.flatMap(map_item)
+            try:
+                first = mapped.first()
+            except ValueError:
+                raise StopIteration("empty mapper output") from None
         else:
             items = list(sequence)
+            first = next(t for item in items for t in map_item(item))
             rdd = sc.parallelize(items, max(1, min(len(items), sc.defaultParallelism)))
+            mapped = rdd.flatMap(map_item)
+        has_sort = _has_sort(first)
+        reduce_group = partial(
+            _reduce_group,
+            reducer=self.reducer,
+            is_gen=reducer_is_gen,
+            has_sort=has_sort,
+            sort_with_value=self.sort_map_with_value,
+            reverse=self.sort_map_reverse,
+        )
+        grouped = _shape_rows(_tag_order(mapped), has_sort).groupByKey()
+        rows = grouped.flatMap(reduce_group).collect()
+        rows.sort(key=lambda row: row[0])
 
-        mapper = self.mapper
-        mapper_is_gen = isgeneratorfunction(mapper)
-        reducer = self.reducer
-        reducer_is_gen = isgeneratorfunction(reducer)
-
-        cached = []
-        try:
-            mapped = rdd.flatMap(lambda item: _emit(mapper, mapper_is_gen, item))
-            partitioned, c1 = self._phase(
-                mapped, "mapper", self.sort_map_with_value, self.sort_map_reverse
-            )
-            cached.append(c1)
-
-            # Reducer-call order must be key first-appearance order in
-            # the mapped stream (the reference iterates an
-            # insertion-ordered dict, tinymr.py:209-211) — observable
-            # whenever reducers re-key: the FIRST reducer's output wins
-            # collisions.  groupByKey yields shuffle order, so restore
-            # the tag order before dispatching reducers.
-            ordered = partitioned.sortBy(lambda kv: kv[1][0])
-            reduced = ordered.flatMap(
-                lambda kv: _emit(reducer, reducer_is_gen, kv[0], kv[1][1])
-            )
-            partitioned2, c2 = self._phase(
-                reduced, "reducer", self.sort_reduce_with_value, self.sort_reduce_reverse
-            )
-            cached.append(c2)
-
-            rows = partitioned2.collect()
-        finally:
-            for c in cached:
-                c.unpersist()
-
-        # Reference output order = first-appearance order of reducer
-        # output keys (insertion-ordered dict in one process).
-        rows.sort(key=lambda kv: kv[1][0])
-        if reducer_is_gen:
-            mapping = {k: values for k, (_, values) in rows}
-        else:
-            # Return-style reducer: single value per key; on re-key
-            # collisions the first value (post-sort) wins.
-            mapping = {k: values[0] for k, (_, values) in rows}
+        # Over the ordered stream, output keys keep first-appearance
+        # order and the first value wins re-key collisions.
+        mapping = _local_partition(
+            (t for _, t in rows), self.sort_reduce_with_value, self.sort_reduce_reverse
+        )
+        if not reducer_is_gen:
+            # Return-style reducer: single value per key.
+            mapping = {k: v[0] for k, v in mapping.items()}
         return self.output(mapping)
 
     def _run_pooled(self, sequence, mapper_map, reducer_map):

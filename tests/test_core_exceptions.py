@@ -61,3 +61,31 @@ def test_good_widths_pass(spark):
     task = TwoTuple()
     task.spark = spark
     assert task([1, 1, 2]) == {1: 2, 2: 2}
+
+
+class _StrayReducer(MapReduce):
+    """The first reducer call fixes 2-tuple output; a later one yields a
+    3-tuple."""
+
+    def mapper(self, item):
+        yield item, item
+
+    def reducer(self, key, values):
+        if key == 1:
+            yield key, sum(values)
+        else:
+            yield key, 0, sum(values)
+
+
+def test_reducer_stray_three_tuple_is_plain_value_error(spark):
+    """The reduce-phase partition loop unpacks ``(key, value)`` exactly,
+    so a stray 3-tuple raises the plain ``ValueError`` of the
+    reference's loop, on both paths."""
+    task = _StrayReducer()
+    task.spark = spark
+    with pytest.raises(ValueError) as spark_err:
+        task([1, 2, 3])
+    assert type(spark_err.value) is ValueError
+    with pytest.raises(ValueError) as pooled_err:
+        task([1, 2, 3], map=map)
+    assert type(pooled_err.value) is ValueError

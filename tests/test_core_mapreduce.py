@@ -127,10 +127,15 @@ def test_rekey_collision_first_wins(spark):
 
     task = Funnel()
     task.spark = spark
-    result = task(list(range(8)))
-    assert set(result) == {"all"}
-    # one of the four subtotals, not their sum
-    assert result["all"] in {0 + 4, 1 + 5, 2 + 6, 3 + 7}
+    data = list(range(8))
+    # key 0 appears first, so its subtotal 0 + 4 wins, however the input
+    # is split across partitions and whichever reducer task ends first
+    assert task(data) == {"all": 4}
+    assert task(spark.sparkContext.parallelize(data, 3)) == {"all": 4}
+    # first appearance against hash-partition order: key 3 comes first
+    data = [3, 2, 1, 0, 7, 6, 5, 4]
+    assert task(data) == {"all": 3 + 7}
+    assert task(spark.sparkContext.parallelize(data, 3)) == {"all": 3 + 7}
 
 
 def test_single_key_funnel_none(spark):
@@ -206,3 +211,5 @@ def test_empty_input_raises(spark):
     task.spark = spark
     with pytest.raises((StopIteration, RuntimeError)):
         task([])
+    with pytest.raises(StopIteration):
+        task(spark.sparkContext.parallelize([], 2))

@@ -21,6 +21,7 @@ from mr_python_spark.core import (
     _expand_mapper,
     _expand_reducer,
     _local_partition,
+    _reduce_group,
     _shape_rows,
     _sorted_group,
     _tag_order,
@@ -110,6 +111,23 @@ def test_sorted_group_restores_encounter_order_before_mode_sort():
 
 def test_sorted_group_empty_entries():
     assert _sorted_group([], False, False, False) == (None, [])
+
+
+def test_reduce_group_tags_rows_with_call_order():
+    def rekey(key, values):
+        for v in values:
+            yield "all", v
+
+    def total(key, values):
+        return key, sum(values)
+
+    # entries arrive out of order; the group's first order is the tag's
+    # first element, the row's index in the call its second
+    entries = [((1, 0), "b"), ((0, 3), "a")]
+    rows = _reduce_group(("k", entries), rekey, True, False, False, False)
+    assert list(rows) == [(((0, 3), 0), ("all", "a")), (((0, 3), 1), ("all", "b"))]
+    rows = _reduce_group(("k", [((2, 5), 4), ((2, 6), 1)]), total, False, False, True, False)
+    assert list(rows) == [(((2, 5), 0), ("k", 5))]
 
 
 def test_expand_adapters_materialize_generators():

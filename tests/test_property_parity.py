@@ -133,3 +133,49 @@ def test_two_tuple_sum_rekey(spark, data, nparts):
     result = f(spark.sparkContext.parallelize(data, nparts))
     first_key = data[0][0]
     assert result == {"all": per_key[first_key]}
+
+
+@settings(
+    max_examples=16,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    data=_TRIPLES,
+    map_three=st.booleans(),
+    reduce_three=st.booleans(),
+    map_flags=_FLAGS,
+    reduce_flags=_FLAGS,
+    rdd_input=st.booleans(),
+    nparts=_NPARTS,
+)
+def test_spark_path_matches_pooled_path(
+    spark, data, map_three, reduce_three, map_flags, reduce_flags, rdd_input, nparts
+):
+    """The Spark path and the in-process pooled path (``map=map``) agree
+    on every sort flag of both phases, including the order of the
+    returned dict.  The generator reducer re-keys several tuples per
+    call onto colliding keys, so both the reducer-call order and the
+    order within each call show in the result."""
+
+    class Task(MapReduce):
+        sort_map_with_value, sort_map_reverse = map_flags
+        sort_reduce_with_value, sort_reduce_reverse = reduce_flags
+
+        def mapper(self, item):
+            return item if map_three else (item[0], item[2])
+
+        def reducer(self, key, values):
+            for i, v in enumerate(values):
+                new_key = (key + v) % 3
+                if reduce_three:
+                    yield new_key, i % 2, (key, v)
+                else:
+                    yield new_key, (key, v)
+
+    t = Task()
+    t.spark = spark
+    expected = t(data, map=map)
+    got = t(spark.sparkContext.parallelize(data, nparts) if rdd_input else data)
+    assert got == expected
+    assert list(got) == list(expected)

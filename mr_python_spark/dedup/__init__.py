@@ -537,10 +537,14 @@ def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups, NOT corpus size — well under 0.1% of document rows at
     every measured SF), so it is exactly the §5 cache case: reused AND far
     cheaper to hold than to recompute.  ``dedup_ngram_jaccard`` itself
-    keeps building the uncached plan (its bench timing stays an honest
-    measure of the verify join); only the family consumers read this
-    frame.  Cold-build vs warm-read cost is recorded per round in
-    docs/cold_warm_r17.json (tools/cold_warm_probe.py)."""
+    builds the uncached query, but once this frame is materialized
+    Spark's CacheManager rewrites that logically-equal plan to the
+    cached InMemoryRelation, so its plan and timing depend on call
+    order: the verify join before any consumer ran, a cache read after.
+    The uncached reference is the ``ngram_pairs_builder`` entry of
+    tools/explain_audit.py, which evicts this cache first.  Cold-build
+    vs warm-read cost is recorded per round in docs/cold_warm_r17.json
+    (tools/cold_warm_probe.py)."""
     return _keyed_df_cache(
         _NGRAM_PAIRS_CACHE,
         spark,

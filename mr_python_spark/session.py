@@ -90,6 +90,12 @@ def get_spark(app_name: str = "mr_python_spark", cpus: int | None = None) -> Spa
         # the events table stores TIMESTAMP(NANOS) parquet, which Spark
         # rejects by default; read as long and convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # pyspark's worker calls importlib.invalidate_caches() before
+        # every task (pyspark/worker_util.py:144), and on Python 3.11
+        # each zipimporter re-parses its whole archive for it: 138-249 ms
+        # a task on a 4-core box.  worker_daemon re-reads an archive
+        # only when its file identity changes: 0.1-0.2 ms a task.
+        .config("spark.python.daemon.module", "mr_python_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -150,6 +156,12 @@ def ensure_session(spark: SparkSession) -> None:
     (oracle SQL assumes it), Arrow for the pandas surfaces, and the
     package zip so executor Python workers can unpickle functions
     defined in these modules.
+
+    It cannot give the session :func:`get_spark`'s worker daemon
+    (``spark.python.daemon.module``): the daemon module is fixed when
+    the SparkContext starts.  A foreign session's Python tasks keep
+    pyspark's stock daemon and still re-read the zip archives on every
+    task (see :mod:`mr_python_spark.worker_daemon`).
     """
     key = spark.sparkContext.applicationId
     if key in _PREPARED:

@@ -53,7 +53,9 @@ def _families():
     return {
         # the whole shingle→postings→candidate chain (dedup_ngram_jaccard
         # consumes the two candidate frames; the chain is one family
-        # because the downstream frames pin the upstream ones warm)
+        # because the downstream frames pin the upstream ones warm).  The
+        # verified pair frame goes too: while it is registered, Spark's
+        # CacheManager rewrites dedup_ngram_jaccard's plan to read it.
         "ngram_candidates": (
             [
                 dedup._HSH_CACHE,
@@ -61,6 +63,7 @@ def _families():
                 dedup._CAND_CACHE,
                 dedup._SH_SMALL_CACHE,
                 dedup._SH_SMALL_N_CACHE,
+                dedup._NGRAM_PAIRS_CACHE,
             ],
             ["dedup_ngram_jaccard"],
         ),

@@ -343,16 +343,26 @@ def main() -> None:
     # reproduces within ±20% across bench invocations (round-10
     # protocol).  All runs execute the full plan into the no-op sink;
     # per-run timings are kept for noise diagnosis.
+    from mr_python_spark.dedup import cached_jaccard_pairs
+    from mr_python_spark.session import evict
+
+    def timed(name: str) -> float:
+        # the materialized verified-pair frame makes Spark's
+        # CacheManager serve dedup_ngram_jaccard as a cache read, so it
+        # is evicted before each timed run (which then pays its verify
+        # join) and rebuilt untimed right after, for its consumers
+        if name == "dedup_ngram_jaccard":
+            evict("dedup.ngram_pairs")
+        t0 = time.time()
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        elapsed = time.time() - t0
+        if name == "dedup_ngram_jaccard":
+            cached_jaccard_pairs(spark, SF_DIR).count()
+        return elapsed
+
     runs: list[dict[str, float]] = []
     for _ in range(3):
-        pass_timings: dict[str, float] = {}
-        for name in HEADLINE:
-            fn = qs[name]
-            t0 = time.time()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            pass_timings[name] = round(time.time() - t0, 3)
-        runs.append(pass_timings)
+        runs.append({name: round(timed(name), 3) for name in HEADLINE})
     in_suite = {name: min(r[name] for r in runs) for name in HEADLINE}
 
     # ISOLATED best-of-3 (round-13, judge order #4): the in-suite
@@ -365,13 +375,7 @@ def main() -> None:
     # column is a plan/code change, not suite scheduling noise.
     isolated: dict[str, float] = {}
     for name in HEADLINE:
-        fn = qs[name]
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        isolated[name] = round(best, 3)
+        isolated[name] = round(min(timed(name) for _ in range(3)), 3)
 
     total = round(sum(in_suite.values()), 3)
     total_isolated = round(sum(isolated.values()), 3)

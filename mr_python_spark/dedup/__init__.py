@@ -35,7 +35,13 @@ from pyspark.sql import functions as F
 
 from mr_python_spark.functions.text import tokens_col
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread, table_count
+from mr_python_spark.session import (
+    corpus_cache,
+    load_table,
+    scan_partitions,
+    spread,
+    table_count,
+)
 
 #: MinHash parameters: 64 hashes = 16 bands × 4 rows
 MINHASH_HASHES = 64
@@ -95,42 +101,6 @@ def shingle_sets(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFra
     )
 
 
-def _evict_frame(df: DataFrame) -> None:
-    """Release an evicted cached frame's storage — BOTH tiers.
-
-    ``df.unpersist()`` only clears SQL CacheManager entries; a
-    ``localCheckpoint``-pinned frame (the graph fixed points) stores
-    its rows as RDD blocks OUTSIDE the CacheManager, reachable through
-    the checkpointed Dataset's LogicalRDD leaf.  Without releasing that
-    RDD, evicting a regenerated corpus leaked the old label/rank blocks
-    for the application lifetime (r16 ADVICE).  Non-checkpointed frames
-    have no ``rdd()`` accessor on their logical plan — the probe just
-    no-ops for them."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
-    except Exception:
-        pass  # not a LogicalRDD-backed (checkpointed) frame
-    df.unpersist()
-
-
-def _keyed_df_cache(cache: dict, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Keyed cache for PERSISTED corpus-derived frames.
-
-    Thin wrapper over :func:`mr_python_spark.session.keyed_cache` (the
-    one implementation of the key/eviction rule) that unpersists
-    evicted frames — used by the shingle / postings / span / LM /
-    quality caches.
-    """
-    from mr_python_spark.session import keyed_cache
-
-    return keyed_cache(cache, spark, sf_dir, build, on_evict=_evict_frame)
-
-
-#: (applicationId, documents.parquet realpath, mtime_ns) → cached
-#: hashed-shingle-set DataFrame; see :func:`hashed_shingle_sets`
-_HSH_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def hashed_shingle_sets(
     spark: SparkSession, sf_dir: str, *, docs: DataFrame | None = None
 ) -> DataFrame:
@@ -150,17 +120,12 @@ def hashed_shingle_sets(
     )
     if docs is not None:
         return hashed(docs)
-    return _keyed_df_cache(
-        _HSH_CACHE,
+    return corpus_cache(
+        "dedup.shingles",
         spark,
         sf_dir,
         lambda: hashed(load_table(spark, sf_dir, "documents")).cache(),
     )
-
-
-#: (applicationId, documents file identity) → cached DF-capped posting
-#: lists; see :func:`capped_postings`
-_POSTINGS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,10 +141,11 @@ def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     own session-lifetime cache entry, and a regenerated dataset evicts
     the stale entry.
     """
-    sh_sets = hashed_shingle_sets(spark, sf_dir)
 
     def build() -> DataFrame:
-        exploded = sh_sets.select("doc_id", F.explode("sh").alias("shingle"))
+        exploded = hashed_shingle_sets(spark, sf_dir).select(
+            "doc_id", F.explode("sh").alias("shingle")
+        )
         return (
             exploded.groupBy("shingle")
             .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
@@ -187,7 +153,7 @@ def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    return _keyed_df_cache(_POSTINGS_CACHE, spark, sf_dir, build)
+    return corpus_cache("dedup.postings", spark, sf_dir, build)
 
 
 def posting_candidates(
@@ -220,12 +186,6 @@ def posting_candidates(
     return cand, sh_small
 
 
-#: (applicationId, documents file identity) → cached candidate-pair /
-#: pruned-shingle frames; see :func:`cached_posting_candidates`
-_CAND_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-_SH_SMALL_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def cached_posting_candidates(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -235,28 +195,28 @@ def cached_posting_candidates(
     both :func:`dedup_ngram_jaccard` and :func:`dedup_containment`
     consume the identical candidate set — cache it like the shingle /
     postings / signature frames so the second family member pays
-    nothing.  Same (application, file identity) key and stale-eviction
-    rule as every other corpus cache."""
-    sh_sets = hashed_shingle_sets(spark, sf_dir)
-    postings = capped_postings(spark, sf_dir)
-    cand = _keyed_df_cache(
-        _CAND_CACHE,
-        spark,
-        sf_dir,
-        lambda: posting_candidates(postings, sh_sets)[0].cache(),
+    nothing.  Held by :func:`~mr_python_spark.session.corpus_cache`."""
+
+    def build(i: int) -> DataFrame:
+        sh_sets = hashed_shingle_sets(spark, sf_dir)
+        return posting_candidates(capped_postings(spark, sf_dir), sh_sets)[i].cache()
+
+    return (
+        corpus_cache("dedup.candidates", spark, sf_dir, lambda: build(0)),
+        corpus_cache("dedup.sh_small", spark, sf_dir, lambda: build(1)),
     )
-    sh_small = _keyed_df_cache(
-        _SH_SMALL_CACHE,
-        spark,
-        sf_dir,
-        lambda: posting_candidates(postings, sh_sets)[1].cache(),
-    )
-    return cand, sh_small
 
 
-#: (applicationId, documents file identity) → row count of the cached
-#: pruned-verification frame; feeds the broadcast size gate
-_SH_SMALL_N_CACHE: dict[tuple[str, str, int], int] = {}
+def verify_frame_docs(spark: SparkSession, sf_dir: str) -> int:
+    """Row count of the cached pruned-verification frame — the
+    broadcast gate's measurement, taken once per (session, corpus
+    identity)."""
+    return corpus_cache(
+        "dedup.sh_small_n",
+        spark,
+        sf_dir,
+        lambda: cached_posting_candidates(spark, sf_dir)[1].count(),
+    )
 
 
 def gated_verify_frame(
@@ -274,15 +234,7 @@ def gated_verify_frame(
     returned un-hinted and AQE chooses the join strategy (shuffled
     hash join on doc_id at real scale).
     """
-    import os
-
-    path = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    if key not in _SH_SMALL_N_CACHE:
-        for stale in [k for k in _SH_SMALL_N_CACHE if k[:2] == key[:2]]:
-            _SH_SMALL_N_CACHE.pop(stale)
-        _SH_SMALL_N_CACHE[key] = sh_small.count()
-    if _SH_SMALL_N_CACHE[key] <= VERIFY_BROADCAST_MAX_DOCS:
+    if verify_frame_docs(spark, sf_dir) <= VERIFY_BROADCAST_MAX_DOCS:
         return F.broadcast(sh_small)
     return sh_small
 
@@ -517,11 +469,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, documents file identity) → cached VERIFIED capped-
-#: ngram pair frame; see :func:`cached_jaccard_pairs`
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed-cached VERIFIED near-dup pair frame — the materialized
     ``dedup_ngram_jaccard`` result (doc_a, doc_b, jaccard ≥ 0.2).
@@ -542,20 +489,16 @@ def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached InMemoryRelation, so its plan and timing depend on call
     order: the verify join before any consumer ran, a cache read after.
     The uncached reference is the ``ngram_pairs_builder`` entry of
-    tools/explain_audit.py, which evicts this cache first.  Cold-build
+    tools/explain_audit.py, which evicts this cache first, as bench.py
+    does before each timed ``dedup_ngram_jaccard`` run.  Cold-build
     vs warm-read cost is recorded per round in docs/cold_warm_r17.json
     (tools/cold_warm_probe.py)."""
-    return _keyed_df_cache(
-        _NGRAM_PAIRS_CACHE,
+    return corpus_cache(
+        "dedup.ngram_pairs",
         spark,
         sf_dir,
         lambda: dedup_ngram_jaccard(spark, sf_dir).cache(),
     )
-
-
-#: (applicationId, documents file identity) → cached signature frame;
-#: see :func:`minhash_signatures`
-_SIG_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def minhash_signatures(
@@ -598,8 +541,8 @@ def minhash_signatures(
 
     if docs is not None:
         return build(docs)
-    return _keyed_df_cache(
-        _SIG_CACHE, spark, sf_dir, lambda: build(None).cache()
+    return corpus_cache(
+        "dedup.signatures", spark, sf_dir, lambda: build(None).cache()
     )
 
 
@@ -630,17 +573,6 @@ def minhash_band_frame(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bhash")
 
 
-#: (applicationId, documents identity) → cached (doc_id, band, bhash)
-#: band frame; see :func:`cached_band_frame`
-_BAND_FRAME_CACHE: dict = {}
-#: (applicationId, documents identity) → cached corpus LSH buckets at
-#: the default cap (:func:`dedup_minhash_lsh`)
-_LSH_BUCKETS_CACHE: dict = {}
-#: (applicationId, documents identity) → cached corpus-side incremental
-#: buckets (:func:`dedup_incremental_minhash`)
-_INC_BUCKETS_CACHE: dict = {}
-
-
 def cached_band_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed-cached :func:`minhash_band_frame` over the corpus
     signatures — shared by the batch LSH pass and the incremental
@@ -649,8 +581,8 @@ def cached_band_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-registered the same cache plan; one keyed entry per (session,
     corpus identity) makes repeat builds free, same rule as the
     signature cache it derives from."""
-    return _keyed_df_cache(
-        _BAND_FRAME_CACHE,
+    return corpus_cache(
+        "dedup.band_frame",
         spark,
         sf_dir,
         lambda: minhash_band_frame(minhash_signatures(spark, sf_dir)).cache(),
@@ -706,8 +638,8 @@ def dedup_minhash_lsh(
         # registered corpus path: the band frame AND the bucket frame
         # come from keyed caches, so a repeat build costs no driver
         # re-analysis and no duplicate cache registration
-        buckets = _keyed_df_cache(
-            _LSH_BUCKETS_CACHE,
+        buckets = corpus_cache(
+            "dedup.lsh_buckets",
             spark,
             sf_dir,
             lambda: build_buckets(cached_band_frame(spark, sf_dir)),
@@ -827,12 +759,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver (~0.3 s/call, the dominant cost of a warm build)
     bands = cached_band_frame(spark, sf_dir)
     is_batch = F.col("doc_id") % 10 == 0
-    corpus_buckets = _keyed_df_cache(
-        _INC_BUCKETS_CACHE,
+    corpus_buckets = corpus_cache(
+        "dedup.inc_buckets",
         spark,
         sf_dir,
         lambda: (
-            bands.filter(~is_batch)
+            cached_band_frame(spark, sf_dir)
+            .filter(~is_batch)
             .groupBy("band", "bhash")
             .agg(F.collect_list("doc_id").alias("ds"))
             .filter(F.size("ds") <= LSH_BUCKET_CAP)
@@ -1527,11 +1460,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_labels(spark, sf_dir).select("doc_id", "cluster_id")
 
 
-#: (applicationId, documents file identity) → converged min-label
-#: frame; see :func:`_cluster_labels`
-_CLUSTER_LABELS_CACHE: dict = {}
-
-
 def _cc_shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) hashed-shingle instance stream of the CC edge
     build — the exact-jaccard inverted-index input."""
@@ -1647,7 +1575,7 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.unpersist()
         return final
 
-    return _keyed_df_cache(_CLUSTER_LABELS_CACHE, spark, sf_dir, build)
+    return corpus_cache("dedup.cluster_labels", spark, sf_dir, build)
 
 
 _SURVIVORS_ORACLE_TMPL = """
@@ -1767,11 +1695,6 @@ def dedup_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_LEN = 40
 SPAN_STRIDE = 10
 
-#: (applicationId, documents file identity) → persisted span frame;
-#: see :func:`_span_frame`
-_SPAN_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h) — xxhash64'd distinct stride-sampled spans.
 
@@ -1806,7 +1729,7 @@ def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
-    return _keyed_df_cache(_SPAN_CACHE, spark, sf_dir, build)
+    return corpus_cache("dedup.spans", spark, sf_dir, build)
 
 
 _SUBSTR_ORACLE = f"""
@@ -2913,16 +2836,14 @@ FROM batch b LEFT JOIN corpus c ON b.lead_fp = c.lead_fp
 """
 
 
-#: (applicationId, documents file identity) → cached corpus fingerprint
-#: index (distinct lead_fp) and set-bit bitmap frame.  These ARE the
-#: persistent structures of an incremental ingest pipeline — the exact
-#: index the audit joins against and the Bloom bitmap every batch
-#: probes — held hot between batches in production, so the session
-#: cache mirrors the deployment instead of re-tokenizing + re-hashing
-#: the corpus on every consumer arm (the r14 quiet-pin 6.8x was mostly
-#: this: 8 parquet scans, 0 reused exchanges, corpus fingerprinted 4x).
-_BLOOM_CORPUS_CACHE: dict = {}
-_BLOOM_BITS_CACHE: dict = {}
+# The cached corpus fingerprint index (distinct lead_fp) and set-bit
+# bitmap frame of :func:`_bloom_flag_frame` ARE the persistent
+# structures of an incremental ingest pipeline — the exact index the
+# audit joins against and the Bloom bitmap every batch probes — held
+# hot between batches in production, so the session cache mirrors
+# the deployment instead of re-tokenizing + re-hashing the corpus on
+# every consumer arm (the r14 quiet-pin 6.8x was mostly this: 8
+# parquet scans, 0 reused exchanges, corpus fingerprinted 4x).
 
 
 def _bloom_positions(col: str):
@@ -2952,23 +2873,25 @@ def _bloom_flag_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_batch = F.col("doc_id") % 10 == 0
 
-    def build_corpus() -> DataFrame:
-        return fp.filter(~is_batch).select("lead_fp").distinct().cache()
-
-    corpus_fp = _keyed_df_cache(
-        _BLOOM_CORPUS_CACHE, spark, sf_dir, build_corpus
-    )
+    def corpus_index() -> DataFrame:
+        return corpus_cache(
+            "dedup.bloom_corpus",
+            spark,
+            sf_dir,
+            lambda: fp.filter(~is_batch).select("lead_fp").distinct().cache(),
+        )
 
     def build_bits() -> DataFrame:
         return (
-            corpus_fp.select(
+            corpus_index().select(
                 F.explode(_bloom_positions("lead_fp")).alias("bit")
             )
             .distinct()
             .cache()
         )
 
-    bits = _keyed_df_cache(_BLOOM_BITS_CACHE, spark, sf_dir, build_bits)
+    corpus_fp = corpus_index()
+    bits = corpus_cache("dedup.bloom_bits", spark, sf_dir, build_bits)
     batch = fp.filter(is_batch)
     probe = batch.select(
         "doc_id", "lead_fp", F.explode(_bloom_positions("lead_fp")).alias("bit")

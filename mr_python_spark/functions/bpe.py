@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
 
 #: training-sample posture: stride subset then hard cap — constant
 #: driver memory at any corpus size (the 100× rule)
@@ -111,9 +111,6 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-_BPE_MODELS: dict[tuple, tuple[list[tuple[str, str]], frozenset]] = {}
-
-
 def trained_bpe_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, str]], frozenset]:
@@ -125,13 +122,8 @@ def trained_bpe_model(
     training sample produced (chars plus last-char+``</w>``); the full
     vocab is ``alphabet ∪ {a+b for each merge}``, which is what the
     OOV-free coverage column of :func:`bpe_token_stats` tests."""
-    import os
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(p)
-    key = (os.path.realpath(p), st.st_size, st.st_mtime_ns)
-    model = _BPE_MODELS.get(key)
-    if model is None:
+    def build() -> tuple[list[tuple[str, str]], frozenset]:
         docs = load_table(spark, sf_dir, "documents")
         sample = (
             docs.filter(F.col("doc_id") % BPE_SAMPLE_STRIDE == 0)
@@ -155,9 +147,9 @@ def trained_bpe_model(
         for w in wf:
             alphabet.update(w[:-1])
             alphabet.add(w[-1] + BPE_END)
-        model = (train_bpe(wf), frozenset(alphabet))
-        _BPE_MODELS[key] = model
-    return model
+        return train_bpe(wf), frozenset(alphabet)
+
+    return corpus_cache("bpe.model", spark, sf_dir, build)
 
 
 def trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:

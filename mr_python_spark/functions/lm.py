@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from mr_python_spark.functions.text import STOPWORDS, tokens_col
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import corpus_cache, load_table
 
 #: Deterministic bounded training sample (matches the BPE trainer's
 #: posture): every LM_SAMPLE_STRIDE-th document by id, first
@@ -137,17 +137,9 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the cache each consumer would retrain the model and
     rescan the corpus.
     """
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    def build() -> DataFrame:
-        return _lm_scored(spark, sf_dir).cache()
-
-    return _keyed_df_cache(_LM_SCORED_CACHE, spark, sf_dir, build)
-
-
-#: (applicationId, documents file identity) → cached per-doc LM score
-#: frame; see :func:`bigram_lm_perplexity`
-_LM_SCORED_CACHE: dict = {}
+    return corpus_cache(
+        "lm.scored", spark, sf_dir, lambda: _lm_scored(spark, sf_dir).cache()
+    )
 
 
 def _lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,17 +281,9 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncached builder's broadcast-hint policy is audited via the
     ``nb_scored_builder`` pseudo-entry in tools/explain_audit.py.
     """
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    def build() -> DataFrame:
-        return _nb_scored(spark, sf_dir).cache()
-
-    return _keyed_df_cache(_NB_SCORED_CACHE, spark, sf_dir, build)
-
-
-#: (applicationId, documents file identity) → cached per-doc NB score
-#: frame shared by the classifier and its calibration report
-_NB_SCORED_CACHE: dict = {}
+    return corpus_cache(
+        "lm.nb_scored", spark, sf_dir, lambda: _nb_scored(spark, sf_dir).cache()
+    )
 
 
 def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,17 +765,9 @@ def moore_lewis_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/docs.rst:137-176); data selection is the
     LLM-pipeline extension tier (SURVEY.md §6).
     """
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    def build() -> DataFrame:
-        return _ml_scored(spark, sf_dir).cache()
-
-    return _keyed_df_cache(_ML_CACHE, spark, sf_dir, build)
-
-
-#: (applicationId, documents file identity) → cached Moore-Lewis
-#: per-doc frame; the LM-family cache convention
-_ML_CACHE: dict = {}
+    return corpus_cache(
+        "lm.ml_scored", spark, sf_dir, lambda: _ml_scored(spark, sf_dir).cache()
+    )
 
 
 def _ml_scored(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from mr_python_spark.functions.text import STOPWORDS, tokens_col
 from mr_python_spark.registry import register
 from mr_python_spark.session import (
-    keyed_cache,
+    corpus_cache,
     load_table,
     scan_partitions,
     spread,
@@ -988,11 +988,6 @@ GROUP BY source
 """
 
 
-#: (applicationId, documents file identity) → corpus token total —
-#: the drift report's denominator scalar, computed once per corpus
-_DRIFT_TOTAL_CACHE: dict = {}
-
-
 @register("source_drift_report", _DRIFT_ORACLE)
 def source_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source KL divergence to the corpus unigram mix, in bits.
@@ -1025,8 +1020,8 @@ def source_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's (SELECT n FROM total) sees the identical literal) —
     # a corpus constant, keyed-cached per (session, file identity)
     # instead of an explode+aggregate driver job per query build
-    n = keyed_cache(
-        _DRIFT_TOTAL_CACHE, spark, sf_dir,
+    n = corpus_cache(
+        "pipeline.drift_total", spark, sf_dir,
         lambda: vocab.agg(F.sum("c")).first()[0],
     )
 
@@ -1172,20 +1167,10 @@ GROUP BY doc_id, lang
 """
 
 
-#: (applicationId, documents file identity) → cached hashed-token
-#: frame; the DSIR scorer reads it three times per run (model build,
-#: totals scalar, scoring join), so it is tokenized+hashed ONCE
-_DSIR_TOKS_CACHE: dict = {}
-
-#: (applicationId, documents file identity) → (tt, tr) denominator
-#: scalars of the DSIR model — corpus constants, computed once
-_DSIR_TOTALS_CACHE: dict = {}
-
-
 def _dsir_hashed_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, b) — md5-bucketed tokens, cached per corpus
-    (same keyed-cache-with-stale-eviction as the shingle frames)."""
-    from mr_python_spark.dedup import _keyed_df_cache
+    """(doc_id, lang, b) — md5-bucketed tokens, cached per corpus: the
+    DSIR scorer reads the frame three times per run (model build,
+    totals scalar, scoring join), so it is tokenized+hashed ONCE."""
 
     def build():
         docs = load_table(spark, sf_dir, "documents")
@@ -1202,7 +1187,7 @@ def _dsir_hashed_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    return _keyed_df_cache(_DSIR_TOKS_CACHE, spark, sf_dir, build)
+    return corpus_cache("pipeline.dsir_toks", spark, sf_dir, build)
 
 
 @register("dsir_importance_weights", _DSIR_ORACLE)
@@ -1233,26 +1218,28 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drift report's corpus total.  100 TB: nothing corpus-sized
     moves except the exploded-token shuffle every text aggregate pays.
     """
-    toks = _dsir_hashed_toks(spark, sf_dir)
-    model = toks.groupBy("b").agg(
-        F.sum(
-            F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
-        ).alias("ct"),
-        F.count("*").alias("cr"),
-    )
+    def model() -> DataFrame:
+        return _dsir_hashed_toks(spark, sf_dir).groupBy("b").agg(
+            F.sum(
+                F.when(F.col("lang") == DSIR_TARGET_LANG, 1).otherwise(0)
+            ).alias("ct"),
+            F.count("*").alias("cr"),
+        )
+
     # the two denominator scalars are corpus constants (target-token
     # and corpus-token totals): keyed-cached per (session, corpus file
     # identity) like every planning scalar, instead of a ~0.2 s
     # .first() driver job on every query build
     def _totals():
-        trow = model.agg(
+        trow = model().agg(
             F.sum("ct").alias("tt"), F.sum("cr").alias("tr")
         ).first()
         return int(trow["tt"]), int(trow["tr"])
 
-    tt, tr = keyed_cache(_DSIR_TOTALS_CACHE, spark, sf_dir, _totals)
+    tt, tr = corpus_cache("pipeline.dsir_totals", spark, sf_dir, _totals)
 
-    scored = toks.join(F.broadcast(model), "b").select(
+    toks = _dsir_hashed_toks(spark, sf_dir)
+    scored = toks.join(F.broadcast(model()), "b").select(
         "doc_id",
         "lang",
         (
@@ -1305,11 +1292,6 @@ FROM mass
 """
 
 
-#: (applicationId, documents file identity) → (smass, ntot) totals of
-#: the temperature mixture — corpus constants, computed once
-_MIX_TOTALS_CACHE: dict = {}
-
-
 @register("mixture_temperature_weights", _TEMPERATURE_ORACLE)
 def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source sampling weights (α = 1/2), the
@@ -1351,7 +1333,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         return int(trow["smass"]), int(trow["ntot"])
 
-    smass, ntot = keyed_cache(_MIX_TOTALS_CACHE, spark, sf_dir, _mix_totals)
+    smass, ntot = corpus_cache("pipeline.mix_totals", spark, sf_dir, _mix_totals)
     return mass.select(
         "source",
         "n_docs",
@@ -1626,11 +1608,6 @@ def incremental_oov_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, documents file identity) → cached per-doc quality
-#: frame; see :func:`quality_fp_frame`
-_QUALITY_FP_CACHE: dict = {}
-
-
 def _quality_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNCACHED builder for :func:`quality_fp_frame` (audited as the
     ``quality_fp_builder`` pseudo-entry in tools/explain_audit.py)."""
@@ -1674,13 +1651,11 @@ def quality_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize + stopword + dup-hash scan per (session, corpus identity)
     instead of re-scoring the corpus per query.
     """
-    from mr_python_spark.dedup import _keyed_df_cache
-
     # cached pre-partitioned on q_fp: the ablation curve's rank window
     # (the dominant consumer) then reads a co-partitioned cache with no
     # exchange; one extra build-time shuffle, amortized across the run
-    return _keyed_df_cache(
-        _QUALITY_FP_CACHE,
+    return corpus_cache(
+        "pipeline.quality_fp",
         spark,
         sf_dir,
         lambda: _quality_fp(spark, sf_dir).repartition("q_fp").cache(),

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
 
 #: tiny English stopword list used by quality scoring (deterministic)
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "be")
@@ -1436,12 +1436,6 @@ _LANGID_K = 20
 _LANGID_M = 10
 _LANGID_PENALTY = _LANGID_K + 1
 
-#: (applicationId, documents file identity) → cached per-doc trigram
-#: count frame (doc_id, lang, tri, c) shared by the language-profile
-#: and per-doc-top consumers of :func:`lang_id_ngram_profile`
-_LANGID_DP_CACHE: dict = {}
-
-
 def _langid_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNCACHED (doc_id, lang, tri, c) builder: one JVM
     transform+explode over the ≥3-char documents, one partial-agged
@@ -1467,7 +1461,9 @@ def _langid_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_dp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mr_python_spark.dedup import _keyed_df_cache
+    """Cached per-doc trigram count frame (doc_id, lang, tri, c) shared
+    by the language-profile and per-doc-top consumers of
+    :func:`lang_id_ngram_profile`."""
 
     def build() -> DataFrame:
         # cached PRE-PARTITIONED on doc_id: the per-doc-top window's
@@ -1478,7 +1474,7 @@ def _langid_dp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # either way
         return _langid_dp(spark, sf_dir).repartition("doc_id").cache()
 
-    return _keyed_df_cache(_LANGID_DP_CACHE, spark, sf_dir, build)
+    return corpus_cache("text.langid_dp", spark, sf_dir, build)
 
 _LANGID_NGRAM_ORACLE = f"""
 WITH pos AS (

@@ -43,7 +43,7 @@ from mr_python_spark.functions.bpe import (
     _words,
 )
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
 
 #: longest piece considered anywhere (seeding, Viterbi window)
 UNIGRAM_MAX_PIECE = 8
@@ -174,24 +174,15 @@ def train_unigram(word_freq: dict[str, int]):
     return pieces, counts, costs
 
 
-_UNIGRAM_MODELS: dict[tuple, tuple] = {}
-
-
 def trained_unigram(spark: SparkSession, sf_dir: str):
     """(pieces, counts, costs) for a corpus, cached per file identity
     (the BPE/k-means/PQ model-cache pattern): stride-``BPE_SAMPLE_
     STRIDE`` docs, ``ORDER BY doc_id LIMIT BPE_SAMPLE_CAP``,
     word-frequency aggregated DISTRIBUTED — only the bounded freq
     table reaches the driver, never the text."""
-    import os
-
     from pyspark.sql import functions as F
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(p)
-    key = (os.path.realpath(p), st.st_size, st.st_mtime_ns)
-    model = _UNIGRAM_MODELS.get(key)
-    if model is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         sample = (
             docs.filter(F.col("doc_id") % BPE_SAMPLE_STRIDE == 0)
@@ -210,9 +201,9 @@ def trained_unigram(spark: SparkSession, sf_dir: str):
             .agg(F.count(F.lit(1)).alias("f"))
             .collect()
         )
-        model = train_unigram({r.word: r.f for r in freq_rows})
-        _UNIGRAM_MODELS[key] = model
-    return model
+        return train_unigram({r.word: r.f for r in freq_rows})
+
+    return corpus_cache("unigram.model", spark, sf_dir, build)
 
 
 @register("unigram_vocab")  # deterministic piece table; udf-oracle tier

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
 
 
 def _pillow():
@@ -879,22 +879,17 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, documents file identity) → cached (doc_id,
-#: phash_hi, phash_lo) frame — the decode is the expensive part and
-#: both phash queries consume the same bits
-_PHASH_CACHE: dict = {}
-
-
 def _phash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, phash_hi, phash_lo) over real decodes, keyed-cached
-    per (session, documents file identity) — see
+    per (session, documents file identity) — the decode is the
+    expensive part and both phash queries consume the same bits; see
     :func:`multimodal_phash_dedup` for the hash definition."""
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    def build() -> DataFrame:
-        return _phash_hashes(spark, sf_dir).cache()
-
-    return _keyed_df_cache(_PHASH_CACHE, spark, sf_dir, build)
+    return corpus_cache(
+        "multimodal.phash",
+        spark,
+        sf_dir,
+        lambda: _phash_hashes(spark, sf_dir).cache(),
+    )
 
 
 def _fixture_image_decode(d: int, plen: int):
@@ -1170,15 +1165,12 @@ def multimodal_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     result frame is keyed-cached per (session, file identity) like
     ``_phash_frame`` — repeated consumers pay the decode once.
     """
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    def build() -> DataFrame:
-        return _resize_stats(spark, sf_dir).cache()
-
-    return _keyed_df_cache(_RESIZE_CACHE, spark, sf_dir, build)
-
-
-_RESIZE_CACHE: dict = {}
+    return corpus_cache(
+        "multimodal.resize",
+        spark,
+        sf_dir,
+        lambda: _resize_stats(spark, sf_dir).cache(),
+    )
 
 
 def _resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

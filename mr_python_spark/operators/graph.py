@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mr_python_spark.registry import register
+from mr_python_spark.session import corpus_cache
 
 #: fixed-point scale for rank mass (micro-micro units)
 PR_SCALE = 10**12
@@ -114,15 +115,6 @@ SELECT doc_id, pr AS "rank" FROM r{PR_ITERATIONS}
     )
 
 
-#: (applicationId, documents file identity) → materialized PageRank
-#: fixed point — deterministic, so a corpus property like the labels
-_PAGERANK_CACHE: dict = {}
-
-#: (applicationId, documents file identity) → materialized bidirected
-#: near-dup edge frame; see :func:`neardup_bidir`
-_BIDIR_CACHE: dict = {}
-
-
 def neardup_bidir(spark: SparkSession, sf_dir: str):
     """Bidirected jaccard-≥0.2 edge frame, keyed-cached per corpus.
 
@@ -135,7 +127,7 @@ def neardup_bidir(spark: SparkSession, sf_dir: str):
     keyed-cached verified family frame (r17: the bidirect build reads
     the InMemoryTableScan leaf instead of re-planning the verify
     subtree)."""
-    from mr_python_spark.dedup import _keyed_df_cache, cached_jaccard_pairs
+    from mr_python_spark.dedup import cached_jaccard_pairs
 
     def build():
         pairs = cached_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -147,7 +139,7 @@ def neardup_bidir(spark: SparkSession, sf_dir: str):
         bidir.count()
         return bidir
 
-    return _keyed_df_cache(_BIDIR_CACHE, spark, sf_dir, build)
+    return corpus_cache("graph.bidir", spark, sf_dir, build)
 
 
 def pagerank_round(edges, verts, rank, base: int):
@@ -179,7 +171,9 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor division on ``PR_SCALE`` units (see module docstring), so
     the output is bit-identical to the SQL oracle.  Per round: one
     shuffle to aggregate neighbor contributions, one broadcast-size
-    join back onto the vertex set; the edge list is cached once.
+    join back onto the vertex set; the edge list is cached once.  The
+    materialized fixed point is deterministic, so it is cached per
+    corpus like the CC labels.
     """
     def build():
         bidir = neardup_bidir(spark, sf_dir)
@@ -208,9 +202,7 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.unpersist()
         return out
 
-    from mr_python_spark.dedup import _keyed_df_cache
-
-    return _keyed_df_cache(_PAGERANK_CACHE, spark, sf_dir, build)
+    return corpus_cache("graph.pagerank", spark, sf_dir, build)
 
 
 _REACH_ORACLE = """

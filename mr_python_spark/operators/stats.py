@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from mr_python_spark.functions.text import tokens_col
 from mr_python_spark.operators.aggregates import fixed_point
 from mr_python_spark.registry import register
-from mr_python_spark.session import keyed_cache, load_table, table_count
+from mr_python_spark.session import corpus_cache, load_table, table_count
 
 
 _VAR_ORACLE = """
@@ -660,11 +660,6 @@ FROM c
 """
 
 
-#: (applicationId, lineitem file identity) → freqItems sketch output —
-#: a dataset constant of the envelope, computed once per corpus
-_FREQ_ITEMS_CACHE: dict = {}
-
-
 @register("freq_items_envelope", _FREQ_ITEMS_ORACLE)
 def freq_items_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries frequent-items sketch with an exact containment gate.
@@ -691,8 +686,8 @@ def freq_items_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the sketch result and the row count are dataset constants: keyed-
     # cached per (session, file identity) instead of two driver jobs
     # (freqItems pass + count) on every query build
-    items = keyed_cache(
-        _FREQ_ITEMS_CACHE, spark, sf_dir,
+    items = corpus_cache(
+        "stats.freq_items", spark, sf_dir,
         lambda: li.stat.freqItems(["l_quantity"], support).first()[0],
         table="lineitem",
     )

@@ -9,12 +9,13 @@ partitions sized to cores rather than the 200 default.
 from __future__ import annotations
 
 import os
+import threading
 
 # Python workers must hash strings identically for groupByKey on string
 # keys; set before any worker is forked so every interpreter agrees.
 os.environ.setdefault("PYTHONHASHSEED", "0")
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
@@ -173,28 +174,82 @@ def ensure_session(spark: SparkSession) -> None:
     _PREPARED.add(key)
 
 
-def keyed_cache(cache: dict, spark: SparkSession, sf_dir: str, build, *,
-                table: str = "documents", on_evict=None):
-    """Keyed-cache-with-stale-eviction for corpus-derived values.
+def _evict_frame(df: DataFrame) -> None:
+    """Release an evicted cached frame's storage — BOTH tiers.
 
-    Key = (applicationId, table realpath, mtime_ns): one entry per
-    (session, file identity); a regenerated dataset changes the mtime
-    and evicts the stale same-prefix entry, ``on_evict`` releasing its
-    resources (e.g. ``DataFrame.unpersist``).  THE one implementation
-    of the keying/eviction rule — the shingle/postings/LM/quality
-    frame caches (via :func:`mr_python_spark.dedup._keyed_df_cache`)
-    and the bitext sizing cache all route here so the rule can't
-    drift between copies.
+    ``df.unpersist()`` only clears SQL CacheManager entries; a
+    ``localCheckpoint``-pinned frame (the graph fixed points) stores
+    its rows as RDD blocks OUTSIDE the CacheManager, reachable through
+    the checkpointed Dataset's LogicalRDD leaf.  Without releasing that
+    RDD, evicting a regenerated corpus leaked the old label/rank blocks
+    for the application lifetime (r16 ADVICE).  Non-checkpointed frames
+    have no ``rdd()`` accessor on their logical plan — the probe just
+    no-ops for them."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
+    except Exception:
+        pass  # not a LogicalRDD-backed (checkpointed) frame
+    df.unpersist()
+
+
+#: (name, applicationId, table realpath, mtime_ns) → (value, keys of
+#: the entries whose build looked this entry up); see corpus_cache
+_CORPUS: dict[tuple[str, str, str, int], tuple[object, set]] = {}
+#: keys of the corpus_cache builds in progress, innermost last
+_BUILDING: list[tuple[str, str, str, int]] = []
+#: re-entrant: builds nest, and the lock is held across them
+_CORPUS_LOCK = threading.RLock()
+
+
+def corpus_cache(name: str, spark: SparkSession, sf_dir: str, build, *,
+                 table: str = "documents"):
+    """THE cache for values derived from one corpus table.
+
+    One entry per (``name``, application, table realpath, mtime_ns);
+    ``build()`` runs on a miss.  Three rules hold by construction:
+
+    * a lookup made inside another entry's build records that entry as
+      built on this one, and :func:`evict` removes an entry together
+      with everything built on it, transitively;
+    * a lookup that sees a new mtime for a table (a regenerated
+      dataset) evicts every entry built on the table's old identity,
+      with its dependents;
+    * one re-entrant lock guards the store and is held across builds,
+      so concurrent callers of one name build it once.
+
+    An evicted ``DataFrame`` is released through :func:`_evict_frame`;
+    any other value is dropped.
     """
     path = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
-    key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
-    if key not in cache:
-        for stale in [k for k in cache if k[:2] == key[:2]]:
-            val = cache.pop(stale)
-            if on_evict is not None:
-                on_evict(val)
-        cache[key] = build()
-    return cache[key]
+    key = (name, spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
+    with _CORPUS_LOCK:
+        if key not in _CORPUS:
+            _drop([k for k in _CORPUS if k[1:3] == key[1:3] and k[3] != key[3]])
+            _BUILDING.append(key)
+            try:
+                _CORPUS[key] = (build(), set())
+            finally:
+                _BUILDING.pop()
+        value, dependents = _CORPUS[key]
+        if _BUILDING:
+            dependents.add(_BUILDING[-1])
+        return value
+
+
+def evict(*names: str) -> None:
+    """Evict every entry of the named caches (all sessions and file
+    identities) and, transitively, every entry built on them."""
+    with _CORPUS_LOCK:
+        _drop([k for k in _CORPUS if k[0] in names])
+
+
+def _drop(keys) -> None:
+    for key in keys:
+        if key in _CORPUS:
+            value, dependents = _CORPUS.pop(key)
+            if isinstance(value, DataFrame):
+                _evict_frame(value)
+            _drop(dependents)
 
 
 #: (applicationId, id(session), table realpath, mtime_ns) → scan
@@ -281,11 +336,6 @@ def spread(df, min_factor: int = 2, *, parts: int | None = None):
     return df
 
 
-#: (applicationId, table realpath, mtime_ns) → scan partition count;
-#: see :func:`scan_partitions`
-_SCAN_NPART_CACHE: dict = {}
-
-
 def scan_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Partition count of a base-table scan, once per (session, file
     identity) — the :func:`spread` decision input.  Keyed like every
@@ -293,18 +343,13 @@ def scan_partitions(spark: SparkSession, sf_dir: str, table: str) -> int:
     ``spark.sql.files.maxPartitionBytes``), not of any query, and a
     long-lived deployment derives it from table statistics rather than
     re-building an RDD per query call."""
-    return keyed_cache(
-        _SCAN_NPART_CACHE,
+    return corpus_cache(
+        "session.scan_partitions",
         spark,
         sf_dir,
         lambda: load_table(spark, sf_dir, table).rdd.getNumPartitions(),
         table=table,
     )
-
-
-#: (applicationId, table realpath, mtime_ns) → row count;
-#: see :func:`table_count`
-_TABLE_COUNT_CACHE: dict = {}
 
 
 def table_count(spark: SparkSession, sf_dir: str, table: str) -> int:
@@ -314,20 +359,15 @@ def table_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     cluster analogue is catalog statistics (ANALYZE / parquet row-group
     metadata), computed once per dataset — re-running the count job on
     every query build charged ~0.23 s of driver+job time per call at
-    sf0.1.  Same key/eviction rule as every corpus-derived cache, so a
-    regenerated file can never serve a stale count."""
-    return keyed_cache(
-        _TABLE_COUNT_CACHE,
+    sf0.1.  Held by :func:`corpus_cache`, so a regenerated file can
+    never serve a stale count."""
+    return corpus_cache(
+        "session.table_count",
         spark,
         sf_dir,
         lambda: load_table(spark, sf_dir, table).count(),
         table=table,
     )
-
-
-#: (applicationId, table realpath, mtime_ns) → column max;
-#: see :func:`table_max`
-_TABLE_MAX_CACHE: dict = {}
 
 
 def table_max(spark: SparkSession, sf_dir: str, table: str, column: str):
@@ -336,10 +376,10 @@ def table_max(spark: SparkSession, sf_dir: str, table: str, column: str):
     Planning scalar for the CDC/MERGE family (insert-key offset): like
     :func:`table_count`, the cluster analogue is parquet column min/max
     statistics read from footers — not a full aggregate job per query
-    build (~0.25 s of driver+job time per call at sf0.1).  Same
-    key/eviction rule as every corpus-derived cache."""
-    return keyed_cache(
-        _TABLE_MAX_CACHE.setdefault(column, {}),
+    build (~0.25 s of driver+job time per call at sf0.1).  Held by
+    :func:`corpus_cache`."""
+    return corpus_cache(
+        f"session.table_max.{column}",
         spark,
         sf_dir,
         lambda: load_table(spark, sf_dir, table)

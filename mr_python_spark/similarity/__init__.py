@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 from mr_python_spark.functions.vectors import cosine, to_double
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
 
 #: every QUERY_STRIDE-th vector is a query point (deterministic subset)
 QUERY_STRIDE = 25
@@ -372,23 +372,14 @@ def _kmeans_train(X: "np.ndarray", k: int = KM_CELLS) -> "np.ndarray":
     return C
 
 
-#: trained quantizers cached per embeddings-file fingerprint — a
-#: production system trains ONCE and reuses; retraining per query call
-#: charged ~1s of driver work (count + sample collect + Lloyd) to
-#: every repeat invocation
-_TRAINED: dict = {}
-
-
 def _trained_model(spark: SparkSession, sf_dir: str) -> dict:
     """Coarse quantizers (raw + normalized) and PQ codebooks for a
-    dataset, trained once per file fingerprint (size + mtime)."""
-    import os
+    dataset, trained once per embeddings file identity — a production
+    system trains ONCE and reuses; retraining per query call charged
+    ~1s of driver work (count + sample collect + Lloyd) to every
+    repeat invocation."""
 
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(p)
-    key = (p, st.st_size, st.st_mtime_ns)
-    model = _TRAINED.get(key)
-    if model is None:
+    def build() -> dict:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         n = emb.count()
         sample = (
@@ -400,14 +391,14 @@ def _trained_model(spark: SparkSession, sf_dir: str) -> dict:
         X = np.array([r.embedding for r in sample], dtype=np.float64)
         Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
         k = ivf_cells(n)
-        model = {
+        return {
             "n": n,
             "C_raw": _kmeans_train(X, k=k),
             "C_norm": _kmeans_train(Xn, k=k),
             "books": _pq_train(Xn),
         }
-        _TRAINED[key] = model
-    return model
+
+    return corpus_cache("similarity.trained", spark, sf_dir, build, table="embeddings")
 
 
 _CELL_SCHEMA = T.StructType(
@@ -1219,9 +1210,6 @@ BITEXT_SRC_LANG = "zh"
 BITEXT_TGT_LANG = "en"
 #: target rows per grid block (same sizing rule as the cosine grid)
 BITEXT_BLOCK_ROWS = 4096
-#: (applicationId, documents file identity) -> {lang: n_docs} grid-sizing
-#: counts; same keying/eviction rule as the dedup keyed caches
-_BITEXT_SIZING_CACHE: dict[tuple, dict] = {}
 
 _BITEXT_ORACLE = f"""
 WITH j AS (
@@ -1335,10 +1323,8 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shrinks a block), so the sizing job never touches the vectors —
     # and it is cached per (session, file identity) like the trained
     # models, so repeat calls skip the sizing job entirely.
-    from mr_python_spark.session import keyed_cache
-
-    side_n = keyed_cache(
-        _BITEXT_SIZING_CACHE,
+    side_n = corpus_cache(
+        "similarity.bitext_sizing",
         spark,
         sf_dir,
         lambda: dict(langs.groupBy("lang").count().collect()),

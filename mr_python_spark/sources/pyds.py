@@ -71,8 +71,8 @@ class CalendarDataSource(DataSource):
 #: (applicationId, source class name) — a process-global BOOLEAN would
 #: survive a stopped SparkSession and skip re-registration on the next
 #: session in the same Python process, making reads of the custom
-#: format fail with data-source-not-found (same session identity the
-#: _keyed_df_cache uses).
+#: format fail with data-source-not-found (same session identity
+#: :func:`~mr_python_spark.session.corpus_cache` keys on).
 _registered_sources: set = set()
 
 

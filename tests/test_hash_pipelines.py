@@ -476,7 +476,11 @@ def test_hashed_shingle_cache_invalidation(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mr_python_spark.dedup import _HSH_CACHE, hashed_shingle_sets
+    from mr_python_spark import session
+    from mr_python_spark.dedup import hashed_shingle_sets
+
+    def n_entries():
+        return sum(k[0] == "dedup.shingles" for k in session._CORPUS)
 
     def write(texts):
         t = pa.table(
@@ -493,15 +497,15 @@ def test_hashed_shingle_cache_invalidation(spark, tmp_path):
     write(["alpha beta gamma delta"])
     first = hashed_shingle_sets(spark, str(tmp_path)).collect()
     assert len(first[0].sh) == 2  # 4 tokens -> 2 trigrams
-    n_before = len(_HSH_CACHE)
+    n_before = n_entries()
     # same file identity -> same cached frame, no new entry
     hashed_shingle_sets(spark, str(tmp_path))
-    assert len(_HSH_CACHE) == n_before
+    assert n_entries() == n_before
     time.sleep(0.01)  # ensure a distinct mtime_ns
     write(["one two three four five six"])
     second = hashed_shingle_sets(spark, str(tmp_path)).collect()
     assert len(second[0].sh) == 4  # 6 tokens -> 4 trigrams
-    assert len(_HSH_CACHE) == n_before  # stale entry evicted, not leaked
+    assert n_entries() == n_before  # stale entry evicted, not leaked
 
 
 def test_semantic_dedup_matches_numpy(spark):

@@ -48,10 +48,7 @@ QUERIES = ("dedup_ngram_jaccard", "dedup_containment")
 
 
 def main() -> None:
-    from mr_python_spark.dedup import (
-        VERIFY_BROADCAST_MAX_DOCS,
-        _SH_SMALL_N_CACHE,
-    )
+    from mr_python_spark.dedup import VERIFY_BROADCAST_MAX_DOCS, verify_frame_docs
     from mr_python_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -128,15 +125,11 @@ def main() -> None:
         dedup_mod.VERIFY_BROADCAST_MAX_DOCS = saved
 
     # the gate's own measurement for this fixture
-    gate_counts = {
-        os.path.basename(os.path.dirname(k[1])): v
-        for k, v in _SH_SMALL_N_CACHE.items()
+    result["sh_small_counts"] = {
+        os.path.basename(d): verify_frame_docs(spark, d) for d in (SRC, BCAST_DST)
     }
-    result["sh_small_counts"] = gate_counts
-    big = [
-        v for k, v in _SH_SMALL_N_CACHE.items() if "bcast_gate" in k[1]
-    ]
-    result["gate_tripped"] = bool(big and big[0] > VERIFY_BROADCAST_MAX_DOCS)
+    big = result["sh_small_counts"][os.path.basename(BCAST_DST)]
+    result["gate_tripped"] = big > VERIFY_BROADCAST_MAX_DOCS
 
     print(json.dumps(result, indent=2))
     out = os.path.join(REPO, "docs", "broadcast_gate_probe.json")

@@ -30,6 +30,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from mr_python_spark.session import evict  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: name -> dict(must=[...], must_not=[...], hinted_broadcasts=int|None)
@@ -1521,14 +1523,13 @@ AUDITS: dict[str, dict] = {
 
 
 def _lm_scored_builder(spark, sf_dir):
-    # evict the keyed cache first: once any consumer has cached the
+    # evict the cached frame first: once any consumer has cached the
     # scored frame, the CacheManager rewrites every logically-equal
     # plan (this fresh build included) to the InMemoryRelation, hiding
     # the hints this entry exists to police
     from mr_python_spark.functions import lm
 
-    for k in list(lm._LM_SCORED_CACHE):
-        lm._LM_SCORED_CACHE.pop(k).unpersist()
+    evict("lm.scored")
     return lm._lm_scored(spark, sf_dir)
 
 
@@ -1536,8 +1537,7 @@ def _quality_fp_builder(spark, sf_dir):
     # same eviction rule as the LM builder (see above)
     from mr_python_spark.functions import pipeline
 
-    for k in list(pipeline._QUALITY_FP_CACHE):
-        pipeline._QUALITY_FP_CACHE.pop(k).unpersist()
+    evict("pipeline.quality_fp")
     return pipeline._quality_fp(spark, sf_dir)
 
 
@@ -1547,8 +1547,7 @@ def _ml_scored_builder(spark, sf_dir):
     # lm_scored_builder, so this entry isolates the IN-DOMAIN hints
     from mr_python_spark.functions import lm
 
-    for k in list(lm._ML_CACHE):
-        lm._ML_CACHE.pop(k).unpersist()
+    evict("lm.ml_scored")
     return lm._ml_scored(spark, sf_dir)
 
 
@@ -1556,8 +1555,7 @@ def _nb_scored_builder(spark, sf_dir):
     # same eviction rule as the LM builder (see above)
     from mr_python_spark.functions import lm
 
-    for k in list(lm._NB_SCORED_CACHE):
-        lm._NB_SCORED_CACHE.pop(k).unpersist()
+    evict("lm.nb_scored")
     return lm._nb_scored(spark, sf_dir)
 
 
@@ -1565,8 +1563,7 @@ def _langid_dp_builder(spark, sf_dir):
     # same eviction rule as the LM builder (see above)
     from mr_python_spark.functions import text
 
-    for k in list(text._LANGID_DP_CACHE):
-        text._LANGID_DP_CACHE.pop(k).unpersist()
+    evict("text.langid_dp")
     return text._langid_dp(spark, sf_dir)
 
 
@@ -1610,14 +1607,13 @@ def _cc_edges_builder(spark, sf_dir):
 
 
 def _ngram_pairs_builder(spark, sf_dir):
-    # evict the keyed pair cache first (same rule as the LM builder):
+    # evict the cached pair frame first (same rule as the LM builder):
     # once any consumer materialized it, the CacheManager rewrites this
     # logically-equal fresh build to the InMemoryRelation, hiding the
     # verify-join hints this entry polices
     from mr_python_spark import dedup
 
-    for k in list(dedup._NGRAM_PAIRS_CACHE):
-        dedup._evict_frame(dedup._NGRAM_PAIRS_CACHE.pop(k))
+    evict("dedup.ngram_pairs")
     return dedup.dedup_ngram_jaccard(spark, sf_dir)
 
 

@@ -241,8 +241,7 @@ def run() -> None:
     # the warm column above reads their cached leaves, so the loop
     # cost (edge build + iterations to convergence / 3 PR rounds) is
     # timed here with the keyed caches explicitly evicted first.
-    from mr_python_spark import dedup as _dedup
-    from mr_python_spark.operators import graph as _graph
+    from mr_python_spark.session import evict
 
     cold: dict[str, dict[str, float]] = {}
     for sf_name, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
@@ -250,18 +249,17 @@ def run() -> None:
         # evict the fixed point AND its private edge frame (r16 ADVICE:
         # pagerank's bidirected edge cache survived the old eviction,
         # so its "cold" time excluded the edge build while
-        # dedup_clusters' did not — asymmetric artifact).  The shared
-        # UPSTREAM keyed caches (hashed shingles, posting candidates,
+        # dedup_clusters' did not — asymmetric artifact); evicting the
+        # edge frame cascades to the fixed point built on it.  The
+        # shared UPSTREAM caches (hashed shingles, posting candidates,
         # verified pairs) stay warm by design: both cold timings cover
         # the edge construction + iterations over the shared pair
         # machinery, which docs/cold_warm artifacts time separately.
-        for caches, name in (
-            ((_dedup._CLUSTER_LABELS_CACHE,), "dedup_clusters"),
-            ((_graph._PAGERANK_CACHE, _graph._BIDIR_CACHE), "pagerank_dedup_graph"),
+        for root, name in (
+            ("dedup.cluster_labels", "dedup_clusters"),
+            ("graph.bidir", "pagerank_dedup_graph"),
         ):
-            for cache in caches:
-                for k in list(cache):
-                    cache.pop(k)
+            evict(root)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             t_cold[name] = round(time.perf_counter() - t0, 3)

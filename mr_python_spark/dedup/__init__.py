@@ -1,21 +1,37 @@
 """Deduplication family for training-data pipelines.
 
-Five strategies over the ``documents`` / ``embeddings`` tables, each a
-``queries()`` entry:
+The set-similarity strategies split the way a MapReduce set-similarity
+join does: a candidate GENERATOR emits document pairs, and one KERNEL
+verifies them on the full shingle sets.  The generators:
 
-* exact            — hash-groupBy on normalized text (md5)
-* n-gram Jaccard   — 3-shingle inverted-index join, exact similarity
-* MinHash + LSH    — banded signature buckets → candidates → verify
-* SimHash          — 64-bit sign-random-projection, banded hamming
-* embedding cosine — near-dup pairs above a cosine threshold
+* df-capped postings — shingle posting lists with document frequency
+  ≤ ``DF_CAP`` (``dedup_ngram_jaccard``, ``dedup_containment``)
+* MinHash bands      — 16×4 LSH buckets (``dedup_minhash_lsh``) and the
+  batch-probes-corpus-buckets variant (``dedup_incremental_minhash``)
+* exact overlap      — the uncapped shingle self-join
+  (``dedup_ngram_jaccard_exact``, the ``dedup_clusters`` edges, the
+  recall audits' ground truth)
+* winnowed fingerprints — rare-fingerprint postings (``dedup_winnow``)
+
+The kernel is four functions: :func:`posting_lists` groups rows into
+df-capped sorted doc arrays, :func:`posting_pairs` explodes each
+posting's in-posting pairs (doc_a < doc_b), :func:`verify` scores
+candidate pairs by Jaccard or containment and keeps those ≥ τ, and
+:func:`exact_pairs` counts the overlap of every co-shingled pair.  All
+of them read the one cached shingle frame, :func:`hashed_shingle_sets`
+(registry name ``dedup.shingles``).
+
+The other strategies keep their own measures: exact content hash (md5
+groupBy), SimHash (banded Hamming), embedding cosine (block-grid GEMM
+and random-projection LSH), SemDeDup, verbatim spans, CCNet paragraphs
+and the incremental prefix/Bloom probes.
 
 Scale notes (100 TB posture):
 
 * Exact dedup shuffles only (hash, doc_id) — never the text.
-* The shingle inverted index is the candidate generator everywhere,
-  and the DEFAULT posture is df-capped: ``dedup_ngram_jaccard`` only
+* The DEFAULT ngram posture is df-capped: ``dedup_ngram_jaccard`` only
   pairs documents through shingles whose document frequency is ≤
-  ``DF_CAP``, so the self-join costs Σ min(df, cap)² instead of
+  ``DF_CAP``, so the candidate step costs Σ min(df, cap)² instead of
   Σ df² (a boilerplate shingle in millions of documents would make
   the uncapped join quadratic).  The uncapped, lossless variant is
   explicitly named ``dedup_ngram_jaccard_exact`` and is the
@@ -106,14 +122,16 @@ def hashed_shingle_sets(
 ) -> DataFrame:
     """(doc_id, sh: array<long>) — xxhash64'd distinct 3-shingles.
 
-    The ONE shingling pass every text-dedup query shares: ngram
-    candidate generation, ngram/LSH verification, and the minhash
-    signatures all consume this frame, so within a run the corpus is
-    tokenized and shingled once (shingling is the dominant CPU cost of
-    the family), not once per query.  Cached per (Spark application,
-    documents file identity) — a regenerated dataset changes the
-    mtime key and evicts the stale entry.  Custom ``docs`` frames
-    (test corpora) bypass the cache.
+    The ONE shingling pass of the dedup family: the df-capped
+    postings, the MinHash signatures, every verification and the exact
+    overlap tier (``dedup_ngram_jaccard_exact``, the ``dedup_clusters``
+    edges, the recall audits) all read this frame, so within a run the
+    corpus is tokenized and shingled once (shingling is the dominant
+    CPU cost of the family), not once per query.  Cached per (Spark
+    application, documents file identity) — a regenerated dataset
+    changes the mtime key and evicts the stale entry.  Custom ``docs``
+    frames (test corpora, the plan audit's uncached builders) bypass
+    the cache.
     """
     hashed = lambda d: shingle_sets(d).select(  # noqa: E731
         "doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("sh")
@@ -128,30 +146,112 @@ def hashed_shingle_sets(
     )
 
 
-def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(shingle, ds: sorted array<doc_id>) for shingles with document
-    frequency in [2, DF_CAP] — the shared candidate generator of
-    ``dedup_ngram_jaccard`` and ``dedup_containment``.
+def posting_lists(rows: DataFrame, key: str | list[str], cap: int) -> DataFrame:
+    """(key..., ds: sorted array<doc_id>) — the inverted index of
+    ``rows`` (one row per (doc_id, key) value) on the column(s)
+    ``key``, keeping postings of 2..``cap`` documents.
 
-    ONE shuffle groups the inverted index by shingle; kept postings
-    hold ≤ ``DF_CAP`` docs so downstream pair fan-out is bounded at
-    cap²/2 per posting.  Keyed-cached per (application, documents file
-    identity) like :func:`hashed_shingle_sets` — consumers across the
-    family reuse one postings frame instead of each call leaking its
-    own session-lifetime cache entry, and a regenerated dataset evicts
-    the stale entry.
-    """
+    ONE shuffle groups the index; dropping postings over ``cap`` bounds
+    the pair fan-out of :func:`posting_pairs` at cap²/2 per posting
+    (the df-cap / LSH bucket-cap recall trade)."""
+    return (
+        rows.groupBy(key)
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= cap))
+    )
+
+
+def posting_pairs(postings: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) for each pair inside each posting, doc_a < doc_b,
+    exploded JVM-side from the sorted ``ds`` array — no self-join.  A
+    pair that shares k postings appears k times: candidate generators
+    take ``.distinct()``, overlap counters count the rows."""
+    pair = F.explode(
+        F.expr(
+            "flatten(transform(ds, (x, i) ->"
+            " transform(slice(ds, i + 2, size(ds) - i - 1),"
+            " y -> struct(x AS doc_a, y AS doc_b))))"
+        )
+    )
+    return postings.select(pair.alias("p")).select("p.doc_a", "p.doc_b")
+
+
+def verify(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    on: tuple[str, str] = ("doc_a", "doc_b"),
+    measure: str,
+    tau: float,
+) -> DataFrame:
+    """(on[0], on[1], <measure>) for the candidate pairs whose score on
+    the full shingle sets is ≥ ``tau`` — the ONE verification join.
+
+    ``left`` and ``right`` are (doc_id, sh) set frames for the two pair
+    columns named by ``on``.  ``measure`` is ``"jaccard"``
+    (|A∩B| / |A∪B|) or ``"containment"`` (|A∩B| / min(|A|, |B|)); each
+    score is one IEEE division of exact ints, bit-identical to the
+    DuckDB oracles.  Containment divides by the smaller set, so its
+    candidates must hold non-empty sets — as every generator's do: they
+    share a shingle or a MinHash bucket.  Every candidate row yields at
+    most one output row, so the generator owns the pair dedup; the
+    caller owns the broadcast choice (posting-path callers pass
+    :func:`gated_verify_frame`, the LSH paths stay un-hinted)."""
+    a, b = on
+    sa, sb = left.alias("sa"), right.alias("sb")
+    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
+    na, nb = F.size(F.col("sa.sh")), F.size(F.col("sb.sh"))
+    denom = na + nb - inter if measure == "jaccard" else F.least(na, nb)
+    return (
+        cand.join(sa, F.col(a) == F.col("sa.doc_id"))
+        .join(sb, F.col(b) == F.col("sb.doc_id"))
+        .select(a, b, (inter.cast("double") / denom).alias(measure))
+        .filter(F.col(measure) >= tau)
+    )
+
+
+def exact_pairs(sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for EVERY pair of documents that share a
+    shingle, doc_a < doc_b — the lossless overlap tier.
+
+    The exploded sets self-join on the shingle hash and count common
+    shingles per pair; set sizes are ``size(sh)``.  Jaccard is one
+    division of exact ints, bit-identical across engines.  Costs
+    Σ df(shingle)², so it is the small-corpus / evaluation path; the
+    production generators are the capped postings and LSH buckets."""
+    ex = sets.select("doc_id", F.explode("sh").alias("s"))
+    a, b = ex.alias("a"), ex.alias("b")
+    common = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sizes = sets.select("doc_id", F.size("sh").alias("n_sh"))
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    jac = F.col("n_common").cast("double") / (
+        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")
+    )
+    return (
+        common.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+    )
+
+
+def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(shingle, ds) shingle postings with document frequency in
+    [2, DF_CAP] — the shared candidate generator of
+    ``dedup_ngram_jaccard`` and ``dedup_containment``, keyed-cached per
+    (application, documents file identity) like
+    :func:`hashed_shingle_sets`, so the family reuses one postings
+    frame and a regenerated dataset evicts the stale entry."""
 
     def build() -> DataFrame:
         exploded = hashed_shingle_sets(spark, sf_dir).select(
             "doc_id", F.explode("sh").alias("shingle")
         )
-        return (
-            exploded.groupBy("shingle")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-            .filter((F.size("ds") >= 2) & (F.size("ds") <= DF_CAP))
-            .cache()
-        )
+        return posting_lists(exploded, "shingle", DF_CAP).cache()
 
     return corpus_cache("dedup.postings", spark, sf_dir, build)
 
@@ -159,11 +259,9 @@ def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def posting_candidates(
     postings: DataFrame, sh_sets: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """(cand, sh_small): in-posting candidate pairs (doc_a < doc_b,
-    distinct) and the shingle arrays semi-join-pruned to docs that
-    appear in some kept posting.
+    """(cand, sh_small): the distinct in-posting candidate pairs and the
+    shingle sets semi-join-pruned to docs that appear in some posting.
 
-    Pair explosion is JVM-side over each posting's sorted doc array.
     The semi-join prunes verification input BEFORE the pair join —
     never-candidate docs' arrays (the vast majority of a real corpus)
     don't shuffle into verification at all, and the shrunken side lets
@@ -171,19 +269,9 @@ def posting_candidates(
     on the semi-join key: LEFT SEMI dedupes inherently, and the extra
     exchange costs more than the duplicate rows.
     """
-    pair = F.explode(
-        F.expr(
-            """
-            flatten(transform(ds, (x, i) ->
-              transform(slice(ds, i + 2, size(ds) - i - 1), y ->
-                struct(x AS doc_a, y AS doc_b))))
-            """
-        )
-    )
-    cand = postings.select(pair.alias("p")).select("p.doc_a", "p.doc_b").distinct()
+    cand = posting_pairs(postings).distinct()
     need = postings.select(F.explode("ds").alias("doc_id"))
-    sh_small = sh_sets.join(need, "doc_id", "left_semi")
-    return cand, sh_small
+    return cand, sh_sets.join(need, "doc_id", "left_semi")
 
 
 def cached_posting_candidates(
@@ -328,49 +416,6 @@ _NGRAM_ORACLE = (
 )
 
 
-def _ngram_jaccard_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-shingle Jaccard over ALL co-shingled pairs (unordered,
-    unlimited) — the shared producer behind the top-50 exact tier and
-    the agreement audit.  Jaccard = ratio of small exact ints → one
-    identical IEEE division on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    # inverted index: hash shingles to longs (8-byte join key instead of
-    # a ~20-byte string; 64-bit collisions are ~(n_shingles)²/2⁶⁵) and
-    # materialize once — it feeds the join twice plus the size table.
-    sh = (
-        shingle_sets(docs)
-        .select("doc_id", F.explode("sh").alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-        .cache()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-    )
-
-
 @register("dedup_ngram_jaccard_exact", _NGRAM_ORACLE)
 def dedup_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 3-shingle Jaccard: top-50 most similar document pairs.
@@ -381,11 +426,12 @@ def dedup_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles.  The default registry entry ``dedup_ngram_jaccard``
     delegates to the df-capped generator instead; use this variant
     when the corpus is small enough that exactness beats the cap's
-    recall loss.  Jaccard = ratio of small exact ints →
+    recall loss.  The pairs come from :func:`exact_pairs` over the
+    shared shingle frame; Jaccard = ratio of small exact ints →
     bit-identical across engines.
     """
     return (
-        _ngram_jaccard_frame(spark, sf_dir)
+        exact_pairs(hashed_shingle_sets(spark, sf_dir))
         .orderBy(F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b"))
         .limit(50)
     )
@@ -457,16 +503,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through two exchanges.  Past the gate sh_small scales with the
     # corpus and the hint is dropped (AQE shuffled join on doc_id).
     small = gated_verify_frame(spark, sf_dir, sh_small)
-    sa = small.alias("sa")
-    sb = small.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.2)
-    )
+    return verify(cand, small, small, measure="jaccard", tau=0.2)
 
 
 def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,16 +661,6 @@ def dedup_minhash_lsh(
     # signature frame and the shingle frame hit their keyed caches —
     # materializing the table here would force the cache-bypass branch
     # and re-run the 64-min aggregate on every call
-    def build_buckets(bands: DataFrame) -> DataFrame:
-        # buckets feed both the candidate pairs and the candidate-doc
-        # semi-join key (same pruning as the ngram path)
-        return (
-            bands.groupBy("band", "bhash")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-            .filter((F.size("ds") >= 2) & (F.size("ds") <= bucket_cap))
-            .cache()
-        )
-
     if docs is None and bucket_cap == LSH_BUCKET_CAP:
         # registered corpus path: the band frame AND the bucket frame
         # come from keyed caches, so a repeat build costs no driver
@@ -642,45 +669,22 @@ def dedup_minhash_lsh(
             "dedup.lsh_buckets",
             spark,
             sf_dir,
-            lambda: build_buckets(cached_band_frame(spark, sf_dir)),
+            lambda: posting_lists(
+                cached_band_frame(spark, sf_dir), ["band", "bhash"], bucket_cap
+            ).cache(),
         )
     else:
         sig = minhash_signatures(spark, sf_dir, docs=docs)
-        buckets = build_buckets(minhash_band_frame(sig))
-    pair = F.explode(
-        F.expr(
-            """
-            flatten(transform(ds, (x, i) ->
-              transform(slice(ds, i + 2, size(ds) - i - 1), y ->
-                struct(x AS doc_a, y AS doc_b))))
-            """
-        )
+        buckets = posting_lists(minhash_band_frame(sig), ["band", "bhash"], bucket_cap)
+    # buckets feed both the candidate pairs and the candidate-doc
+    # semi-join key (same pruning as the ngram path); verification is
+    # exact Jaccard over the SHARED hashed shingle arrays (identical
+    # intersection counts to string shingles modulo 64-bit collisions —
+    # see dedup_ngram_jaccard's docstring)
+    cand, sh_small = posting_candidates(
+        buckets, hashed_shingle_sets(spark, sf_dir, docs=docs)
     )
-    cand = buckets.select(pair.alias("p")).select("p.doc_a", "p.doc_b").distinct()
-    # exact-Jaccard verification over the SHARED hashed shingle arrays
-    # (identical intersection counts to string shingles modulo 64-bit
-    # collisions — see dedup_ngram_jaccard's docstring), pruned to
-    # docs that appear in some surviving bucket
-    sh_sets = hashed_shingle_sets(spark, sf_dir, docs=docs)
-    if docs is not None:
-        sh_sets = sh_sets.cache()
-    # LEFT SEMI dedupes the key stream itself — no .distinct() exchange
-    need = buckets.select(F.explode("ds").alias("doc_id"))
-    sh_small = sh_sets.join(need, "doc_id", "left_semi")
-    sa = sh_small.alias("sa")
-    sb = sh_small.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    return verify(cand, sh_small, sh_small, measure="jaccard", tau=0.5)
 
 
 _INC_PREFIX_ORACLE = """
@@ -785,15 +789,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     need_old = sh_sets.join(
         corpus_buckets.select(F.explode("ds").alias("doc_id")), "doc_id", "left_semi"
     )
-    sa = need_new.alias("sa")
-    sb = need_old.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
-    return (
-        cand.join(sa, F.col("doc_new") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_old") == F.col("sb.doc_id"))
-        .select("doc_new", "doc_old", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
+    return verify(
+        cand, need_new, need_old, on=("doc_new", "doc_old"), measure="jaccard", tau=0.5
     )
 
 
@@ -865,15 +862,8 @@ def dedup_incremental_minhash_envelope(spark: SparkSession, sf_dir: str) -> Data
         )
         .distinct()
     )
-    sa = sh_sets.alias("sa")
-    sb = sh_sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
-    truth = (
-        cand.join(sa, F.col("doc_new") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_old") == F.col("sb.doc_id"))
-        .select("doc_new", "doc_old", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
+    truth = verify(
+        cand, sh_sets, sh_sets, on=("doc_new", "doc_old"), measure="jaccard", tau=0.5
     )
     found = dedup_incremental_minhash(spark, sf_dir).select(
         "doc_new", "doc_old", F.lit(True).alias("found")
@@ -1460,47 +1450,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_labels(spark, sf_dir).select("doc_id", "cluster_id")
 
 
-def _cc_shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sh) hashed-shingle instance stream of the CC edge
-    build — the exact-jaccard inverted-index input."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        shingle_sets(docs)
-        .select("doc_id", F.explode("sh").alias("shingle"))
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-    )
-
-
-def _cc_edges(sh: DataFrame) -> DataFrame:
-    """Exact jaccard ≥ 0.5 edge set from the shingle stream: posting
-    self-join → common-shingle counts → size join → threshold filter.
-    Extracted so tools/explain_audit.py's ``cc_edges_builder``
-    pseudo-entry audits the uncached plan (the registry query returns
-    the checkpointed labels, a plan-less leaf)."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pair_counts = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        pair_counts.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(
-            F.col("n_common").cast("double")
-            / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common"))
-            >= 0.5
-        )
-        .select("doc_a", "doc_b")
-    )
+def _cc_edges(sets: DataFrame) -> DataFrame:
+    """Exact jaccard ≥ 0.5 edge set over (doc_id, sh) shingle sets — the
+    :func:`exact_pairs` tier, thresholded.  Extracted so
+    tools/explain_audit.py's ``cc_edges_builder`` pseudo-entry audits
+    the uncached plan (the registry query returns the checkpointed
+    labels, a plan-less leaf)."""
+    return exact_pairs(sets).filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
 
 
 def _cc_round(bidir: DataFrame, labels: DataFrame) -> DataFrame:
@@ -1535,10 +1491,10 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged labels, then unpersists every intermediate."""
 
     def build() -> DataFrame:
-        # intra-build caches: the sh frame feeds both the sizes and the
-        # self-join; edges feed both union arms; labels iterate
-        sh = _cc_shingle_stream(spark, sf_dir).cache()
-        edges = _cc_edges(sh).cache()
+        # intra-build caches: edges feed both union arms; labels
+        # iterate.  The shingle sets are the registry's frame, so this
+        # entry is evicted with ``dedup.shingles``.
+        edges = _cc_edges(hashed_shingle_sets(spark, sf_dir)).cache()
         bidir = edges.union(
             edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         ).cache()
@@ -1572,7 +1528,6 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.unpersist()
         bidir.unpersist()
         edges.unpersist()
-        sh.unpersist()
         return final
 
     return corpus_cache("dedup.cluster_labels", spark, sf_dir, build)
@@ -2134,18 +2089,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep the candidate-pair side pipeline-local while the pruned
     # frame is measured small; un-hinted (AQE) past the gate
     small = gated_verify_frame(spark, sf_dir, sh_small)
-    sa = small.alias("sa")
-    sb = small.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    denom = F.least(F.size(F.col("sa.sh")), F.size(F.col("sb.sh")))
-    return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a", "doc_b", (inter.cast("double") / denom).alias("containment")
-        )
-        .filter(F.col("containment") >= CONTAIN_TAU)
-    )
+    return verify(cand, small, small, measure="containment", tau=CONTAIN_TAU)
 
 
 @register("dedup_lsh_eval_report")  # udf-oracle in tools/udf_oracles.py
@@ -2165,24 +2109,8 @@ def dedup_lsh_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flags are exact set membership; the jaccard is one division of
     exact ints — bit-deterministic.
     """
-    sh_sets = hashed_shingle_sets(spark, sf_dir)
-    sh = sh_sets.select("doc_id", F.explode("sh").alias("shingle"))
-    sizes = sh_sets.select("doc_id", F.size("sh").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("n_common").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")
-    )
-    truth = (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
+    truth = exact_pairs(hashed_shingle_sets(spark, sf_dir)).filter(
+        F.col("jaccard") >= 0.5
     )
     found = dedup_minhash_lsh(spark, sf_dir).select(
         "doc_a", "doc_b", F.lit(True).alias("hit")
@@ -2438,22 +2366,9 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("wm").alias("fp"))
         .distinct()
     )
-    posts = (
-        fps.groupBy("fp")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= DF_CAP))
-    )
-    pairs = posts.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) ->"
-                " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                " y -> struct(x AS doc_a, y AS doc_b))))"
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
     return (
-        pairs.groupBy("doc_a", "doc_b")
+        posting_pairs(posting_lists(fps, "fp", DF_CAP))
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared_fps"))
         .filter(F.col("n_shared_fps") >= 2)
     )
@@ -2517,7 +2432,7 @@ def dedup_lexical_semantic_agreement(spark: SparkSession, sf_dir: str) -> DataFr
     capped/LSH variants exist for the production path.
     """
     lex = (
-        _ngram_jaccard_frame(spark, sf_dir)
+        exact_pairs(hashed_shingle_sets(spark, sf_dir))
         .filter(F.col("jaccard") >= 0.2)
         .select(
             F.col("doc_a").alias("a"), F.col("doc_b").alias("b"),

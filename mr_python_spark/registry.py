@@ -24,173 +24,16 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 #: Registration order IS the driver's grading order: the correctness
-#: harness officially records only the first ~50 ``queries()`` entries
-#: (CORRECTNESS_r01.json stopped at 50 of 98).  This explicit priority
-#: list puts one-or-more representatives of EVERY SURVEY.md §2 category
-#: (and every LLM-pipeline family) inside the official window; the
-#: remaining registered queries keep their module order after these.
-#:
-#: Round-8 rotation: 7 long-green entries (a TPC-H composite, the
-#: bucketed join, the cohort rep, a string-scalar rep, the plain CSV
-#: scan, a quadratic-exact dedup, a quality-filter rep — every removed
-#: entry leaves a same-category sibling in-window and stays hash-gated
-#: in the full sweep) swapped for the never-driver-graded r6/r7 queries
-#: so the DRIVER becomes their auditor of record: the real-decode
-#: multimodal path, recursive reach, the ANN recall audit, the Bloom
-#: runtime-filter join, permissive corrupt-CSV ingestion, the
-#: streaming-join-matrix outer rep, and the new core.py secondary-sort
-#: parity gate.  (Round-7 rotation brought in the r5/r6 typed surfaces,
-#: Python Data Source stream+sink, behavioral analytics, and newer
-#: dedup strategies — those stay.)
-#:
-#: Round-11 rotation (judge order #4): THIRTEEN entries that had never
-#: had a CORRECTNESS_r*.json row in rounds 1–10 (computed from the
-#: artifacts) take the slots of thirteen repeatedly-graded entries,
-#: oldest graded first, every swap leaving same-category kin in-window
-#: and every rotated-out entry hash-gated in the full sweep — see the
-#: inline comments below for each pairing.  First-time entries:
-#: q13_customer_distribution, join_salted_skew, window_moving_avg,
-#: setop_except_all, topk_orders, cube_grouping_id,
-#: not_in_subquery_customers, schema_evolution_read,
-#: sink_dynamic_partition_overwrite, tokenizer_bakeoff_envelope,
-#: dedup_winnow, dedup_lexical_semantic_agreement,
-#: pagerank_dedup_graph.
-#:
-#: Round-12 rotation (judge orders #1–2): EIGHTEEN entries that had
-#: never had a CORRECTNESS_r*.json row in rounds 1–11 (recomputed from
-#: the artifacts at r12 start: 94-entry pool) take the slots of
-#: eighteen repeatedly-graded entries, oldest graded first, every swap
-#: leaving same-category kin in-window and every rotated-out entry
-#: hash-gated in the full sweep.  Leading the rotation per the judge:
-#: the CDC family (scd2_event_intervals, cdc_latest_snapshot,
-#: merge_upsert_orders — operators/timeseries.py, the only §2c-adjacent
-#: family with zero driver-graded rows ever) and the two seasoned r11
-#: operators (doremi_domain_weights, dedup_cluster_survivors).  The
-#: swap pairings are inline below; the remaining 76-entry never-graded
-#: pool is listed in docs/ROUND_NOTES.md for the r13 runway.
-#:
-#: Round-10 rotation: the ten round-9 wave-3–6 entries that were green
-#: in both full sweeps but never driver-graded take the window slots
-#: of ten r9-graded entries, each of which leaves same-category kin
-#: in-window and stays hash-gated in the full sweep:
-#: search_bm25_topk → search_phrase_topk (retrieval),
-#: cms_heavy_hitters → streaming_cms_hitters (CMS sketch, now the
-#: live-stream variant), pandas_udf_token_count →
-#: tokenizer_fertility_report (Arrow-encode surface; udtf + udaf keep
-#: the UDF slots), dsir_importance_weights →
-#: mixture_temperature_weights (selection/mixture),
-#: event_transition_matrix → incremental_oov_report (funnel stays as
-#: the behavioral rep), dedup_containment → shard_balance_report
-#: (three dedup reps remain), ann_recall_report →
-#: ann_pq_recall_report (recall-audit slot, PQ variant),
-#: knn_label_eval → hard_negative_mining (blocked-GEMM eval kin),
-#: q6_forecast_revenue → ann_filtered_topk (q1/pipeline_rekey keep
-#: the TPC-H composites), join_bloom_runtime_filter →
-#: vocab_growth_report (three join shapes remain).
+#: harness officially records only the first ~50 ``queries()`` entries.
+#: This explicit priority list puts one-or-more representatives of
+#: EVERY SURVEY.md §2 category (and every LLM-pipeline family) inside
+#: the official window; the remaining registered queries keep their
+#: module order after these.  Why each entry holds its slot (the
+#: round-by-round rotations) is in ``git log -p -- mr_python_spark/registry.py``.
 PRIORITY: list[str] = [
     # §2a parity gates — permanent window anchors
     "parity_word_count",
     "parity_secondary_sort",
-    # --- Round-14 rotation (r13 verdict orders #1/#3): EIGHTEEN swaps.
-    # In: the judge's eleven zero-window-history round-15 operators
-    # (binaryfile_scan, listagg_regions, sql_pipe_syntax,
-    # join_null_safe, cooccurrence_pmi, lang_id_ngram_profile,
-    # search_hybrid_rrf, dedup_ccnet_paragraphs, dedup_incremental_bloom,
-    # negative_sampling_table, multimodal_resize_nearest — the judge's
-    # own 9-query re-run already passed most), the two latent
-    # array-output queries reshaped this round so the driver confirms
-    # the fix (embedding_int8_quantize, map_funcs_events),
-    # nb_calibration_report (rewritten this round — driver confirmation
-    # wanted), and four more never-graded entries
-    # (multimodal_audio_resample, moore_lewis_selection,
-    # attribution_last_touch, try_arith_lineitem).  encode_tokens_to_ids
-    # KEEPS its slot — it is the round's one red row and must be graded
-    # green (order #1).  Out (grade counts from CORRECTNESS_r01–r13;
-    # every leaver has same-category kin in-window and stays hash-gated
-    # in the full sweep): q1_pricing_summary (13×; q8/q12 keep TPC-H),
-    # filter_project_lineitem (13×; try_arith_lineitem is the
-    # projection+predicates kin), pipeline_rekey_bands (12×),
-    # pyds_sink_roundtrip (7×; pyds_calendar_scan + streaming sink keep
-    # the source/sink rows), pipeline_curate_report (7×; four pipeline
-    # passes remain), dedup_cross_source_matrix (5×; four dedup reps
-    # remain), q15/q17 (1×; q8/q12 remain), join_cross_product +
-    # join_right_outer (1×; asof/shuffle-hash/null-safe remain),
-    # window_ntile_distribution (1×; lag_delta/top3 remain),
-    # setop_intersect_all (1×; setop_except remains),
-    # corr_quantity_price + histogram_prices + agg_minmax_by (1×;
-    # approx_quantile/approx_distinct keep stats+envelopes),
-    # streaming_incremental_mv (1×; four streaming reps remain),
-    # pii_scrub_canaries + shuffle_shard_order (1×; split/decontaminate/
-    # encode keep pipeline).
-    # --- Round-15 rotation (r14 verdict orders #3/#4): TWENTY-TWO
-    # swaps.  In: eighteen never-driver-graded SQL-oracled entries from
-    # the docs/ROUND_NOTES.md "Round-17 rotation runway" (all hash-green
-    # in CHECK_FULL_r16 at two SFs) plus the FOUR new SQL-oracled
-    # envelopes built this round for the udf-tier tokenizer families
-    # (bpe_stats/bpe_vocab/unigram_stats/unigram_vocab — the window
-    # policy in docs/COVERAGE.md: udf-tier entries never rotate into the
-    # window, their envelopes do).  Out (grade counts from
-    # CORRECTNESS_r01–r14; every leaver has same-category kin in-window
-    # and stays hash-gated in the full sweep): q12 (2×; q8 + four
-    # incoming TPC-H), join_asof_forward + join_shuffle_hash_hint (2×;
-    # null_safe + inner_basic), streaming_cdc_apply +
-    # streaming_sessions_tws + streaming_join_semi_live (2×; four
-    # incoming streaming reps + parquet sink), setop_except (2×;
-    # union_by_name_evolution), topk_orders (4×; paged_orders_offset),
-    # cube_grouping_id (4×; crosstab_orders), date_arith_orders (2×;
-    # math_funcs + try_arith), approx_quantile_envelope (2×;
-    # approx_distinct + four new envelopes), pyds_calendar_scan (2×;
-    # binaryfile_scan + pyds_stream_sink_roundtrip),
-    # arrow_grouped_map_langstats + grouped_map_top2_sharded (2×;
-    # arrow_python_udf + grouped_map_top2), unimax_language_budgets
-    # (2×; mixture_resample_sources + moore_lewis),
-    # dedup_incremental_prefix (2×; ccnet/bloom/jaccard_exact),
-    # winnow_fingerprint_report (2×; dedup reps remain), text_normalize
-    # (2×; char_diversity_quality), bigram_lm_perplexity (2×;
-    # moore_lewis + nb_calibration), split_train_val_test +
-    # decontaminate_against_eval (2×; encode_tokens_to_ids keeps
-    # pipeline), multimodal_probe_arrow (2×; resize + audio_resample).
-    # --- Round-16 rotation (r15 verdict orders #2/#3): TWENTY-SIX
-    # swaps that CLEAR the SQL-oracled never-driver-graded pool (24
-    # entries, recomputed from CORRECTNESS_r01–r15 — matches the r15
-    # verdict's recount) and seat the two round-16 envelopes built for
-    # the last udf-tier families without SQL-oracled kin
-    # (ann_ivf_kmeans_envelope, dedup_embedding_lsh_envelope).  Every
-    # leaver was graded green in the r15 window (at minimum), keeps
-    # same-category kin in-window, and stays hash-gated in the full
-    # sweep.  Pairings — out → kin that remains:
-    # q16/q19/q20 → q8+q11 (TPC-H composites); join_inner_basic →
-    # join_null_safe; streaming_attribution_live →
-    # attribution_last_touch + three streaming reps;
-    # streaming_join_full_live → streaming_join_live (incoming,
-    # direct join-matrix kin); paged_orders_offset →
-    # zorder_bucket_stats (incoming, ordering/bucketing) +
-    # window_top3 (per-group top-k); crosstab_orders →
-    # transpose_region_metrics + unpivot_daily_values (incoming,
-    # reshaping); math_funcs_lineitem + map_funcs_events →
-    # try_arith_lineitem (scalar/ANSI family); sql_pipe_syntax →
-    # sql_variables_quota (incoming, SQL-surface); listagg_regions →
-    # q8/q11 aggregates + freq_items_envelope;
-    # approx_distinct_envelope → freq_items_envelope (incoming,
-    # sketch-stats envelope); bpe_stats_envelope →
-    # bpe_vocab_envelope (stays); unigram_stats_envelope →
-    # unigram_vocab_envelope (stays); arrow_python_udf →
-    # grouped_map_top2 (UDF surface); mixture_resample_sources →
-    # moore_lewis_selection; negative_sampling_table →
-    # stratified/reservoir sampling (incoming);
-    # dedup_ngram_jaccard_exact → dedup_ccnet + dedup_incremental_bloom
-    # + the dedup envelopes; char_diversity_quality →
-    # dup_ngram_char_fraction (incoming) + quality_token_budget;
-    # cooccurrence_pmi → bigram_fluency (incoming, n-gram analysis);
-    # nb_calibration_report → quality_token_budget +
-    # compression_ratio_envelope (incoming); encode_tokens_to_ids →
-    # chunk_documents + pack_training_batches (incoming, pipeline
-    # passes); embedding_int8_quantize → ann_filtered_topk +
-    # ann_ivf_kmeans_envelope (incoming); multimodal_resize_nearest +
-    # multimodal_audio_resample → multimodal_phash_dedup/near
-    # (incoming).  The two r15 perf-weak entries
-    # (lang_id_ngram_profile, dedup_ccnet_paragraphs) KEEP their slots
-    # so the driver re-grades them after this round's perf work.
     # TPC-H composites
     "q8_market_share",
     "q11_important_stock",
@@ -199,7 +42,7 @@ PRIORITY: list[str] = [
     "join_null_safe",
     # window functions
     "window_top3_per_customer",
-    # streaming (join-matrix rep is the incoming live join)
+    # streaming
     "streaming_join_live",
     "streaming_static_enrich",
     "session_window_dynamic_gap",
@@ -208,7 +51,7 @@ PRIORITY: list[str] = [
     "union_by_name_evolution",
     # sorts / bucketing / file-layout stats
     "zorder_bucket_stats",
-    # reshaping (crosstab's kin: transpose + unpivot)
+    # reshaping
     "transpose_region_metrics",
     "unpivot_daily_values",
     # scalar function families + typed / SQL surfaces

@@ -235,3 +235,24 @@ def test_evict_shingles_cascades_to_verified_pairs(spark):
     assert not _entries("dedup.ngram_pairs")
     after = sorted(tuple(r) for r in dedup.dedup_ngram_jaccard(spark, sf).collect())
     assert after == before
+
+
+def test_dedup_caches_all_go_through_the_registry(spark):
+    """Evicting every registry name leaves the CacheManager empty after
+    the exact tier and ``dedup_minhash_lsh`` on custom docs ran: neither
+    may ``.cache()`` a frame the registry cannot release."""
+    from conftest import SF_DIR as sf
+
+    from mr_python_spark import dedup
+    from mr_python_spark.session import load_table
+
+    def evict_all():
+        evict(*{key[0] for key in session._CORPUS})
+
+    evict_all()
+    spark.catalog.clearCache()
+    dedup.dedup_ngram_jaccard_exact(spark, sf).collect()
+    docs = load_table(spark, sf, "documents")
+    dedup.dedup_minhash_lsh(spark, sf, docs=docs).collect()
+    evict_all()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

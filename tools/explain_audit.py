@@ -1582,13 +1582,22 @@ def _pagerank_round_builder(spark, sf_dir):
     return pagerank_round(edges, verts, rank, 0)
 
 
+def _cc_shingle_sets(spark, sf_dir):
+    # the uncached shingling (docs= bypasses the dedup.shingles cache),
+    # so the audited plan shows the xxhash64 pass, not a cached leaf
+    from mr_python_spark import dedup
+    from mr_python_spark.session import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.hashed_shingle_sets(spark, sf_dir, docs=docs)
+
+
 def _cc_round_builder(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mr_python_spark import dedup
 
-    sh = dedup._cc_shingle_stream(spark, sf_dir)
-    edges = dedup._cc_edges(sh)
+    edges = dedup._cc_edges(_cc_shingle_sets(spark, sf_dir))
     bidir = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -1603,7 +1612,7 @@ def _cc_round_builder(spark, sf_dir):
 def _cc_edges_builder(spark, sf_dir):
     from mr_python_spark import dedup
 
-    return dedup._cc_edges(dedup._cc_shingle_stream(spark, sf_dir))
+    return dedup._cc_edges(_cc_shingle_sets(spark, sf_dir))
 
 
 def _ngram_pairs_builder(spark, sf_dir):

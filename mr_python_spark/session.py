@@ -8,6 +8,7 @@ partitions sized to cores rather than the 200 default.
 
 from __future__ import annotations
 
+import atexit
 import os
 import threading
 
@@ -97,8 +98,20 @@ def get_spark(app_name: str = "mr_python_spark", cpus: int | None = None) -> Spa
         # a task on a 4-core box.  worker_daemon re-reads an archive
         # only when its file identity changes: 0.1-0.2 ms a task.
         .config("spark.python.daemon.module", "mr_python_spark.worker_daemon")
+        # Python workers talk to the JVM over Unix domain sockets, not
+        # loopback TCP.  On TCP a reused worker waits ~40 ms between a
+        # task's command and its first data batch (nothing in Spark's
+        # Python runner sets TCP_NODELAY: Nagle against delayed ACK):
+        # 42-43 ms from a trivial task's first read to its return,
+        # against 1.0-1.1 ms over a Unix socket, on a 4-core box.  The
+        # daemon and the accumulator server bind ``<dir>/.<uuid>.sock``,
+        # <dir> being ``spark.python.unix.domain.socket.dir`` or else
+        # the driver JVM's java.io.tmpdir: the directory plus 43
+        # characters must fit AF_UNIX's 107 bytes.
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
     spark = builder.getOrCreate()
+    _remove_socket_at_exit(spark.sparkContext)
     spark.sparkContext.setLogLevel("WARN")
     # The repo's only unpartitioned windows run over frames bounded by
     # construction (≤ VOCAB_SIZE / ≤ distinct-key rows) — asserted per
@@ -116,6 +129,31 @@ def get_spark(app_name: str = "mr_python_spark", cpus: int | None = None) -> Spa
     except Exception:
         pass  # non-log4j2 runtime: keep the (harmless) warning
     return spark
+
+
+#: accumulator-server socket files already set to be removed at exit
+_SOCKETS: set[str] = set()
+
+
+def _remove_socket_at_exit(sc) -> None:
+    """Remove the accumulator server's socket file when Python exits.
+
+    Only ``SparkContext.stop()`` removes it, so a process that exits
+    without stopping its session (a test run, a script) would leave one
+    empty ``.<uuid>.sock`` file behind.  The daemon's socket needs
+    nothing: the daemon removes it when it shuts down.
+    """
+    path = getattr(sc._accumulatorServer, "server_address", None)  # noqa: SLF001
+    if isinstance(path, str) and path not in _SOCKETS:  # a TCP server's is a tuple
+        _SOCKETS.add(path)
+        atexit.register(_remove_quietly, path)
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:  # stop() removed it already
+        pass
 
 
 def ship_package(spark: SparkSession) -> str:
@@ -159,10 +197,13 @@ def ensure_session(spark: SparkSession) -> None:
     defined in these modules.
 
     It cannot give the session :func:`get_spark`'s worker daemon
-    (``spark.python.daemon.module``): the daemon module is fixed when
+    (``spark.python.daemon.module``) or its Unix domain sockets
+    (``spark.python.unix.domain.socket.enabled``): both are fixed when
     the SparkContext starts.  A foreign session's Python tasks keep
-    pyspark's stock daemon and still re-read the zip archives on every
-    task (see :mod:`mr_python_spark.worker_daemon`).
+    pyspark's stock daemon, so they still re-read the zip archives on
+    every task and collect an unfrozen heap after it (see
+    :mod:`mr_python_spark.worker_daemon`), and they keep loopback TCP
+    sockets with their ~40 ms wait per task (see :func:`get_spark`).
     """
     key = spark.sparkContext.applicationId
     if key in _PREPARED:

@@ -1,28 +1,60 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+Protocol, in one session on the cores ``get_spark`` gives it:
 
-Each query executes its full plan into the no-op sink (no driver
-collect overhead); timings are wall-clock per query, value is the
-total across the headline set.
+1. warm-up, untimed: a full-column scan of each table at ``SF_DIR``,
+   then every ``HEADLINE`` query at sf0.001 and sf0.01.  This pays the
+   one-time machinery (JIT, whole-stage codegen, the Python worker
+   pool, parquet footers, the OS page cache) and nothing of the timed
+   queries' own work at ``SF_DIR``.
+2. per query, in ``HEADLINE`` order: every corpus-registry entry is
+   evicted (outside the timed window), then the query runs once
+   **cold**, building every keyed cache it reads, and three times
+   **warm**, back to back.  Each run executes the full plan into the
+   no-op sink.  A cold number does not depend on which queries ran
+   before it, and no warm number is a read of a cache that another
+   query built.
+
+``docs/bench_detail.json`` gets ``cold_s``, ``warm_min_s`` and
+``warm_median_s`` per query, and no other file in the repository is
+written or staged.  The run prints ONE JSON line of at most 1,900
+characters, every number on it computed from this run's samples:
+
+* ``value``: the warm total, the sum of per-query minimums;
+* ``cold_total``: the sum of the cold runs;
+* ``warm_spread``: sum of per-query medians / ``value`` - 1;
+* ``sf`` and ``cpus`` (the session's default parallelism);
+* ``queries``: per-query warm minimums.  The cheapest entries are left
+  out only while the line is over budget; the totals cover them all.
+
+Run it with ``SPARK_GRAFT_CPUS=4 python bench.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
-
-import pandas as pd
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: the smaller scale factors beside ``SF_DIR``, for the warm-up passes
+WARM_UP_SF_DIRS = tuple(
+    os.path.join(os.path.dirname(SF_DIR.rstrip("/")), sf) for sf in ("sf0.001", "sf0.01")
+)
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "lineitem", "orders", "events", "documents", "embeddings",
+)
+WARM_RUNS = 3
+LINE_BUDGET = 1900
 
-#: queries that represent each capability area, benched in this order
+#: one query per capability area, benched in this order; ``git log -p
+#: bench.py`` tells when and why each one joined
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -48,8 +80,6 @@ HEADLINE = [
     "dedup_incremental_prefix",
     "dedup_incremental_minhash",
     "dedup_embedding_cosine",
-    # the costliest single operator in the repo (round-6 probe: 3.4-4.4s
-    # at sf1) — benched so a regression is visible round-over-round
     "dedup_embedding_lsh",
     "ann_brute_topk",
     "ann_ivf_label",
@@ -61,80 +91,38 @@ HEADLINE = [
     "dedup_exact_substring",
     "dedup_semantic",
     "gopher_quality_rules",
-    # round-9 additions: the BPE subword encode (python-pass-bound) so
-    # tokenizer throughput regressions are visible round-over-round
     "bpe_token_stats",
     "bigram_lm_perplexity",
     "nb_quality_classifier",
-    # round-9 second wave: retrieval (inverted-index probe shape),
-    # hashed-model scoring, and the constant-state sketch
     "search_bm25_topk",
     "dsir_importance_weights",
     "cms_heavy_hitters",
-    # round-9 fourth wave: positional retrieval (in-array, join-free),
-    # near-dup provenance (pair-bounded joins), the per-source
-    # vocabulary table (two word-count-class shuffles), and the CCNet
-    # terciles (cached-LM consumer — benched AFTER the LM entry, so
-    # its timing shows the marginal window cost, not a retrain)
     "search_phrase_topk",
     "dedup_cross_source_matrix",
     "vocab_growth_report",
     "ccnet_perplexity_buckets",
-    # round-9 fifth wave: shard load shares and the trigram-OOV
-    # drift join (distinct-type set below the join)
     "shard_balance_report",
     "incremental_oov_report",
-    # round-9 sixth wave: the cross-sides GEMM grid (the mining cost
-    # envelope) and the ablation curve (cached-LM consumer — benched
-    # after the LM entry, so its timing is the marginal rank+join cost)
     "bitext_margin_mining",
     "quality_ablation_curve",
-    # round-11: the matched-budget tokenizer bake-off (two Arrow
-    # encode passes + the stats join — benched AFTER bpe_token_stats,
-    # so its timing shows the second-encode marginal cost, the models
-    # coming from the shared trained caches)
     "tokenizer_bakeoff_report",
-    # round-12: the CDC family enters the driver window this round and
-    # had never been benched — SCD2 intervalization (one key shuffle +
-    # lead window), latest-snapshot compaction (per-key argmax), and
-    # the full-outer MERGE upsert
     "scd2_event_intervals",
     "cdc_latest_snapshot",
     "merge_upsert_orders",
-    # round-13: the window first-timers with real compute — the
-    # streaming CDC apply (foreachBatch tombstone merge; best-of-3
-    # measures the warm snapshot-reuse path after run 1 builds the
-    # versions, the keyed-cache convention), the UniMax epoch-capped
-    # budget allocation, and the 8-table q8 composite
     "streaming_cdc_apply",
     "unimax_language_budgets",
     "q8_market_share",
-    # round-14: Moore-Lewis contrastive selection (two-model LM
-    # scoring; best-of-3 measures the warm shared-LM-cache path) and
-    # the perceptual-hash image dedup (real PNG + lossless-JPEG
-    # decode through the spread Arrow pass)
     "moore_lewis_selection",
     "multimodal_phash_dedup",
     "multimodal_phash_near",
     "nb_calibration_report",
     "zorder_bucket_stats",
-    # round-15: the block-reconstruction dedup (CCNet paragraph grid —
-    # one Generate + two block-keyed shuffles), the PMI pair explosion
-    # (3 zip_with offsets, word-count-shaped counting), the zlib Arrow
-    # pass (Python-CPU-bound, spread-pinned), and the relational Bloom
-    # probe (int-keyed join chain)
     "dedup_ccnet_paragraphs",
     "cooccurrence_pmi",
     "compression_ratio_quality",
     "dedup_incremental_bloom",
-    # round-15 second wave: the real-decode resize pass and the
-    # Cavnar-Trenkle langid (two partitioned rank windows + the
-    # |langs|-broadcast classify join)
     "multimodal_resize_nearest",
     "lang_id_ngram_profile",
-    # round-16: the window-input join reorder (part filter before the
-    # per-partkey window) — benched so a join-order regression in the
-    # Q2 shape is visible round-over-round; bm25/nb/q5/q8 are above
     "q2_min_cost_supplier",
 ]
 
@@ -147,420 +135,83 @@ def sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def bench_cpus() -> int:
-    """Core count of this bench run — the same resolution rule as
-    session.get_spark, so the pin key always matches the master the
-    queries actually ran under."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+def run_once(spark, qs, name: str, sf_dir: str) -> float:
+    """Wall seconds of one run of ``name`` into the no-op sink."""
+    t0 = time.perf_counter()
+    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
-def pin_path_for(sf: float, cpus: int) -> str:
-    """Stored-pin file for ONE (sf, cpus) configuration.
+def measure(spark, qs, names, sf_dir: str) -> dict[str, dict]:
+    """``{name: {"cold_s": s, "warm_s": [s, s, s]}}``: per query, one
+    cold run after evicting every corpus-registry entry, then the warm
+    runs, back to back."""
+    from mr_python_spark import session
 
-    Round-17 contract fix (r16 verdict order #1): the pin was a single
-    file regardless of core count, so the driver's 8-core scaling
-    probe was answered with the stored 32-core numbers verbatim
-    (BENCH_r16_c8: every ratio exactly 1.0).  A pin may only ever be
-    compared to — or shipped in place of — a run at the SAME (sf,
-    cpus); any other configuration gets its own file and, until one
-    exists, ships its own measurements.  The canonical (sf0.1, 32-core)
-    configuration keeps the historical ``docs/bench_pin.json`` name.
-    """
-    if sf == 0.1 and cpus == 32:
-        return os.path.join(REPO, "docs", "bench_pin.json")
-    return os.path.join(REPO, "docs", f"bench_pin_sf{sf}_c{cpus}.json")
+    samples = {}
+    for name in names:
+        session.evict(*{key[0] for key in session._CORPUS})  # noqa: SLF001
+        cold = run_once(spark, qs, name, sf_dir)
+        warm = [run_once(spark, qs, name, sf_dir) for _ in range(WARM_RUNS)]
+        samples[name] = {"cold_s": cold, "warm_s": warm}
+    return samples
 
 
-def load_pin(path: str, sf: float, cpus: int) -> dict | None:
-    """Load a stored pin, refusing any whose recorded (sf, cpus)
-    disagree with this run.  Legacy pins (written before the cpus key
-    existed) are only trusted for the canonical 32-core configuration
-    they were measured at."""
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        pin = json.load(f)
-    if pin.get("sf") != sf:
-        return None
-    if pin.get("cpus", 32) != cpus:
-        return None
-    return pin
-
-
-def _prev_round_line_queries() -> set:
-    """Query names the latest driver BENCH artifact's parsed line carried.
-
-    These are protected from the printed-line budget trim: omitting a
-    query the previous round's line printed is exactly what the driver
-    records as "dropped_from_bench" (15 artifacts in PERF_r16), while a
-    query that line itself omitted can be re-omitted without reading as
-    a drop.  Only the main per-round artifacts count (BENCH_r<N>.json,
-    not the _c8 scaling probes)."""
-    import glob
-    import re
-
-    best, names = -1, set()
-    for p in glob.glob(os.path.join(REPO, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
-        if not m or int(m.group(1)) <= best:
-            continue
-        try:
-            with open(p) as f:
-                parsed = json.load(f).get("parsed") or {}
-        except Exception:
-            continue
-        if parsed.get("queries"):
-            best, names = int(m.group(1)), set(parsed["queries"])
-    return names
-
-
-def apply_spike_guard(current: dict, pin: dict | None, runs: list[dict]) -> list[str]:
-    """Per-query spike guard (round 16, r15 verdict order #4).
-
-    The suite-level 15% gate accepted r15's pin2 while one query
-    carried a 29x contention burst (q1_pricing_summary 5.27s vs pin1's
-    0.81s).  A quiet SUITE can still have one burst land on one query,
-    so a per-query value only replaces the stored pin's when the two
-    steady in-suite passes agree within 2x for THAT query; otherwise
-    the stored time ships (both columns), flagged in
-    ``current["spike_guarded"]``.  Guarded queries keep their current
-    samples in docs/bench_detail.json for noise diagnosis.  Mutates
-    ``current`` in place and returns the guarded names.
-    """
-    guarded: list[str] = []
-    if pin is None or set(pin["queries"]) != set(current["queries"]):
-        return guarded
-    p2, p3 = runs[1], runs[2]
-    for name in current["queries"]:
-        lo, hi = sorted((p2[name], p3[name]))
-        if lo > 0 and hi / lo > 2.0 and name in pin["queries"]:
-            current["queries"][name] = pin["queries"][name]
-            stored_suite = pin.get("queries_in_suite", {})
-            if name in stored_suite:
-                current["queries_in_suite"][name] = stored_suite[name]
-            guarded.append(name)
-    # Second rule (added after the first r16 pin attempt): a burst can
-    # also land ONLY on the isolated phase — run 1 recorded
-    # tokenizer_bakeoff_report at 13.73s isolated vs 1.41s in-suite in
-    # the SAME run (identical plan, 3 consecutive samples all slow)
-    # while the suite-level gate and rule 1 both passed.  Isolated
-    # best-of-3 runs consecutively on a warm session, so it cannot
-    # honestly exceed the query's own in-suite best by 2x AND >0.5s
-    # absolute; when it does, only contention explains the gap — ship
-    # the smaller of (current, stored) isolated values.  min() rather
-    # than stored-unconditionally so a contaminated STORED value can
-    # never outlive a clean measurement (the exact failure the first
-    # r16 pin stored).
-    for name in current["queries"]:
-        if name in guarded:
-            continue
-        iso = current["queries"][name]
-        suite_best = current["queries_in_suite"].get(name)
-        stored_iso = pin["queries"].get(name)
-        if (
-            suite_best
-            and stored_iso is not None
-            and iso > 2.0 * suite_best
-            and iso - suite_best > 0.5
-            and stored_iso < iso
-        ):
-            current["queries"][name] = stored_iso
-            guarded.append(name)
-    if guarded:
-        current["value"] = round(sum(current["queries_in_suite"].values()), 3)
-        current["value_isolated"] = round(sum(current["queries"].values()), 3)
-        current["spike_guarded"] = guarded
-    return guarded
+def summarize(samples: dict[str, dict], sf: float, cpus: int) -> tuple[dict, str]:
+    """The per-query detail record and the printed line for ``samples``."""
+    mins = {name: min(s["warm_s"]) for name, s in samples.items()}
+    medians = {name: statistics.median(s["warm_s"]) for name, s in samples.items()}
+    detail = {
+        name: {
+            "cold_s": round(s["cold_s"], 3),
+            "warm_min_s": round(mins[name], 3),
+            "warm_median_s": round(medians[name], 3),
+        }
+        for name, s in samples.items()
+    }
+    warm = sum(mins.values())
+    out = {
+        "metric": "headline_queries_total_wall",
+        "value": round(warm, 3),
+        "unit": "sec",
+        "cold_total": round(sum(s["cold_s"] for s in samples.values()), 3),
+        "warm_spread": round(sum(medians.values()) / warm - 1, 3),
+        "sf": sf,
+        "cpus": cpus,
+        "queries": {name: round(m, 2) for name, m in mins.items()},
+    }
+    line = json.dumps(out, separators=(",", ":"))
+    while len(line) > LINE_BUDGET and out["queries"]:
+        del out["queries"][min(out["queries"], key=out["queries"].get)]
+        line = json.dumps(out, separators=(",", ":"))
+    return detail, line
 
 
 def main() -> None:
-    from mr_python_spark.session import get_spark
+    from mr_python_spark.session import get_spark, load_table
 
     import __spark_entry__ as entrymod
 
     spark = get_spark("bench")
     qs = entrymod.queries()
-
-    # Warm the engine's one-time machinery before timing steady state:
-    # JIT/codegen, the vectorized parquet reader, shuffle + broadcast
-    # paths, and the Python (Arrow) worker pool.  None of this is
-    # per-query work — on a long-lived cluster it is paid once.
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    from mr_python_spark.session import load_table
-
-    warm = load_table(spark, "/root/testdata/sf0.001", "nation")
-    warm.groupBy("n_regionkey").count().count()
-    warm.join(F.broadcast(warm.select("n_nationkey")), "n_nationkey").count()
-    # prime the bench tables themselves: parquet footers, the
-    # vectorized reader for every column type, and the OS page cache —
-    # count() reads footers only, so execute a full-column scan into
-    # the no-op sink (a long-lived cluster's scans are never cold)
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "lineitem", "orders", "events", "documents", "embeddings",
-    ):
+    for t in TABLES:
         load_table(spark, SF_DIR, t).write.format("noop").mode("overwrite").save()
-
-    # run the whole headline set once at sf0.001 (untimed): each
-    # query's expression trees — and therefore its whole-stage-codegen
-    # generated classes — are identical across SF dirs, so this primes
-    # the janino compile cache, the JIT, and every operator family's
-    # one-time machinery.  The timed sf0.1 runs then pay only their
-    # own work, which is what a long-lived cluster's steady state
-    # looks like; all sf0.1 execution stays inside the timed window.
-    for warm_sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+    for warm_sf in WARM_UP_SF_DIRS:
         for name in HEADLINE:
-            qs[name](spark, warm_sf).write.format("noop").mode("overwrite").save()
+            run_once(spark, qs, name, warm_sf)
 
-    @pandas_udf("int")
-    def _warm_py(s: pd.Series) -> pd.Series:
-        return s.str.len().astype("int32")
-
-    warm.select(_warm_py(F.col("n_name"))).count()
-    warm.groupBy("n_regionkey").applyInPandas(
-        lambda pdf: pdf.head(1), warm.schema
-    ).count()
-    warm.mapInPandas(lambda it: it, warm.schema).count()
-
-    # One UNTIMED pass at SF_DIR itself: the keyed frame caches
-    # (shingles, postings, minhash signatures, the trained-LM frame)
-    # and one-per-session planning counts (the dedup verify-broadcast
-    # size gate) are keyed per sf_dir, so the other-SF warm passes
-    # above do NOT materialize them — round 9's bench attributed the
-    # shared-cache build to whichever query hit it first and the
-    # headline moved 4x on the same plans (VERDICT r9 finding #3).
-    # A long-lived cluster holds these hot; timing their one-time
-    # build into a random query is attribution noise, not cost.
-    for name in HEADLINE:
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-    # Best-of-3 per query: a single-shot timing is hostage to sandbox
-    # contention (round 4 recorded 67s on code that runs in 28s); the
-    # min of three warm runs is the query's actual cost, the thing a
-    # capacity plan would use — and with the caches pre-built above it
-    # reproduces within ±20% across bench invocations (round-10
-    # protocol).  All runs execute the full plan into the no-op sink;
-    # per-run timings are kept for noise diagnosis.
-    from mr_python_spark.dedup import cached_jaccard_pairs
-    from mr_python_spark.session import evict
-
-    def timed(name: str) -> float:
-        # the materialized verified-pair frame makes Spark's
-        # CacheManager serve dedup_ngram_jaccard as a cache read, so it
-        # is evicted before each timed run (which then pays its verify
-        # join) and rebuilt untimed right after, for its consumers
-        if name == "dedup_ngram_jaccard":
-            evict("dedup.ngram_pairs")
-        t0 = time.time()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        elapsed = time.time() - t0
-        if name == "dedup_ngram_jaccard":
-            cached_jaccard_pairs(spark, SF_DIR).count()
-        return elapsed
-
-    runs: list[dict[str, float]] = []
-    for _ in range(3):
-        runs.append({name: round(timed(name), 3) for name in HEADLINE})
-    in_suite = {name: min(r[name] for r in runs) for name in HEADLINE}
-
-    # ISOLATED best-of-3 (round-13, judge order #4): the in-suite
-    # passes interleave 50+ queries, so a query's three samples sit
-    # minutes apart and inherit whatever JIT/GC/OS drift accumulated in
-    # between — measured ±20% on identical code, 0.4s isolated vs up to
-    # 1.6s in-suite for dedup_ngram_jaccard.  Three CONSECUTIVE runs
-    # per query (the bench_vs_duckdb protocol) pin each query's three
-    # samples to the same instant, so a round-over-round change in THIS
-    # column is a plan/code change, not suite scheduling noise.
-    isolated: dict[str, float] = {}
-    for name in HEADLINE:
-        isolated[name] = round(min(timed(name) for _ in range(3)), 3)
-
-    total = round(sum(in_suite.values()), 3)
-    total_isolated = round(sum(isolated.values()), 3)
-    # The driver parses the FINAL stdout line from a bounded tail
-    # capture, so that line must stay compact: metric + per-query best
-    # times only.  Everything bulky (per-run timings, the stored sf1
-    # scaling probe) goes to docs/bench_detail.json instead — round 5's
-    # official record was lost to a clipped oversized line.
-    detail = {
-        "timing_mode": "best_of_3_after_untimed_sf_warm_pass",
-        "runs": runs,
-        # both per-query columns live HERE: the driver's tail capture
-        # is 2000 chars and two 53-query maps (~3.4 KB) cannot fit the
-        # final line, so the line carries the isolated column + both
-        # totals and this committed file keeps the full pair.
-        "queries_in_suite": in_suite,
-        "queries_isolated": isolated,
-        # explicit alias for the audit trail (r16 verdict order #1):
-        # whatever the printed line ships (pinned / spike-guarded), the
-        # numbers THIS run measured are always here, keyed identically.
-        "current_queries": dict(isolated),
-        "sf": sf_from_dir(SF_DIR),
-        "cpus": bench_cpus(),
+    samples = measure(spark, qs, HEADLINE, SF_DIR)
+    sf, cpus = sf_from_dir(SF_DIR), spark.sparkContext.defaultParallelism
+    detail, line = summarize(samples, sf, cpus)
+    record = {
+        "protocol": f"per query: evict the registry, 1 cold + {WARM_RUNS} warm runs",
+        "sf": sf,
+        "cpus": cpus,
         "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "queries": detail,
     }
-    # Cross-SF scaling evidence (tools/scale_probe.py: synthetic sf1 =
-    # facts x10 with offset keys): a STORED artifact referenced when
-    # present — the file's mtime marks when it was measured; it is NOT
-    # re-measured on every bench run.
-    probe = os.path.join(REPO, "docs", "scale_probe_sf1.json")
-    if os.path.exists(probe):
-        with open(probe) as f:
-            detail["sf1_scaling_probe"] = json.load(f)
-        detail["sf1_scaling_probe"]["recorded_at"] = time.strftime(
-            "%Y-%m-%dT%H:%M:%SZ", time.gmtime(os.path.getmtime(probe))
-        )
-        detail["sf1_scaling_probe"]["note"] = (
-            "stored artifact from tools/scale_probe.py, not re-measured per bench run"
-        )
     with open(os.path.join(REPO, "docs", "bench_detail.json"), "w") as f:
-        json.dump(detail, f, indent=1)
-    # Stage the detail artifact so the end-of-round snapshot commit
-    # carries it instead of trailing one round behind.  Opt-out via
-    # SPARK_GRAFT_NO_STAGE=1 for ad-hoc runs; staging is reported so a
-    # failure (or the mutation itself) is never silent.
-    if not os.environ.get("SPARK_GRAFT_NO_STAGE"):
-        import subprocess
-
-        detail_path = os.path.join(REPO, "docs", "bench_detail.json")
-        res = subprocess.run(
-            ["git", "-C", REPO, "add", detail_path],
-            check=False,
-            capture_output=True,
-            text=True,
-        )
-        if res.returncode == 0:
-            print(f"staged {detail_path}", file=sys.stderr)
-        else:
-            print(
-                f"WARNING: git add {detail_path} failed: {res.stderr.strip()}",
-                file=sys.stderr,
-            )
-    # --- quiet-window pin (round 15, r14 verdict order #1) -----------
-    # BENCH_r14 shipped a contention-spiked isolated pass reading "2x
-    # slower than r13" while paired DuckDB pins showed parity: the
-    # artifact that ships must be a QUIET-window measurement, and a
-    # noisy end-of-round refresh must never overwrite it.  Quietness
-    # gate: the two steady-state in-suite passes (pass 1 carries
-    # residual JIT/GC warm-up by construction) agree within 15% — the
-    # r14 noisy run fails it at 192% (56.3s vs 164.5s pass totals)
-    # while quiet runs measure ~10%.  A quiet run always becomes the
-    # new pin (code may have changed); a noisy run ships the existing
-    # pin unchanged (flagged via pinned=true, with its own totals in
-    # current_run_* for transparency), falling back to its own numbers
-    # only when no same-query-set pin exists yet.
-    cpus = bench_cpus()
-    pin_path = pin_path_for(sf_from_dir(SF_DIR), cpus)
-    t2, t3 = (sum(r.values()) for r in runs[1:])
-    steady_spread = round(abs(t3 - t2) / min(t2, t3), 3)
-    quiet = steady_spread <= 0.15
-    pin = load_pin(pin_path, sf_from_dir(SF_DIR), cpus)
-    current = {
-        "value": total,
-        "value_isolated": total_isolated,
-        "queries": dict(isolated),
-        "queries_in_suite": dict(in_suite),
-        "sf": sf_from_dir(SF_DIR),
-        "cpus": cpus,
-        "steady_pass_spread": steady_spread,
-        "pinned_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    if quiet:
-        apply_spike_guard(current, pin, runs)
-        pin = current
-        with open(pin_path, "w") as f:
-            json.dump(pin, f, indent=1)
-    elif pin is None or set(pin["queries"]) != set(isolated):
-        # no comparable pin (first run ever, or the headline set
-        # changed under a noisy window): ship the current run, flagged
-        # AND write it as the (noisy) stored pin so queries_full_in
-        # never points at a stale or missing file (r15 ADVICE)
-        pin = current
-        pin["noisy_fallback"] = True
-        with open(pin_path, "w") as f:
-            json.dump(pin, f, indent=1)
-    shipped_pin = pin is not current
-    # "value" stays the in-suite total (comparable to BENCH_r≤12, whose
-    # queries column was in-suite best-of-3); the per-query map is the
-    # ISOLATED column from r13 on — the stable one a regression hunt
-    # should read — labeled via queries_col.  In-suite per-query values
-    # are in docs/bench_detail.json#queries_in_suite.
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": pin["value"],
-        "value_isolated": pin["value_isolated"],
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in pin["queries"].items()},
-        "queries_col": "isolated_best_of_3",
-        "sf": pin["sf"],
-        "cpus": cpus,
-        # pin provenance: quiet_window=this run qualified and IS the
-        # pin; pinned=true means a noisy run shipped the stored pin
-        "quiet_window": quiet,
-        "pinned": shipped_pin,
-        "current_run_value": total,
-        "current_run_value_isolated": total_isolated,
-    }
-    if shipped_pin or pin.get("spike_guarded"):
-        # r16 verdict order #1: whenever the line carries any value
-        # this run did not itself measure, name the file it came from;
-        # the run's own per-query numbers are always in
-        # docs/bench_detail.json#current_queries.
-        out["pinned_from"] = os.path.relpath(pin_path, REPO)
-    if pin.get("spike_guarded"):
-        out["spike_guarded"] = pin["spike_guarded"]
-    if pin.get("noisy_fallback"):
-        out["noisy_fallback"] = True
-    # The driver parses the FINAL stdout line from a 2000-char tail
-    # capture: BENCH_r13/r14 both recorded parsed=None because the
-    # 68-query map pushed the line to ~2.2 KB and the head was clipped.
-    # Fitting the budget (r16 verdict order #2 — 15 queries read as
-    # "dropped_from_bench" in PERF_r16) now sheds weight in this order:
-    #   1. optional provenance fields (all mirrored in the committed
-    #      docs/bench_pin.json + docs/bench_detail.json);
-    #   2. cheapest queries that the PREVIOUS round's parsed line did
-    #      not carry either (omitting them cannot read as a drop);
-    #   3. cheapest protected queries (last resort — with the full
-    #      68-query map at ~1.88 KB bare, steps 1-2 normally suffice).
-    # Totals stay exact regardless of what the printed map omits.
-    budget = 1900
-    protected = _prev_round_line_queries()
-    droppable = [
-        "spike_guarded",
-        "current_run_value_isolated",
-        "value_isolated",
-        "queries_col",
-        "quiet_window",
-    ]
-    line = json.dumps(out, separators=(",", ":"))
-    omitted = 0
-    while len(line) > budget:
-        for field in droppable:
-            if field in out:
-                del out[field]
-                break
-        else:
-            if not out["queries"]:
-                break
-            unprotected = [k for k in out["queries"] if k not in protected]
-            pool = unprotected or list(out["queries"])
-            cheapest = min(pool, key=out["queries"].get)
-            del out["queries"][cheapest]
-            omitted += 1
-            out["queries_omitted_cheapest"] = omitted
-            out["queries_full_in"] = os.path.relpath(pin_path, REPO)
-        line = json.dumps(out, separators=(",", ":"))
-    if quiet and not os.environ.get("SPARK_GRAFT_NO_STAGE"):
-        import subprocess
-
-        subprocess.run(
-            ["git", "-C", REPO, "add", pin_path],
-            check=False,
-            capture_output=True,
-            text=True,
-        )
+        json.dump(record, f, indent=1)
     print(line)
 
 

@@ -26,6 +26,15 @@ next task's start was p50 30 ms / p90 49 ms on a 4-core box.  So the
 daemon collects once and calls ``gc.freeze()`` just before
 ``manager()`` forks: the inherited objects move to the permanent
 generation, which no collection visits, and the gap is 0.3 ms.
+
+A reused worker waits for its next task inside ``pyspark.worker.main``.
+When the JVM closes an idle worker's socket, ``main`` reads EOF, tries
+to report that as a task failure on the closed socket, and the flush
+that follows raises ``BrokenPipeError``; with
+``spark.python.daemon.killWorkerOnFlushFailure`` the daemon prints that
+traceback for every idle worker it loses.  The daemon therefore runs
+each worker through :func:`exit_on_eof`, which ends a worker whose
+socket has nothing left to read without writing to it.
 """
 
 from __future__ import annotations
@@ -80,6 +89,25 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
         _reread(self)
 
 
+def exit_on_eof(worker_main):
+    """Wrap pyspark's ``worker_main(infile, outfile)``: at EOF on
+    ``infile`` exit with ``SystemExit(-1)``, writing nothing to
+    ``outfile``; otherwise run ``worker_main``.
+
+    ``peek`` blocks, as ``worker_main``'s first read would, until the
+    next task's first bytes or EOF, and consumes nothing.  pyspark's
+    ``worker()`` turns the exit into code -1, and the forked worker
+    exits without a traceback.
+    """
+
+    def run(infile, outfile):
+        if not infile.peek(1):
+            raise SystemExit(-1)
+        return worker_main(infile, outfile)
+
+    return run
+
+
 if __name__ == "__main__":
     zipimport._read_directory = read_directory  # noqa: SLF001
     zipimport.zipimporter.invalidate_caches = invalidate_caches
@@ -90,8 +118,9 @@ if __name__ == "__main__":
         if isinstance(finder, zipimport.zipimporter):
             finder.invalidate_caches()
 
-    from pyspark.daemon import manager  # imports pyspark.worker too
+    import pyspark.daemon  # imports pyspark.worker too
 
+    pyspark.daemon.worker_main = exit_on_eof(pyspark.daemon.worker_main)
     gc.collect()
     gc.freeze()
-    manager()
+    pyspark.daemon.manager()

@@ -8,11 +8,13 @@ replacements on a zip that does change, and the driver must never have
 them installed.  The daemon also freezes its heap before forking, and
 :func:`~mr_python_spark.session.get_spark` puts the workers on Unix
 domain sockets, whose accumulator socket file must not outlive a
-process that exits without ``stop()``.
+process that exits without ``stop()``.  A worker whose socket the JVM
+closed exits without writing to it.
 """
 
 import gc
 import importlib
+import io
 import os
 import subprocess
 import sys
@@ -20,6 +22,8 @@ import tempfile
 import time
 import zipfile
 import zipimport
+
+import pytest
 
 from mr_python_spark import worker_daemon
 
@@ -122,6 +126,19 @@ def test_exit_without_stop_leaves_no_socket():
         ):
             time.sleep(0.5)
         assert left == []
+
+
+def test_worker_at_eof_exits_without_writing():
+    calls = []
+    run = worker_daemon.exit_on_eof(lambda infile, outfile: calls.append(infile.read()))
+    outfile = io.BytesIO()
+    with pytest.raises(SystemExit) as exc:
+        run(io.BufferedReader(io.BytesIO(b"")), outfile)
+    assert exc.value.code == -1
+    assert calls == [] and outfile.getvalue() == b""
+
+    assert run(io.BufferedReader(io.BytesIO(b"task")), outfile) is None
+    assert calls == [b"task"]  # delegated, with nothing consumed before
 
 
 def test_reread_only_on_changed_identity(tmp_path, monkeypatch):

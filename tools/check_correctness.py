@@ -236,28 +236,6 @@ def main(argv: list[str]) -> int:
         with open(json_path, "w") as f:
             json.dump(payload, f, indent=1)
         print(f"wrote {json_path}")
-        # Stage the artifact so the end-of-round snapshot commit carries
-        # it (rounds 1-10 always committed these one round late because
-        # they were generated AFTER the snapshot).  Only a CLEAN run is
-        # auto-staged — a failing artifact must be committed on purpose
-        # — and staging is reported so a git failure is never silent.
-        if n_fail == 0 and not os.environ.get("SPARK_GRAFT_NO_STAGE"):
-            import subprocess
-
-            res = subprocess.run(
-                ["git", "-C", REPO, "add", os.path.abspath(json_path)],
-                check=False,
-                capture_output=True,
-                text=True,
-            )
-            if res.returncode == 0:
-                print(f"staged {json_path}")
-            else:
-                print(
-                    f"WARNING: git add {json_path} failed: {res.stderr.strip()}"
-                )
-        elif n_fail:
-            print(f"NOT staged ({n_fail} failures) — stage {json_path} manually")
     return 1 if n_fail else 0
 
 

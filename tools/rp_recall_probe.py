@@ -37,7 +37,7 @@ recipe:
    the probe aborts on any disagreement -- before the 256k/512k
    numbers are trusted.
 
-Writes ``docs/rp_recall_probe.json`` and stages it in git.
+Writes ``docs/rp_recall_probe.json``.
 
 Usage::
 
@@ -49,7 +49,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -395,7 +394,6 @@ def main() -> None:
     out = os.path.join(REPO, "docs", "rp_recall_probe.json")
     with open(out, "w") as f:
         json.dump(result, f, indent=2)
-    subprocess.run(["git", "-C", REPO, "add", out], check=False, capture_output=True)
     print(f"wrote {out}", file=sys.stderr)
 
 

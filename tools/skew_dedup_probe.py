@@ -39,14 +39,13 @@ Per fixture the probe records: posting/bucket histograms (kept vs
 cap-dropped counts and doc-mass), candidate-pair counts, and the
 recall of `dedup_ngram_jaccard` (vs truth@0.2) and `dedup_minhash_lsh`
 (vs truth@0.5), with subset sanity (capped output must be a subset of
-truth).  Writes ``docs/skew_dedup_probe.json`` and stages it.
+truth).  Writes ``docs/skew_dedup_probe.json``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -349,7 +348,6 @@ def main() -> None:
     out = os.path.join(REPO, "docs", "skew_dedup_probe.json")
     with open(out, "w") as f:
         json.dump(result, f, indent=2)
-    subprocess.run(["git", "-C", REPO, "add", out], check=False, capture_output=True)
     print(f"wrote {out}", file=sys.stderr)
 
 

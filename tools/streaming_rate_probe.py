@@ -23,7 +23,7 @@ triggerExecution ms, state rows/bytes (total, updated, removed),
 event-time max vs watermark; plus the sustained aggregate rate and
 peak state.  Output validated against expected row counts (the
 multi-batch run must produce exactly what the single-batch gate
-produces).  Writes ``docs/streaming_probe.json`` and stages it.
+produces).  Writes ``docs/streaming_probe.json``.
 
 Local caveat recorded in the artifact: the state store here is the
 HDFS-backed in-memory provider; a production cluster runs RocksDB,
@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 import uuid
@@ -288,7 +287,6 @@ def main() -> None:
     out = os.path.join(REPO, "docs", "streaming_probe.json")
     with open(out, "w") as f:
         json.dump(results, f, indent=2)
-    subprocess.run(["git", "-C", REPO, "add", out], check=False, capture_output=True)
     summary = [
         {
             k: q[k]

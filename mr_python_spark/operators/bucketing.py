@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from mr_python_spark.operators.aggregates import dec_sum_expr
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import load_table, with_conf
 
 _N_BUCKETS = 8
 
@@ -96,35 +96,27 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql.legacy.bucketedTableScan.outputOrdering`` is enabled
     for this plan (off by default since Spark 3 because multi-file
     buckets are only per-file sorted; the single-file layout here is
-    the case the knob exists for).  The conf window pins the physical
-    plan the same way the bloom-filter query does — collect-style
-    actions reuse it.
+    the case the knob exists for).  The frame is bound to a session
+    clone that carries the conf, as the bloom-filter query's is, so
+    every action plans without the sort.
     """
     o_name, l_name = _bucketed_tables(spark, sf_dir)
-    conf_key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    prior = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
-        orders = spark.table(o_name).filter(F.col("o_orderstatus") == "F")
-        li = spark.table(l_name)
-        out = (
-            orders.hint("merge")
-            .join(li, orders.o_orderkey == li.l_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                dec_sum_expr(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                ).alias("revenue"),
-            )
+    orders = spark.table(o_name).filter(F.col("o_orderstatus") == "F")
+    li = spark.table(l_name)
+    out = (
+        orders.hint("merge")
+        .join(li, orders.o_orderkey == li.l_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dec_sum_expr(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue"),
         )
-        out._jdf.queryExecution().executedPlan()
-        return out
-    finally:
-        if prior is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prior)
+    )
+    return with_conf(
+        out, {"spark.sql.legacy.bucketedTableScan.outputOrdering": "true"}
+    )
 
 
 # --- Z-order layout (multi-dimensional clustering) ----------------------

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from mr_python_spark.operators.aggregates import dec_sum, dec_sum_expr
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import load_table, with_conf
 
 
 _Q3_ORACLE = """
@@ -659,54 +659,32 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIG side's scan — lineitem rows whose orderkey can't match are
     dropped BEFORE the shuffle, turning a full-fact shuffle into a
     fraction-of-fact one.  This is the 100 TB lever for star joins
-    too big to broadcast.  The size thresholds are lowered locally
-    (the 10 GB application-side default exists because the filter
-    only pays for itself on huge scans) and restored after planning;
-    the plan audit asserts ``might_contain`` actually landed in the
-    scan, so a silent optimizer regression fails loudly.
+    too big to broadcast.  The size thresholds are lowered for this
+    plan only (the 10 GB application-side default exists because the
+    filter only pays for itself on huge scans): the frame is bound to
+    a session clone that carries them, so every action — collect or
+    write — plans the filter.  The plan audit asserts ``might_contain``
+    actually landed in the scan, so a silent optimizer regression
+    fails loudly.
     """
-    confs = {
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    out = (
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            dec_sum("l_extendedprice").alias("sum_price"),
+        )
+    )
+    return with_conf(out, {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        lineitem = load_table(spark, sf_dir, "lineitem")
-        out = (
-            lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                dec_sum("l_extendedprice").alias("sum_price"),
-            )
-        )
-        # Materialize the physical plan WHILE the confs are set: the
-        # DataFrame is lazy, so without this the restored confs would
-        # silently plan away the bloom filter at action time.  Only
-        # collect-style actions (collect/toPandas — what the driver,
-        # the plan audit, and the oracle gate all use) reuse this
-        # cached QueryExecution; `out.write...` builds a NEW one after
-        # the confs are restored, so write-based timing of this query
-        # would not include the bloom filter.
-        out._jdf.queryExecution().executedPlan()
-        return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    })
 
 
 # --- null-safe equi-join (<=> / IS NOT DISTINCT FROM) -------------------

@@ -16,6 +16,7 @@ import threading
 # keys; set before any worker is forked so every interpreter agrees.
 os.environ.setdefault("PYTHONHASHSEED", "0")
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
@@ -204,6 +205,9 @@ def ensure_session(spark: SparkSession) -> None:
     every task and collect an unfrozen heap after it (see
     :mod:`mr_python_spark.worker_daemon`), and they keep loopback TCP
     sockets with their ~40 ms wait per task (see :func:`get_spark`).
+
+    The confs are set on the session itself, so the clones that
+    :func:`with_conf` makes of it inherit them.
     """
     key = spark.sparkContext.applicationId
     if key in _PREPARED:
@@ -213,6 +217,51 @@ def ensure_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     ship_package(spark)
     _PREPARED.add(key)
+
+
+def bind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``: optimized,
+    planned and run under ``spark``'s conf, whatever session built it."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    )
+    return DataFrame(jdf, spark)
+
+
+#: guards the process-global ``RDD.toDF`` while a clone is wrapped
+_WRAP_LOCK = threading.Lock()
+
+
+def with_conf(df: DataFrame, conf: dict) -> DataFrame:
+    """``df`` bound to a clone of its session that has ``conf`` set.
+
+    A query that needs its own conf (a planner switch, a stream's
+    state-partition count) returns this frame: it carries the conf to
+    whatever action runs it — ``collect``, a write, a stream start —
+    and the caller's session is never written, so queries planned on
+    other threads keep seeing the caller's conf.
+
+    The clone comes from ``cloneSession()``, not ``newSession()``: a
+    new session starts from the SparkContext's conf and drops the
+    runtime confs set on the caller, such as the ones
+    :func:`ensure_session` sets on a foreign session.  A clone keeps
+    them, and the caller's temp views too.  The plan is bound once it
+    is built, never built on the clone: :func:`load_table` keys its
+    scans per session, and a scan loaded on a clone would evict the
+    caller's.
+
+    Both ``cloneSession`` and ``classic.Dataset.ofRows`` are internal
+    JVM API (Spark 4.x classic, not Spark Connect).
+    """
+    clone = df.sparkSession._jsparkSession.cloneSession()  # noqa: SLF001
+    for k, v in conf.items():
+        clone.sessionState().conf().setConfString(k, str(v))
+    with _WRAP_LOCK:
+        # constructing a SparkSession repoints RDD.toDF at it
+        to_df = RDD.toDF
+        session = SparkSession(df.sparkSession.sparkContext, clone)
+        RDD.toDF = to_df
+    return bind(df, session)
 
 
 def _evict_frame(df: DataFrame) -> None:
@@ -297,10 +346,13 @@ def _drop(keys) -> None:
 #: DataFrame.  Building a parquet scan costs ~90 ms of driver time
 #: (footer/schema read), paid by EVERY query build; DataFrames are
 #: immutable, so the scan frame is reusable.  Keyed on the session
-#: OBJECT too (not just applicationId): ``newSession()`` siblings share
-#: an applicationId but resolve temp views / session confs separately,
-#: so a sibling must not be served another session's frames.  Entries
-#: from other/stopped sessions are evicted on insert, bounding the dict.
+#: OBJECT too (not just applicationId): sibling sessions
+#: (``newSession()``, ``cloneSession()``) share an applicationId but
+#: resolve temp views / session confs separately, so a sibling must not
+#: be served another session's frames.  Entries from other/stopped
+#: sessions are evicted on insert, bounding the dict — which is why
+#: :func:`with_conf` binds a finished plan to its clone instead of
+#: loading scans there.
 #:
 #: PINNING INVARIANT (load-bearing for the ``id(session)`` key): every
 #: cached DataFrame holds a strong reference to its SparkSession
@@ -326,10 +378,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached
+    # list() copies the keys atomically, and pop tolerates a key that
+    # a concurrent caller evicted first
     for stale in [
-        k for k in _SCAN_CACHE if k[:2] != sess or (k[2] == path and k != key)
+        k for k in list(_SCAN_CACHE) if k[:2] != sess or (k[2] == path and k != key)
     ]:
-        del _SCAN_CACHE[stale]
+        _SCAN_CACHE.pop(stale, None)
     df = spark.read.parquet(path)
     if name == "events":
         from pyspark.sql import functions as F

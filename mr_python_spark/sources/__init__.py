@@ -328,9 +328,10 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     The incremental-recompute sink shape: a 100 TB table partitioned
     by a key gets one partition's data recomputed (here: the `click`
     partition re-filtered to value > 100) without touching — or even
-    listing — sibling partitions.  ``partitionOverwriteMode=dynamic``
-    scopes the overwrite to partitions the incoming frame contains,
-    vs static mode which would truncate the whole table.  The
+    listing — sibling partitions.  The per-write option
+    ``partitionOverwriteMode=dynamic`` scopes the overwrite to
+    partitions the incoming frame contains, vs static mode (the
+    session default) which would truncate the whole table.  The
     read-back aggregate proves the result is exactly
     (old data - old partition + new partition).
     """
@@ -338,17 +339,13 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
 
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            ev.filter((F.col("event_type") == "click") & (F.col("value") > 100.0))
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    (
+        ev.filter((F.col("event_type") == "click") & (F.col("value") > 100.0))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
 
     return (
         spark.read.parquet(path)

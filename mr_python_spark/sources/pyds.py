@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import bind, load_table, with_conf
 
 
 class _YearPartition(InputPartition):
@@ -226,21 +226,22 @@ def pyds_stream_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so 4 state partitions bound ALL state at any scale — each extra
     # partition is one more near-empty store paying a per-micro-batch
     # commit (this source steps MANY micro-batches); parallelism at
-    # scale comes from the downstream shuffle, not the state store
-    from mr_python_spark.streaming import _scoped_shuffle_partitions
-
-    with _scoped_shuffle_partitions(spark, 4):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
+    # scale comes from the downstream shuffle, not the state store.
+    # The count is set on a session clone the stream starts from (the
+    # caller's conf is never written); the sink's temp view lives in
+    # that clone, so its plan is bound back onto the caller's session.
+    agg = with_conf(agg, {"spark.sql.shuffle.partitions": 4})
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("complete")
+        .start()
+    )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.table(sink)
+    return bind(agg.sparkSession.table(sink), spark)
 
 
 # --- Python data source WRITER (custom sink + commit protocol) --------

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from mr_python_spark.operators.aggregates import dec_sum
 from mr_python_spark.registry import register
-from mr_python_spark.session import load_table
+from mr_python_spark.session import bind, load_table, with_conf
 
 
 def _stage_chunks(stage_dir: str, frames, prefix: str) -> None:
@@ -180,11 +180,8 @@ def staged_events_stream(
 
 
 #: stateful-stream state-partition sizing target: one state partition
-#: per this many SOURCE rows (env-overridable so a deployment sizes it
-#: to steady-state stream volume without patching the module)
-STREAM_STATE_TARGET_ROWS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_ROWS", "12500")
-)
+#: per this many SOURCE rows
+STREAM_STATE_TARGET_ROWS = 12_500
 
 
 def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -214,60 +211,37 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     return max(4, min(par, -(-n // STREAM_STATE_TARGET_ROWS)))
 
 
-class _scoped_shuffle_partitions:
-    """Set ``spark.sql.shuffle.partitions`` around a stream start and
-    restore it afterwards (streams capture the conf at ``.start()``;
-    batch queries built later must see the session default again).
-
-    SINGLE-THREADED BY CONTRACT: this mutates the session-global conf
-    for the duration of the ``start()`` call, so concurrent stream
-    starts — or any batch query planned on another thread inside the
-    window — would race on the value (r16 ADVICE).  The engine's
-    entry points all build queries serially on the driver thread; a
-    deployment that starts streams concurrently must instead give each
-    stream its own ``spark.newSession()`` and set the conf there."""
-
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        if self.n is not None:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
-
-
 def run_to_memory(
     spark: SparkSession,
     df,
     name_prefix: str,
     output_mode: str = "append",
     timeout_s: int = 180,
-    state_partitions: int | None = None,
+    *,
+    state_partitions: int,
 ) -> DataFrame:
     """Run an availableNow stream into a memory sink and return the table.
 
     ``awaitTermination(timeout)`` returns False on timeout — in that
     case the sink holds partial results, so fail loudly instead of
     returning them as if complete.  ``state_partitions`` (see
-    :func:`stream_state_partitions`) scopes the shuffle-partition conf
-    to this stream's start.
+    :func:`stream_state_partitions`) is set as the shuffle-partition
+    conf of a session clone that the stream starts from, so the
+    caller's conf is never written.  The sink's temp view lives in
+    that clone; the returned frame is its plan bound back onto
+    ``spark``, so batch plans built on it see the caller's conf.
     """
     import uuid
 
     sink = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark, state_partitions):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+    df = with_conf(df, {"spark.sql.shuffle.partitions": state_partitions})
+    q = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
     finished = q.awaitTermination(timeout_s)
     if not finished:
         q.stop()
@@ -275,7 +249,7 @@ def run_to_memory(
             f"streaming query {sink} did not finish within {timeout_s}s; "
             "refusing to return a partial memory sink"
         )
-    return spark.table(sink)
+    return bind(df.sparkSession.table(sink), spark)
 
 
 _TUMBLE_ORACLE = """
@@ -585,20 +559,20 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete-mode aggregates can't write to the append-only file
     # sink directly; foreachBatch is the documented bridge — each
     # micro-batch's full result overwrites the target atomically.
-    with _scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, sf_dir)
-    ):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "data")
-                )
+    agg = with_conf(
+        agg, {"spark.sql.shuffle.partitions": stream_state_partitions(spark, sf_dir)}
+    )
+    q = (
+        agg.writeStream.outputMode("complete")
+        .foreachBatch(
+            lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "data")
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     finished = q.awaitTermination(180)
     if not finished:
         q.stop()

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mr_python_spark.registry import register
+from mr_python_spark.session import with_conf
 from mr_python_spark.streaming import (
     run_to_memory,
     staged_events_stream,
@@ -314,37 +315,29 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                     closed, columns=["user_id", "session_start", "n_events"]
                 )
 
-    # transformWithState requires the RocksDB state store provider
-    prior_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    # transformWithState requires the RocksDB state store provider.  It
+    # is set on a session clone that the source stream is bound to, so
+    # every frame built on it — and the stream started from it — carries
+    # the provider while the caller's conf is never written.
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    stream = with_conf(
+        staged_events_stream(spark, sf_dir).select("user_id", "ts"),
+        {"spark.sql.streaming.stateStore.providerClass": rocksdb},
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    sessions = (
+        stream.withWatermark("ts", "2 hours")
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            Sessionizer(),
+            outputStructType=out_schema,
+            outputMode="append",
+            timeMode="eventTime",
+        )
     )
-    try:
-        stream = staged_events_stream(spark, sf_dir).select("user_id", "ts")
-        sessions = (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                Sessionizer(),
-                outputStructType=out_schema,
-                outputMode="append",
-                timeMode="eventTime",
-            )
-        )
-        return run_to_memory(
-            spark, sessions, "stream_sessions_tws",
-            state_partitions=stream_state_partitions(spark, sf_dir),
-        )
-    finally:
-        if prior_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior_provider
-            )
+    return run_to_memory(
+        spark, sessions, "stream_sessions_tws",
+        state_partitions=stream_state_partitions(spark, sf_dir),
+    )
 
 
 def sessions_timeout_frame(stream):

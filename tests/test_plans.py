@@ -81,6 +81,21 @@ def test_plan_properties(spark, entrymod, name):
         assert not bare, f"{name}: fact-fact join before any dim: {bare}"
 
 
+@pytest.mark.parametrize(
+    "name", ["join_bloom_runtime_filter", "join_bucketed_colocated"]
+)
+def test_conf_bound_plan_properties_on_fresh_query_execution(spark, entrymod, name):
+    """A write action plans its frame on a NEW QueryExecution, as
+    ``select("*")`` does; the conf these queries need must still reach
+    that plan, not only the one ``collect`` reuses."""
+    spec = AUDITS[name]
+    plan = formatted_plan(entrymod.queries()[name](spark, SF).select("*"))
+    for pat in spec.get("must", []):
+        assert re.search(pat, plan), f"{name}: missing /{pat}/\n{plan}"
+    for pat in spec.get("must_not", []):
+        assert not re.search(pat, plan), f"{name}: forbidden /{pat}/\n{plan}"
+
+
 def test_bare_fact_fact_detector_fires_on_r13_q5_shape(spark, entrymod):
     """The r13 q5 pathology — lineitem joined to orders BEFORE the
     region dimension filter touched either side — must be flagged by

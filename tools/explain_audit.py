@@ -267,7 +267,7 @@ AUDITS: dict[str, dict] = {
     ),
     # bucketed+sorted layout: co-located scans, NO exchange AND NO
     # sort feeding the merge join (single-file buckets, sortBy order
-    # trusted via the pinned outputOrdering conf)
+    # trusted via the outputOrdering conf the frame carries)
     "join_bucketed_colocated": dict(
         must=[r"Bucketed: true", r"SortMergeJoin"],
         must_not=[r"Exchange hashpartitioning\(o_orderkey",
@@ -795,8 +795,9 @@ AUDITS: dict[str, dict] = {
         hinted_broadcasts=0,
     ),
     # runtime bloom-filter injection must actually land in the big
-    # side's scan (the query pins its plan inside the conf window —
-    # a regression here means the filter silently planned away)
+    # side's scan (the frame carries the filter's confs to every
+    # action — a regression here means the filter silently planned
+    # away)
     "join_bloom_runtime_filter": dict(
         must=[r"might_contain"],
         must_not=[r"CartesianProduct"],

@@ -1,4 +1,4 @@
-"""Sweep SPARK_GRAFT_STREAM_STATE_ROWS at synthetic sf1 (r16 verdict #7).
+"""Sweep STREAM_STATE_TARGET_ROWS at synthetic sf1 (r16 verdict #7).
 
 ``stream_state_partitions`` sizes a stateful stream's state-store
 count to one partition per ``STREAM_STATE_TARGET_ROWS`` source rows,
@@ -9,9 +9,9 @@ streams (too few partitions = one state store per core idle) and not
 over-parallelizing (per-partition commit overhead), by timing two
 representative stateful streams at several target-row settings.
 
-The sweep mutates ``streaming.STREAM_STATE_TARGET_ROWS`` directly (the
-env var is only read at import); each setting's effective partition
-count is recorded beside the wall seconds.  Results land in
+The sweep sets the module constant ``streaming.STREAM_STATE_TARGET_ROWS``
+for each setting and restores it afterwards; each setting's effective
+partition count is recorded beside the wall seconds.  Results land in
 docs/stream_state_sweep_sf1.json and the conclusion goes to SCALE.md.
 
 Usage::

@@ -528,8 +528,8 @@ def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The uncached reference is the ``ngram_pairs_builder`` entry of
     tools/explain_audit.py, which evicts this cache first, as bench.py
     does before each timed ``dedup_ngram_jaccard`` run.  Cold-build
-    vs warm-read cost is recorded per round in docs/cold_warm_r17.json
-    (tools/cold_warm_probe.py)."""
+    vs warm-read cost: ``python tools/probe.py cold_warm`` (the r17
+    record is docs/cold_warm_r17.json)."""
     return corpus_cache(
         "dedup.ngram_pairs",
         spark,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.rdd import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -252,6 +253,38 @@ def run_to_memory(
     return bind(df.sparkSession.table(sink), spark)
 
 
+def run_foreach_batch(stream, func, checkpoint: str, name: str,
+                      output_mode: str = "append") -> None:
+    """Run an availableNow stream to its end, handing each micro-batch
+    to ``func(batch_df, batch_id)``; raise if it does not finish in
+    180 s.
+
+    pyspark wraps every micro-batch in a new ``SparkSession``
+    (``ForeachBatchFunction.call``), and that constructor repoints the
+    process-global ``RDD.toDF`` at the stream's session.  Each batch
+    puts it back where it pointed when the stream started, so a later
+    ``rdd.toDF()`` builds on the session it built on before.
+    """
+    to_df = RDD.toDF
+
+    def call(batch_df, batch_id: int) -> None:
+        try:
+            func(batch_df, batch_id)
+        finally:
+            RDD.toDF = to_df
+
+    q = (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(call)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(180):
+        q.stop()
+        raise RuntimeError(f"{name} did not finish in 180s")
+
+
 _TUMBLE_ORACLE = """
 SELECT
   CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start,
@@ -423,22 +456,24 @@ def streaming_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     worth of events; the join itself shuffles both streams on user_id
     once — the same hash-partitioned shape as the batch equi-join.
     """
-    joined = join_live_frame(
-        lambda: staged_events_stream(spark, sf_dir)
-    )
+    joined = join_live_frame(lambda: staged_events_stream(spark, sf_dir))
     return run_to_memory(
         spark, joined, "stream_join",
         state_partitions=stream_state_partitions(spark, sf_dir),
     )
 
 
-def join_live_frame(make_stream):
-    """The purchases × clicks interval join over two instances of the
-    event stream (``make_stream()`` is called once per side — each
-    side of a stream-stream join needs its own source).  Extracted so
-    the rate/state probe (tools/streaming_rate_probe.py) drives the
+def join_live_frame(make_stream, how: str = "inner"):
+    """The purchases × clicks interval join of type ``how`` over two
+    instances of the event stream (``make_stream()`` is called once per
+    side — each side of a stream-stream join needs its own source).
+    The rate/state probe (tools/streaming_rate_probe.py) drives the
     identical unbounded plan under a rate-limited multi-batch
-    trigger."""
+    trigger.
+
+    Columns: ``event_id, user_id, ts, click_ts``; a semi join keeps the
+    purchase side's three, and a full join names the purchase side's
+    user ``p_user`` and keeps the click side's ``c_user``."""
     clicks = (
         make_stream()
         .filter(F.col("event_type") == "click")
@@ -451,13 +486,20 @@ def join_live_frame(make_stream):
         .select("event_id", "user_id", "ts")
         .withWatermark("ts", "2 hours")
     )
-    return purchases.join(
+    joined = purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user"))
         & (F.col("click_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("click_ts") <= F.col("ts")),
-        "inner",
-    ).select("event_id", "user_id", "ts", "click_ts")
+        how,
+    )
+    if how == "left_semi":
+        return joined
+    if how == "full_outer":
+        return joined.select(
+            "event_id", F.col("user_id").alias("p_user"), "ts", "c_user", "click_ts"
+        )
+    return joined.select("event_id", "user_id", "ts", "click_ts")
 
 
 _SJOIN_SEMI_ORACLE = """
@@ -487,25 +529,7 @@ def streaming_join_semi_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ``streaming_join_live``; output is the deterministic EXISTS
     set, so the batch SQL oracle gates it exactly.
     """
-    clicks = (
-        staged_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        staged_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("ts")),
-        "left_semi",
-    ).select("event_id", "user_id", "ts")
+    joined = join_live_frame(lambda: staged_events_stream(spark, sf_dir), "left_semi")
     return run_to_memory(
         spark, joined, "stream_join_semi",
         state_partitions=stream_state_partitions(spark, sf_dir),
@@ -562,21 +586,13 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = with_conf(
         agg, {"spark.sql.shuffle.partitions": stream_state_partitions(spark, sf_dir)}
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(
-            lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "data")
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        agg,
+        lambda batch_df, _epoch: batch_df.write.mode("overwrite").parquet(
+            os.path.join(out_dir, "data")
+        ),
+        ckpt, "streaming_parquet_sink", output_mode="complete",
     )
-    finished = q.awaitTermination(180)
-    if not finished:
-        q.stop()
-        raise RuntimeError("streaming_parquet_sink did not finish in 180s")
     result = spark.read.parquet(os.path.join(out_dir, "data"))
     rows = result.collect()  # materialize before cleaning the dir
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -677,25 +693,9 @@ def streaming_join_outer_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition is the unmatched-row bookkeeping the state store already
     tracks per join key.
     """
-    clicks = (
-        staged_events_stream(spark, sf_dir, watermark_sentinel=True)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "2 hours")
+    joined = join_live_frame(
+        lambda: staged_events_stream(spark, sf_dir, watermark_sentinel=True), "left_outer"
     )
-    purchases = (
-        staged_events_stream(spark, sf_dir, watermark_sentinel=True)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("ts")),
-        "left_outer",
-    ).select("event_id", "user_id", "ts", "click_ts")
     result = run_to_memory(
         spark, joined, "stream_join_outer",
         state_partitions=stream_state_partitions(spark, sf_dir),
@@ -808,25 +808,9 @@ def streaming_join_full_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized sink — in-plan filters would be pushed below the
     watermark nodes.
     """
-    clicks = (
-        staged_events_stream(spark, sf_dir, watermark_sentinel=True)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "2 hours")
+    joined = join_live_frame(
+        lambda: staged_events_stream(spark, sf_dir, watermark_sentinel=True), "full_outer"
     )
-    purchases = (
-        staged_events_stream(spark, sf_dir, watermark_sentinel=True)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", F.col("user_id").alias("p_user"), "ts")
-        .withWatermark("ts", "2 hours")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("click_ts") <= F.col("ts")),
-        "full_outer",
-    ).select("event_id", "p_user", "ts", "c_user", "click_ts")
     result = run_to_memory(
         spark, joined, "stream_join_full",
         state_partitions=stream_state_partitions(spark, sf_dir),
@@ -914,15 +898,9 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = partial
         merged.write.mode("overwrite").parquet(os.path.join(mv_root, f"v{batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(mv_root, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        stream, merge, os.path.join(mv_root, "_ckpt"), "streaming_incremental_mv"
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise RuntimeError("streaming_incremental_mv did not finish in 180s")
     versions = sorted(
         int(d[1:]) for d in os.listdir(mv_root) if d.startswith("v")
     )
@@ -1262,15 +1240,9 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(os.path.join(snap_root, f"v{batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(snap_root, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        stream, merge, os.path.join(snap_root, "_ckpt"), "streaming_cdc_apply"
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise RuntimeError("streaming_cdc_apply did not finish in 180s")
     versions = sorted(
         int(d[1:]) for d in os.listdir(snap_root) if d.startswith("v") and d != "_ckpt"
     )

@@ -41,6 +41,99 @@ from mr_python_spark.streaming import (
     stream_state_partitions,
 )
 
+#: one row per closed session: the three sessionizers' output
+SESSION_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("session_start", T.LongType()),
+        T.StructField("n_events", T.LongType()),
+    ]
+)
+#: a user's open session: (start_epoch_us, last_epoch_us, n_events)
+OPEN_SESSION_SCHEMA = T.StructType(
+    [
+        T.StructField("start_us", T.LongType()),
+        T.StructField("last_us", T.LongType()),
+        T.StructField("n", T.LongType()),
+    ]
+)
+SESSION_GAP_US = 30 * 60 * 1_000_000
+
+
+def fold_gaps(user_id: int, open_session, chunks):
+    """Fold one user's event times into sessions split at gaps over
+    ``SESSION_GAP_US``, starting from ``open_session`` (a
+    :data:`OPEN_SESSION_SCHEMA` tuple, or None).  Returns the sessions
+    it closed, as :data:`SESSION_SCHEMA` tuples, and the session left
+    open (``n`` = 0 when there is none).
+
+    A key's rows can span several Arrow chunks, and chunks arrive in
+    shuffle order: sorting within each chunk alone would merge
+    out-of-order sessions.  All chunks are gathered, then sorted once.
+    """
+    start_us, last_us, n = open_session if open_session is not None else (-1, -1, 0)
+    closed: list[tuple[int, int, int]] = []
+    ts = [pd.to_datetime(pdf["ts"]).astype("int64") // 1000 for pdf in chunks]
+    for t in pd.concat(ts).sort_values() if ts else ():
+        t = int(t)
+        if n and t - last_us <= SESSION_GAP_US:
+            last_us, n = t, n + 1
+        else:
+            if n:
+                closed.append((user_id, start_us // 1_000_000, n))
+            start_us, last_us, n = t, t, 1
+    return closed, (start_us, last_us, n)
+
+
+def sessions_frame(stream, *, timeout: bool):
+    """Per-user sessions of a raw event stream, via
+    ``applyInPandasWithState``.
+
+    Without ``timeout`` the open sessions are flushed when the batch
+    ends (an availableNow stream ends with its batch).  With it, an
+    open session stays in state and is emitted when the watermark
+    passes its last event + the gap: the production shape, which the
+    rate/state probe (tools/streaming_rate_probe.py) drives under a
+    rate-limited multi-batch trigger.
+    """
+
+    def sessionize(key, pdf_iter, state: GroupState):
+        (user_id,) = key
+        if state.hasTimedOut:
+            # watermark passed last + gap: the session is final
+            start_us, _last_us, n = state.get
+            state.remove()
+            yield pd.DataFrame([(user_id, start_us // 1_000_000, n)],
+                               columns=SESSION_SCHEMA.fieldNames())
+            return
+        closed, open_session = fold_gaps(
+            user_id, state.get if state.exists else None, pdf_iter
+        )
+        start_us, last_us, n = open_session
+        if n and timeout:
+            # timeout timestamps are in millis
+            state.update(open_session)
+            state.setTimeoutTimestamp((last_us + SESSION_GAP_US) // 1000)
+        elif n:
+            closed.append((user_id, start_us // 1_000_000, n))
+            state.remove()
+        if closed:
+            yield pd.DataFrame(closed, columns=SESSION_SCHEMA.fieldNames())
+
+    return (
+        stream.select("user_id", "ts")
+        .withWatermark("ts", "2 hours")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            sessionize,
+            outputStructType=SESSION_SCHEMA,
+            stateStructType=OPEN_SESSION_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout if timeout
+            else GroupStateTimeout.NoTimeout,
+        )
+    )
+
 
 _SLIDE_LIVE_ORACLE = """
 SELECT
@@ -148,73 +241,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     this path supports session logic ``session_window`` can't express
     (e.g. gap depending on event type, max-duration caps).
     """
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    # open-session state: (start_epoch_us, last_epoch_us, n_events)
-    state_schema = T.StructType(
-        [
-            T.StructField("start_us", T.LongType()),
-            T.StructField("last_us", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    gap_us = 30 * 60 * 1_000_000
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = -1
-            n = 0
-        closed: list[tuple[int, int, int]] = []
-        # A key's rows can span multiple Arrow chunks, and chunks
-        # arrive in shuffle order — sorting within each chunk alone
-        # would silently merge out-of-order sessions.  Accumulate ALL
-        # chunks for the key, then sort ONCE before the gap loop.
-        chunks = [
-            pd.to_datetime(pdf["ts"]).astype("int64") // 1000 for pdf in pdf_iter
-        ]
-        ts_all = (
-            pd.concat(chunks).sort_values() if chunks else pd.Series([], dtype="int64")
-        )
-        for t in ts_all:
-            t = int(t)
-            if n == 0:
-                start_us, last_us, n = t, t, 1
-            elif t - last_us <= gap_us:
-                last_us, n = t, n + 1
-            else:
-                closed.append((user_id, start_us // 1_000_000, n))
-                start_us, last_us, n = t, t, 1
-        # availableNow: the stream ends with this batch — flush the
-        # open session.  (Production: keep it in state + set an
-        # event-time timeout instead.)
-        if n > 0:
-            closed.append((user_id, start_us // 1_000_000, n))
-            state.remove()
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_start", "n_events"]
-            )
-
-    stream = staged_events_stream(spark, sf_dir).select("user_id", "ts")
-    sessions = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    sessions = sessions_frame(staged_events_stream(spark, sf_dir), timeout=False)
     return run_to_memory(
         spark, sessions, "stream_sessions",
         state_partitions=stream_state_partitions(spark, sf_dir),
@@ -263,15 +290,6 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    gap_us = 30 * 60 * 1_000_000
-
     class Sessionizer(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             # open-session state: (start_epoch_us, last_epoch_us, n_events)
@@ -282,38 +300,15 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         def handleInputRows(self, key, rows, timerValues):
             (user_id,) = key
             prior = self._open.get() if self._open.exists() else None
-            start_us, last_us, n = prior if prior is not None else (-1, -1, 0)
-            closed: list[tuple[int, int, int]] = []
-            # rows for one key can span Arrow chunks in shuffle order;
-            # accumulate every chunk, then sort once (same contract as
-            # the applyInPandasWithState variant above)
-            chunks = [
-                pd.to_datetime(pdf["ts"]).astype("int64") // 1000 for pdf in rows
-            ]
-            ts_all = (
-                pd.concat(chunks).sort_values()
-                if chunks
-                else pd.Series([], dtype="int64")
-            )
-            for t in ts_all:
-                t = int(t)
-                if n == 0:
-                    start_us, last_us, n = t, t, 1
-                elif t - last_us <= gap_us:
-                    last_us, n = t, n + 1
-                else:
-                    closed.append((user_id, start_us // 1_000_000, n))
-                    start_us, last_us, n = t, t, 1
+            closed, (start_us, _last_us, n) = fold_gaps(user_id, prior, rows)
             # availableNow: the stream ends with this batch — flush the
             # open session.  (Production: keep state + register an
             # event-time timer and emit from handleExpiredTimer.)
-            if n > 0:
+            if n:
                 closed.append((user_id, start_us // 1_000_000, n))
                 self._open.clear()
             if closed:
-                yield pd.DataFrame(
-                    closed, columns=["user_id", "session_start", "n_events"]
-                )
+                yield pd.DataFrame(closed, columns=SESSION_SCHEMA.fieldNames())
 
     # transformWithState requires the RocksDB state store provider.  It
     # is set on a session clone that the source stream is bound to, so
@@ -329,7 +324,7 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .transformWithStateInPandas(
             Sessionizer(),
-            outputStructType=out_schema,
+            outputStructType=SESSION_SCHEMA,
             outputMode="append",
             timeMode="eventTime",
         )
@@ -337,83 +332,6 @@ def streaming_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(
         spark, sessions, "stream_sessions_tws",
         state_partitions=stream_state_partitions(spark, sf_dir),
-    )
-
-
-def sessions_timeout_frame(stream):
-    """The event-time-timeout sessionization over a raw event stream —
-    extracted so the rate/state probe (tools/streaming_rate_probe.py)
-    drives the identical unbounded applyInPandasWithState plan under a
-    rate-limited multi-batch trigger."""
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("start_us", T.LongType()),
-            T.StructField("last_us", T.LongType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    gap_us = 30 * 60 * 1_000_000
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            # watermark passed last + gap: the session is final
-            start_us, _last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(user_id, start_us // 1_000_000, n)],
-                columns=["user_id", "session_start", "n_events"],
-            )
-            return
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = -1
-            n = 0
-        closed: list[tuple[int, int, int]] = []
-        chunks = [
-            pd.to_datetime(pdf["ts"]).astype("int64") // 1000 for pdf in pdf_iter
-        ]
-        ts_all = (
-            pd.concat(chunks).sort_values() if chunks else pd.Series([], dtype="int64")
-        )
-        for t in ts_all:
-            t = int(t)
-            if n == 0:
-                start_us, last_us, n = t, t, 1
-            elif t - last_us <= gap_us:
-                last_us, n = t, n + 1
-            else:
-                closed.append((user_id, start_us // 1_000_000, n))
-                start_us, last_us, n = t, t, 1
-        if n > 0:
-            # keep the open session; it EMITS when the watermark
-            # passes its expiry (timeout timestamp is in millis)
-            state.update((start_us, last_us, n))
-            state.setTimeoutTimestamp((last_us + gap_us) // 1000)
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_start", "n_events"]
-            )
-
-    return (
-        stream.select("user_id", "ts")
-        .withWatermark("ts", "2 hours")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 
@@ -442,7 +360,7 @@ def streaming_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     enforces per key at any scale.
     """
     stream = staged_events_stream(spark, sf_dir, watermark_sentinel=True)
-    sessions = sessions_timeout_frame(stream)
+    sessions = sessions_frame(stream, timeout=True)
     result = run_to_memory(
         spark, sessions, "stream_sessions_to",
         state_partitions=stream_state_partitions(spark, sf_dir),

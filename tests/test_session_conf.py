@@ -4,9 +4,11 @@ serially and from a thread pool on one shared session.
 A query that needs its own conf binds its frame to a session clone
 (``session.with_conf``), so an engine call is safe on a session that
 other threads are planning on.  These tests pin that contract: a static
-guard on the package source, a spy on the caller's ``RuntimeConfig``
-while the conf-bound queries are built and collected, and a threaded
-re-run of those queries (plus three whose plans depend on the session's
+guard on the package, tools and bench source, a check that the
+process-global ``RDD.toDF`` still points where it did after a stream
+or a clone, a spy on the caller's ``RuntimeConfig`` while the
+conf-bound queries are built and collected, and a threaded re-run of
+those queries (plus three whose plans depend on the session's
 broadcast threshold) compared exactly with the serial run.
 """
 
@@ -38,6 +40,8 @@ CONF_BOUND = [
 ]
 #: plans that follow the session's autoBroadcastJoinThreshold
 BROADCAST_DEPENDENT = ["q3_shipping_priority", "q5_local_supplier", "join_left_outer_agg"]
+#: queries that hand their stream's micro-batches to ``foreachBatch``
+FOREACH_BATCH = ["streaming_parquet_sink", "streaming_incremental_mv", "streaming_cdc_apply"]
 #: queries whose result is a memory sink read back onto the caller's session
 MEMORY_SINK = ["streaming_sessions_tws", "streaming_stateful_sessions", "pyds_stream_ticks"]
 
@@ -49,14 +53,21 @@ def _sorted(df):
 
 
 def test_no_conf_writes_outside_session_module():
+    """The package, the tools and the bench write no conf: only
+    ``session.py`` does."""
     pattern = re.compile(r"\.conf\.(set|unset)\(")
+    paths = [
+        *glob.glob(os.path.join(REPO, "mr_python_spark", "**", "*.py"), recursive=True),
+        *glob.glob(os.path.join(REPO, "tools", "**", "*.py"), recursive=True),
+        os.path.join(REPO, "bench.py"),
+    ]
     hits = [
         f"{os.path.relpath(p, REPO)}:{m.group(0)}"
-        for p in glob.glob(os.path.join(REPO, "mr_python_spark", "**", "*.py"),
-                           recursive=True)
+        for p in paths
         if os.path.relpath(p, REPO) != os.path.join("mr_python_spark", "session.py")
         for m in pattern.finditer(open(p, encoding="utf-8").read())
     ]
+    assert len(paths) > 40
     assert hits == []
 
 
@@ -71,6 +82,19 @@ def test_with_conf_leaves_caller_and_rdd_to_df_alone(spark):
     assert dict(spark.conf.getAll) == before
     assert RDD.toDF is to_df
     assert sorted(r.id for r in df.collect()) == [0, 1, 2]
+
+
+@pytest.mark.parametrize("name", FOREACH_BATCH)
+def test_foreach_batch_streams_leave_rdd_to_df_alone(spark, name):
+    """pyspark builds a ``SparkSession`` per micro-batch, which repoints
+    ``RDD.toDF``; the query must point it back."""
+    from pyspark.rdd import RDD
+
+    import __spark_entry__ as entry
+
+    to_df = RDD.toDF
+    entry.queries()[name](spark, SF).collect()
+    assert RDD.toDF is to_df
 
 
 @pytest.fixture(scope="module")

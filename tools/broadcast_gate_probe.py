@@ -8,7 +8,7 @@ the two paths bit-identical with the gate FORCED off, but never ran a
 corpus that actually trips it — this probe does:
 
 * fixture: ``BCAST_REPLICAS`` vocabulary-disjoint replicas of the
-  sf0.1 documents table (the scale_probe generator) → 225k docs, past
+  sf0.1 documents table (``tools.probe.fixture``) → 225k docs, past
   the 200k gate, ~45× the sf0.1 shingle work.
 * trip check: the gate's own counter must report > 200k docs and the
   executed plans must contain NO broadcast on the verification join
@@ -37,12 +37,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.scale_probe import SRC, generate  # noqa: E402
+from tools.probe import SRC, fixture  # noqa: E402
 
-BCAST_DST = os.path.join(REPO, ".data", "bcast_gate")
 #: 45 replicas x 5000 sf0.1 docs = 225k docs > VERIFY_BROADCAST_MAX_DOCS
 BCAST_REPLICAS = 45
-OFFSET = 1_000_000  # the generator's per-replica doc_id offset
+OFFSET = 1_000_000  # the fixture's per-replica doc_id offset
 
 QUERIES = ("dedup_ngram_jaccard", "dedup_containment")
 
@@ -53,9 +52,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    if not os.path.exists(os.path.join(BCAST_DST, "documents.parquet")):
-        generate(dst=BCAST_DST, replicas=BCAST_REPLICAS, tables={"documents"})
-
+    dst = fixture(SRC, BCAST_REPLICAS, ("documents",))
     spark = get_spark("broadcast_gate_probe")
     qs = entrymod.queries()
     result: dict = {
@@ -73,7 +70,7 @@ def main() -> None:
 
     # tripped-scale runs: wall, plan, gate counter, exact set equality
     for name in QUERIES:
-        df = qs[name](spark, BCAST_DST)
+        df = qs[name](spark, dst)
         t0 = time.perf_counter()
         rows = df.collect()
         wall = time.perf_counter() - t0
@@ -107,7 +104,7 @@ def main() -> None:
     import mr_python_spark.dedup as dedup_mod
 
     for name in QUERIES:
-        df = qs[name](spark, BCAST_DST)
+        df = qs[name](spark, dst)
         logical = df._jdf.queryExecution().optimizedPlan().toString()
         result[name]["tripped_logical_broadcast_hints"] = logical.count(
             "strategy=broadcast"
@@ -116,7 +113,7 @@ def main() -> None:
     try:
         dedup_mod.VERIFY_BROADCAST_MAX_DOCS = 10**9
         for name in QUERIES:
-            df = qs[name](spark, BCAST_DST)
+            df = qs[name](spark, dst)
             logical = df._jdf.queryExecution().optimizedPlan().toString()
             result[name]["forced_logical_broadcast_hints"] = logical.count(
                 "strategy=broadcast"
@@ -126,9 +123,9 @@ def main() -> None:
 
     # the gate's own measurement for this fixture
     result["sh_small_counts"] = {
-        os.path.basename(d): verify_frame_docs(spark, d) for d in (SRC, BCAST_DST)
+        os.path.basename(d): verify_frame_docs(spark, d) for d in (SRC, dst)
     }
-    big = result["sh_small_counts"][os.path.basename(BCAST_DST)]
+    big = result["sh_small_counts"][os.path.basename(dst)]
     result["gate_tripped"] = big > VERIFY_BROADCAST_MAX_DOCS
 
     print(json.dumps(result, indent=2))

@@ -1862,7 +1862,7 @@ def main(argv: list[str]) -> int:
     verbose = "-v" in argv
     names = [a for a in argv if not a.startswith("-")] or sorted(AUDITS)
 
-    from mr_python_spark.session import get_spark
+    from mr_python_spark.session import get_spark, with_conf
 
     import __spark_entry__ as entrymod
 
@@ -1906,36 +1906,33 @@ def main(argv: list[str]) -> int:
         if expected_hints is not None:
             # disable stats-based broadcasting: any BroadcastExchange
             # left is a forced hint.  Must equal the constant-dim count.
-            prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                nostats_df = fn(spark, SF_DIR)
-                got = count_broadcast_exchanges(nostats_df)
-                # default-deny: any hint-forced broadcast whose build
-                # subtree reaches a fact scan unbounded (no limit / no
-                # aggregate between) is a 100 TB OOM — never allowed
-                # unless the spec EXPLICITLY accepts it (only the
-                # null-aware anti join, which Spark cannot shuffle)
-                accepted = spec.get("accepted_fact_builds", [])
-                fact_builds = [
-                    t
-                    for t in broadcast_fact_builds(nostats_df)
-                    if t not in accepted
-                ]
-                if fact_builds:
+            nostats_df = with_conf(
+                fn(spark, SF_DIR), {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+            )
+            got = count_broadcast_exchanges(nostats_df)
+            # default-deny: any hint-forced broadcast whose build
+            # subtree reaches a fact scan unbounded (no limit / no
+            # aggregate between) is a 100 TB OOM — never allowed
+            # unless the spec EXPLICITLY accepts it (only the
+            # null-aware anti join, which Spark cannot shuffle)
+            accepted = spec.get("accepted_fact_builds", [])
+            fact_builds = [
+                t
+                for t in broadcast_fact_builds(nostats_df)
+                if t not in accepted
+            ]
+            if fact_builds:
+                problems.append(
+                    "forced broadcast of unbounded fact table(s): "
+                    f"{fact_builds}"
+                )
+            if spec.get("selective_dim_first"):
+                bare = bare_fact_fact_joins(nostats_df)
+                if bare:
                     problems.append(
-                        "forced broadcast of unbounded fact table(s): "
-                        f"{fact_builds}"
+                        "fact⋈fact join before any dim applied "
+                        f"(nostats plan): {bare}"
                     )
-                if spec.get("selective_dim_first"):
-                    bare = bare_fact_fact_joins(nostats_df)
-                    if bare:
-                        problems.append(
-                            "fact⋈fact join before any dim applied "
-                            f"(nostats plan): {bare}"
-                        )
-            finally:
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
             if got != expected_hints:
                 problems.append(
                     f"hinted broadcasts: expected {expected_hints}, got {got} "

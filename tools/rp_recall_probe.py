@@ -1,11 +1,13 @@
 """Sampled-truth RP-LSH recall at n = 256k-512k (round-11 order #1).
 
-The committed recall curve (docs/scale_probe_sf3.json) measures the
-masked sub-band multi-probe design against FULL exact ground truth up
-to n = 64k; the design's new claims live at n = 256k-512k, where the
-128-band cap engages (b = 14) and exact truth is O(n^2)-unaffordable.
-This probe measures recall there with the judge's sampled-truth
-recipe:
+Up to n = 64k the masked sub-band multi-probe design is measured
+against FULL exact ground truth: :func:`exact_point` aggregates
+``dedup_rp_lsh_eval_report`` (exact block-grid truth) at the source
+(n = 2k) and its 4x/16x/32x rotation replicas (``tools.probe.fixture``;
+n = 8k, 32k, 64k), the ``exact_curve`` of the record.  The design's
+new claims live at n = 256k-512k, where the 128-band cap engages
+(b = 14) and exact truth is O(n^2)-unaffordable.  This probe measures
+recall there with the judge's sampled-truth recipe:
 
 1. **Fixtures** past the 64-rotation isometry budget: replica i is a
    left-rotation by ``i % 64`` composed with a Walsh sign pattern
@@ -14,7 +16,7 @@ recipe:
    <Dx, Dy> = <x, y>, so every replica stays EXACTLY isometric to the
    base corpus (within-replica near-dup structure preserved) while
    cross-replica similarities decorrelate -- the same design intent as
-   scale_probe's rotation replicas.
+   the rotation replicas of ``tools.probe.fixture``.
 2. **Sampled truth**: the vectors with base id in ``Q_ORIG`` in EVERY
    replica form the query sample; each query is brute-forced against
    the FULL corpus in one Arrow-batched pass (batch GEMM against the
@@ -31,7 +33,7 @@ recipe:
    Hamming 1 -> exactly the bucket whose mask is the differing bit;
    Hamming >= 2 -> none).  A pair is retrieved iff one of its keys
    lands in a bucket with 2 <= m <= RP_BUCKET_CAP members.
-4. **Validation**: at n = 64k (fixture rp_x32, where the full
+4. **Validation**: at n = 64k (the 32x fixture, where the full
    operator is affordable) the decision procedure is compared
    PAIR-FOR-PAIR against actually running ``dedup_embedding_lsh`` --
    the probe aborts on any disagreement -- before the 256k/512k
@@ -41,8 +43,8 @@ Writes ``docs/rp_recall_probe.json``.
 
 Usage::
 
-    python tools/rp_recall_probe.py              # validate + both points
-    python tools/rp_recall_probe.py --skip-512k  # faster: 64k val + 256k
+    python tools/rp_recall_probe.py              # exact curve, validate, both points
+    python tools/rp_recall_probe.py --skip-512k  # faster: without n = 512k
 """
 
 from __future__ import annotations
@@ -55,14 +57,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from tools.probe import SRC, fixture  # noqa: E402
+
 COS_T = 0.4  # the operator's verify threshold
 COS_DESIGN = 0.45  # the design cosine the band count is sized for
 Q_ORIG = (0, 1)  # base vec_ids sampled as queries in every replica
 
+#: replica counts of the exact-truth points (n = 2000 x replicas); the
+#: sampled decision is validated on the last
+EXACT_POINTS = (1, 4, 16, 32)
 #: fixture label -> replica count (n = 2000 x replicas)
 BIG_POINTS = {"rp_big_x128": 128, "rp_big_x256": 256}
-VALIDATE_FIXTURE = os.path.join(REPO, ".data", "rp_x32")  # n = 64k
 
 
 def generate_big(dst: str, replicas: int) -> None:
@@ -82,7 +87,7 @@ def generate_big(dst: str, replicas: int) -> None:
     out_ids, out_vecs, out_labels = [], [], []
     dims = np.arange(d)
     for i in range(replicas):
-        rot = np.roll(mat, -(i % 64), axis=1)  # left-rotate, scale_probe's map
+        rot = np.roll(mat, -(i % 64), axis=1)  # left-rotate, as tools.probe.fixture
         k = i // 64
         if k:
             sign = np.where((dims >> (k - 1)) & 1, -1.0, 1.0)
@@ -293,7 +298,42 @@ def measure_point(spark, label: str, sf_dir: str) -> dict:
     }
 
 
-def validate_against_operator(spark) -> dict:
+def exact_point(spark, sf_dir: str) -> dict:
+    """Recall against FULL exact ground truth, from
+    ``dedup_rp_lsh_eval_report``'s per-true-pair found flags."""
+    from pyspark.sql import functions as F
+
+    from mr_python_spark.dedup import (
+        dedup_rp_lsh_eval_report,
+        rp_bits_per_band,
+        rp_num_bands,
+    )
+
+    n = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).count()
+    design, found = F.col("cosine") >= COS_DESIGN, F.col("found_by_rp_lsh")
+    t0 = time.perf_counter()
+    agg = dedup_rp_lsh_eval_report(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("t"),
+        F.sum(found.cast("long")).alias("f"),
+        F.sum(design.cast("long")).alias("td"),
+        F.sum((design & found).cast("long")).alias("fd"),
+    ).collect()[0]
+    bits = rp_bits_per_band(n)
+    return {
+        "fixture": os.path.basename(sf_dir.rstrip("/")),
+        "n_vectors": n,
+        "bits_per_band": bits,
+        "n_bands": rp_num_bands(bits),
+        "true_pairs": agg["t"],
+        "found": agg["f"],
+        "recall": round(agg["f"] / max(agg["t"], 1), 3),
+        "true_pairs_cos045": agg["td"],
+        "recall_cos045": round(agg["fd"] / max(agg["td"], 1), 3),
+        "eval_wall_sec": round(time.perf_counter() - t0, 1),
+    }
+
+
+def validate_against_operator(spark, sf_dir: str) -> dict:
     """At n = 64k, the decision procedure must agree PAIR-FOR-PAIR with
     actually running dedup_embedding_lsh on the sampled true pairs."""
     from pyspark.sql import functions as F
@@ -307,7 +347,6 @@ def validate_against_operator(spark) -> dict:
     )
     from mr_python_spark.session import load_table, spread
 
-    sf_dir = VALIDATE_FIXTURE
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
     bits = rp_bits_per_band(n)
@@ -344,7 +383,7 @@ def validate_against_operator(spark) -> dict:
     pairs.unpersist()
     ok = only_probe == 0 and only_real == 0
     report = {
-        "fixture": "rp_x32",
+        "fixture": os.path.basename(sf_dir),
         "n_vectors": n,
         "sampled_true_pairs": n_pairs,
         "probe_found": n_found,
@@ -361,10 +400,7 @@ def validate_against_operator(spark) -> dict:
 def main() -> None:
     from mr_python_spark.session import get_spark
 
-    from tools.scale_probe import generate
-
-    if not os.path.exists(os.path.join(VALIDATE_FIXTURE, "embeddings.parquet")):
-        generate(dst=VALIDATE_FIXTURE, replicas=32, tables={"embeddings"})
+    exact = [SRC if r == 1 else fixture(SRC, r, ("embeddings",)) for r in EXACT_POINTS]
     skip_512k = "--skip-512k" in sys.argv
     for label, reps in BIG_POINTS.items():
         if skip_512k and reps == 256:
@@ -380,9 +416,11 @@ def main() -> None:
             "operator's canonical emission rule; decision validated "
             "pair-for-pair vs dedup_embedding_lsh at n=64k" % (Q_ORIG, COS_T)
         ),
-        "validation": validate_against_operator(spark),
+        "exact_curve": [exact_point(spark, d) for d in exact],
+        "validation": validate_against_operator(spark, exact[-1]),
         "points": [],
     }
+    print(json.dumps(result["exact_curve"], indent=2))
     print(json.dumps(result["validation"], indent=2))
     for label, reps in BIG_POINTS.items():
         if skip_512k and reps == 256:

@@ -52,8 +52,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF1_DOCS = os.path.join(REPO, ".data", "sf1", "documents.parquet")
-
 BOILER3 = "terms of service"
 BOILER24 = (
     "this document is provided under the standard license terms all "
@@ -63,7 +61,7 @@ BOILER24 = (
 FIXTURES = {"boiler3": BOILER3, "boiler24": BOILER24}
 
 
-def generate(label: str, boiler: str) -> str:
+def generate(label: str, boiler: str, sf1: str) -> str:
     dst = os.path.join(REPO, ".data", f"skew_{label}")
     out = os.path.join(dst, "documents.parquet")
     if os.path.exists(out):
@@ -73,7 +71,7 @@ def generate(label: str, boiler: str) -> str:
     import pyarrow.parquet as pq
 
     os.makedirs(dst, exist_ok=True)
-    t = pq.read_table(SF1_DOCS)
+    t = pq.read_table(os.path.join(sf1, "documents.parquet"))
     text = pc.binary_join_element_wise(
         pa.array([boiler] * t.num_rows), t.column("text").combine_chunks(), " "
     )
@@ -327,18 +325,13 @@ def probe_fixture(spark, label: str, sf_dir: str, n_boiler_words: int) -> dict:
 
 def main() -> None:
     from mr_python_spark.session import get_spark
-    from tools.scale_probe import generate as gen_sf1
+    from tools.probe import SRC, fixture
 
-    if not os.path.exists(SF1_DOCS):
-        gen_sf1(
-            dst=os.path.join(REPO, ".data", "sf1"),
-            replicas=10,
-            tables={"documents"},
-        )
+    sf1 = fixture(SRC, 10, ("documents",))
     spark = get_spark("skew_dedup_probe")
     result = {"fixtures": []}
     for label, boiler in FIXTURES.items():
-        sf_dir = generate(label, boiler)
+        sf_dir = generate(label, boiler, sf1)
         rep = probe_fixture(
             spark, label, sf_dir, n_boiler_words=len(boiler.split())
         )

@@ -106,7 +106,7 @@ def probe() -> dict:
 
     from mr_python_spark.operators.aggregates import agg_salted_skew, fixed_point
     from mr_python_spark.operators.joins import join_salted_skew
-    from mr_python_spark.session import get_spark, load_table
+    from mr_python_spark.session import get_spark, load_table, with_conf
 
     spark = get_spark()
 
@@ -140,20 +140,12 @@ def probe() -> dict:
         )
 
     def best_of(fn, n=3, **conf):
-        prev = {k: spark.conf.get(k, None) for k in conf}
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        try:
-            times = []
-            for _ in range(n):
-                t0 = time.time()
-                fn().collect()
-                times.append(time.time() - t0)
-            return round(min(times), 3)
-        finally:
-            for k, v in prev.items():
-                if v is not None:
-                    spark.conf.set(k, v)
+        times = []
+        for _ in range(n):
+            t0 = time.time()
+            with_conf(fn(), conf).collect()
+            times.append(time.time() - t0)
+        return round(min(times), 3)
 
     skew_off = {
         "spark.sql.adaptive.skewJoin.enabled": "false",

@@ -16,8 +16,8 @@ docs/stream_state_sweep_sf1.json and the conclusion goes to SCALE.md.
 
 Usage::
 
-    python tools/stream_state_sweep.py           # sweep at .data/sf1
-    SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.1 python tools/stream_state_sweep.py
+    python tools/stream_state_sweep.py    # sweep at the 10x fixture of $SPARK_GRAFT_SF_DIR
+    SPARK_GRAFT_SWEEP_SF=/path/to/sf0.1 python tools/stream_state_sweep.py
 """
 
 from __future__ import annotations
@@ -30,8 +30,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF1 = os.path.join(REPO, ".data", "sf1")
-SWEEP_SF = os.environ.get("SPARK_GRAFT_SWEEP_SF", SF1)
+from tools.probe import SRC, fixture  # noqa: E402
+
+#: the swept directory; unset, the 10x events fixture of ``SRC``
+SWEEP_SF = os.environ.get("SPARK_GRAFT_SWEEP_SF")
 
 #: target-rows settings to sweep (default 12500 in the middle);
 #: sf1 has ~1M event rows, so these map to ~[200, 80, 40, 20, 8, 4]
@@ -45,14 +47,7 @@ QUERIES = ["streaming_join_full_live", "streaming_stateful_sessions"]
 
 
 def main() -> int:
-    # synthesize sf1 if needed (same fixture as the scale probe)
-    from tools import scale_probe
-
-    if SWEEP_SF == SF1 and not all(
-        os.path.exists(os.path.join(SF1, f"{t}.parquet"))
-        for t in ("lineitem", "documents", "embeddings", "events")
-    ):
-        scale_probe.generate()
+    sweep_sf = SWEEP_SF or fixture(SRC, 10, ("events",))
 
     import mr_python_spark.streaming as streaming
     from mr_python_spark.session import get_spark
@@ -65,11 +60,11 @@ def main() -> int:
 
     # one untimed warm pass (codegen, source listing, sink machinery)
     for n in names:
-        qs[n](spark, SWEEP_SF).write.format("noop").mode("overwrite").save()
+        qs[n](spark, sweep_sf).write.format("noop").mode("overwrite").save()
 
     default = streaming.STREAM_STATE_TARGET_ROWS
     out: dict = {
-        "sf_dir": SWEEP_SF,
+        "sf_dir": sweep_sf,
         "default_target_rows": default,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "queries": names,
@@ -78,13 +73,13 @@ def main() -> int:
     try:
         for target in TARGETS:
             streaming.STREAM_STATE_TARGET_ROWS = target
-            parts = streaming.stream_state_partitions(spark, SWEEP_SF)
+            parts = streaming.stream_state_partitions(spark, sweep_sf)
             row = {"target_rows": target, "state_partitions": parts}
             for n in names:
                 best = float("inf")
                 for _ in range(2):  # best-of-2: streams are long enough
                     t0 = time.perf_counter()
-                    qs[n](spark, SWEEP_SF).write.format("noop").mode(
+                    qs[n](spark, sweep_sf).write.format("noop").mode(
                         "overwrite"
                     ).save()
                     best = min(best, time.perf_counter() - t0)

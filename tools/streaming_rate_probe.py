@@ -4,8 +4,8 @@ All 17 live streaming queries are correctness-gated, but gates run one
 availableNow batch — they never measure the quantities a 100 TB
 deployment lives or dies on: sustained rows/sec through the stateful
 operators, state-store rows/bytes per micro-batch, and watermark
-progression.  This probe drives the 10× events fixture (1M rows,
-.data/sf1 — same 30-day window as sf0.1, 10× the load) through the
+progression.  This probe drives the 10× events fixture (``tools.probe.fixture``:
+1M rows from sf0.1 — the same 30-day window, 10× the load) through the
 three judge-named stateful paths as a RATE-LIMITED multi-batch
 stream — the events sorted by event time and staged as
 ``N_FILES`` parquet chunks with ascending mtimes, consumed
@@ -15,7 +15,7 @@ records every micro-batch's StreamingQueryProgress.
 
 Probed plans are the PRODUCTION definitions, not copies: the three
 queries' stream transformations were extracted as
-``sessions_timeout_frame`` / ``join_live_frame`` /
+``sessions_frame`` / ``join_live_frame`` /
 ``cms_counter_frame`` and are reused here verbatim.
 
 Per query: per-batch numInputRows, processedRowsPerSecond,
@@ -41,13 +41,12 @@ import uuid
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-FIXTURE = os.path.join(REPO, ".data", "sf1", "events.parquet")
 STAGE = os.path.join(REPO, ".data", "stream_rate_stage")
 N_FILES = 24
 FILES_PER_TRIGGER = 2
 
 
-def stage_files(sentinel: bool) -> str:
+def stage_files(sf_dir: str, sentinel: bool) -> str:
     """Event-time-sorted chunks with ascending mtimes (+ optional
     far-future sentinel chunk last, for event-time-timeout flushing)."""
     import pyarrow as pa
@@ -58,7 +57,7 @@ def stage_files(sentinel: bool) -> str:
     if os.path.exists(os.path.join(dst, "part_000.parquet")):
         return dst
     os.makedirs(dst, exist_ok=True)
-    t = pq.read_table(FIXTURE)
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     t = t.sort_by("ts")
     n = t.num_rows
     base_mtime = time.time() - 3600
@@ -179,21 +178,16 @@ def main() -> None:
 
     from mr_python_spark.session import get_spark
     from mr_python_spark.streaming import cms_counter_frame, join_live_frame
-    from mr_python_spark.streaming.stateful import sessions_timeout_frame
-    from tools.scale_probe import generate
+    from mr_python_spark.streaming.stateful import sessions_frame
+    from tools.probe import SRC, fixture
 
-    if not os.path.exists(FIXTURE):
-        generate(
-            dst=os.path.join(REPO, ".data", "sf1"),
-            replicas=10,
-            tables={"events"},
-        )
-    plain = stage_files(sentinel=False)
-    sent = stage_files(sentinel=True)
+    sf_dir = fixture(SRC, 10, ("events",))
+    plain = stage_files(sf_dir, sentinel=False)
+    sent = stage_files(sf_dir, sentinel=True)
 
     spark = get_spark("streaming_rate_probe")
     results = {
-        "fixture": "10x events (.data/sf1, 1,000,000 rows, 30-day window)",
+        "fixture": f"10x events ({os.path.relpath(sf_dir, REPO)})",
         "rate_limit": f"{FILES_PER_TRIGGER} of {N_FILES} event-time-sorted "
         "files per micro-batch (Trigger.AvailableNow honors "
         "maxFilesPerTrigger)",
@@ -205,7 +199,7 @@ def main() -> None:
     }
 
     # 1) event-time-timeout sessionization (applyInPandasWithState)
-    sessions = sessions_timeout_frame(rate_limited_stream(spark, sent))
+    sessions = sessions_frame(rate_limited_stream(spark, sent), timeout=True)
     r = run_and_trace(spark, sessions, "sessions_timeout", "append")
     results["queries"].append(r)
 
@@ -223,7 +217,6 @@ def main() -> None:
     # gate's totals
     from mr_python_spark.session import load_table
 
-    sf_dir = os.path.join(REPO, ".data", "sf1")
     ev = load_table(spark, sf_dir, "events")
     checks = {}
     # sessions: output sessions (sentinel rows excluded) == batch oracle

@@ -142,7 +142,7 @@ def hashed_shingle_sets(
         "dedup.shingles",
         spark,
         sf_dir,
-        lambda: hashed(load_table(spark, sf_dir, "documents")).cache(),
+        lambda: hashed(load_table(spark, sf_dir, "documents")),
     )
 
 
@@ -251,7 +251,7 @@ def capped_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         exploded = hashed_shingle_sets(spark, sf_dir).select(
             "doc_id", F.explode("sh").alias("shingle")
         )
-        return posting_lists(exploded, "shingle", DF_CAP).cache()
+        return posting_lists(exploded, "shingle", DF_CAP)
 
     return corpus_cache("dedup.postings", spark, sf_dir, build)
 
@@ -287,7 +287,7 @@ def cached_posting_candidates(
 
     def build(i: int) -> DataFrame:
         sh_sets = hashed_shingle_sets(spark, sf_dir)
-        return posting_candidates(capped_postings(spark, sf_dir), sh_sets)[i].cache()
+        return posting_candidates(capped_postings(spark, sf_dir), sh_sets)[i]
 
     return (
         corpus_cache("dedup.candidates", spark, sf_dir, lambda: build(0)),
@@ -316,8 +316,8 @@ def gated_verify_frame(
     every doc that shares ≥1 rare shingle with another doc), so a
     forced ``F.broadcast`` is only safe when the frame is measured
     small.  The count is taken once per (session, corpus identity) —
-    ``sh_small`` is keyed-cached, so counting it merely materializes
-    the cache the verify join needs anyway — and the hint fires only
+    ``sh_small`` is a stored registry frame, so counting it reads rows
+    the verify join needs anyway — and the hint fires only
     under ``VERIFY_BROADCAST_MAX_DOCS``.  Past the gate the frame is
     returned un-hinted and AQE chooses the join strategy (shuffled
     hash join on doc_id at real scale).
@@ -494,7 +494,24 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes).  Like the exact variant, a 64-bit collision could in
     principle inflate one intersection count; at (shingles/doc)² ≈
     10⁴ trials per pair the probability is ~10⁻¹⁵ — accepted.
+
+    The verified pair set is the registry entry ``dedup.ngram_pairs``,
+    built by :func:`_ngram_pairs`: source attribution
+    (``dedup_cross_source_matrix``) and the graph edge builds
+    (:func:`mr_python_spark.operators.graph.neardup_bidir`) read it
+    through this query.  The set is bounded by true near-dups, not by
+    corpus size, so holding it is far cheaper than re-running the
+    verify join per consumer.  Every call, in any order, plans the
+    same stored read.
     """
+    return corpus_cache(
+        "dedup.ngram_pairs", spark, sf_dir, lambda: _ngram_pairs(spark, sf_dir)
+    )
+
+
+def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The verify join behind :func:`dedup_ngram_jaccard`: the cached
+    candidate pairs scored on the pruned shingle sets."""
     cand, sh_small = cached_posting_candidates(spark, sf_dir)
     # Size-GATED broadcast: when the pruned doc→shingles map is
     # measured small, broadcasting it keeps the (much larger)
@@ -504,38 +521,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus and the hint is dropped (AQE shuffled join on doc_id).
     small = gated_verify_frame(spark, sf_dir, sh_small)
     return verify(cand, small, small, measure="jaccard", tau=0.2)
-
-
-def cached_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed-cached VERIFIED near-dup pair frame — the materialized
-    ``dedup_ngram_jaccard`` result (doc_a, doc_b, jaccard ≥ 0.2).
-
-    The pair FAMILY is consumed by several downstream operators —
-    source attribution (``dedup_cross_source_matrix``), the graph
-    edge builds (:func:`mr_python_spark.operators.graph.neardup_bidir`
-    behind pagerank and the recursive reach CTE) — and each consumer
-    re-planned and re-executed the whole verify subtree (candidate
-    join + array_intersect verification, ~60 Exchanges in the matrix's
-    r16 before-plan) even though the upstream cand/sh_small frames
-    were cached.  The verified pair set is tiny (bounded by true
-    near-dups, NOT corpus size — well under 0.1% of document rows at
-    every measured SF), so it is exactly the §5 cache case: reused AND far
-    cheaper to hold than to recompute.  ``dedup_ngram_jaccard`` itself
-    builds the uncached query, but once this frame is materialized
-    Spark's CacheManager rewrites that logically-equal plan to the
-    cached InMemoryRelation, so its plan and timing depend on call
-    order: the verify join before any consumer ran, a cache read after.
-    The uncached reference is the ``ngram_pairs_builder`` entry of
-    tools/explain_audit.py, which evicts this cache first, as bench.py
-    does before each timed ``dedup_ngram_jaccard`` run.  Cold-build
-    vs warm-read cost: ``python tools/probe.py cold_warm`` (the r17
-    record is docs/cold_warm_r17.json)."""
-    return corpus_cache(
-        "dedup.ngram_pairs",
-        spark,
-        sf_dir,
-        lambda: dedup_ngram_jaccard(spark, sf_dir).cache(),
-    )
 
 
 def minhash_signatures(
@@ -579,7 +564,7 @@ def minhash_signatures(
     if docs is not None:
         return build(docs)
     return corpus_cache(
-        "dedup.signatures", spark, sf_dir, lambda: build(None).cache()
+        "dedup.signatures", spark, sf_dir, lambda: build(None)
     )
 
 
@@ -622,7 +607,7 @@ def cached_band_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dedup.band_frame",
         spark,
         sf_dir,
-        lambda: minhash_band_frame(minhash_signatures(spark, sf_dir)).cache(),
+        lambda: minhash_band_frame(minhash_signatures(spark, sf_dir)),
     )
 
 
@@ -671,7 +656,7 @@ def dedup_minhash_lsh(
             sf_dir,
             lambda: posting_lists(
                 cached_band_frame(spark, sf_dir), ["band", "bhash"], bucket_cap
-            ).cache(),
+            ),
         )
     else:
         sig = minhash_signatures(spark, sf_dir, docs=docs)
@@ -773,7 +758,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("band", "bhash")
             .agg(F.collect_list("doc_id").alias("ds"))
             .filter(F.size("ds") <= LSH_BUCKET_CAP)
-            .cache()
         ),
     )
     cand = (
@@ -1482,13 +1466,9 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The CC fixed point is deterministic (min doc_id labels), so the
     converged frame is a corpus property — exactly like the shingle /
-    signature / LM frames.  Before this cache every caller
-    (``dedup_clusters``, ``dedup_cluster_survivors``,
-    ``dedup_canonical``) re-built the edge set AND re-ran the whole
-    label-propagation loop, each run leaving its own sh/edges/bidir
-    ``.cache()`` frames registered forever (CacheManager churn, the
-    minhash-family defect).  The builder now fully materializes the
-    converged labels, then unpersists every intermediate."""
+    signature / LM frames — read by ``dedup_clusters``,
+    ``dedup_cluster_survivors`` and ``dedup_canonical``.  The builder
+    pins the converged labels, then unpersists its loop frames."""
 
     def build() -> DataFrame:
         # intra-build caches: edges feed both union arms; labels
@@ -1517,13 +1497,9 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             labels = new_labels
             if changed == 0:
                 break
-        # pin the converged frame via localCheckpoint: the loop's
-        # per-round unpersist of the PREVIOUS labels recompiles (and
-        # empties) every dependent cache entry — Spark's non-cascading
-        # uncache drops dependents' buffers — so a plain .cache() here
-        # never actually holds data and every consumer re-ran the whole
-        # loop.  The checkpoint stores the |labels| rows lineage-free,
-        # after which every builder frame can be released for real.
+        # pin the converged labels before the loop frames are
+        # released: the checkpoint holds the |labels| rows
+        # lineage-free, and the registry stores it as it is
         final = labels.localCheckpoint(eager=True)
         labels.unpersist()
         bidir.unpersist()
@@ -1654,16 +1630,15 @@ def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h) — xxhash64'd distinct stride-sampled spans.
 
     The frame feeds BOTH the df aggregate and the per-doc join probe
-    in :func:`dedup_exact_substring`; without persistence the
+    in :func:`dedup_exact_substring`; without a stored frame the
     substring+hash transform (the pass's dominant CPU cost) executes
-    twice — measured 6.1x at the 10x-data probe unpersisted vs 2.0x
-    persisted.  16 bytes/span ≈ 4% of text size at stride 10, so the
-    spill-safe MEMORY_AND_DISK persist is cheap at any SF.  The scan
-    is ``spread()`` BEFORE the span transform (the raw (doc_id, text)
-    rows shuffle, never derived rows), then cached via the shared
-    keyed cache.
+    twice — measured 6.1x at the 10x-data probe unstored vs 2.0x
+    stored.  16 bytes/span ≈ 4% of text size at stride 10, and the
+    registry's checkpoint spills to disk (MEMORY_AND_DISK), so holding
+    it is cheap at any SF.  The scan is ``spread()`` BEFORE the span
+    transform (the raw (doc_id, text) rows shuffle, never derived
+    rows).
     """
-    from pyspark.storagelevel import StorageLevel
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -1681,7 +1656,6 @@ def _span_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("hs"),
             )
             .select("doc_id", F.explode("hs").alias("h"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
     return corpus_cache("dedup.spans", spark, sf_dir, build)
@@ -2502,16 +2476,13 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the quantized ``floor(j * PROV_SCALE)`` summand — and therefore
     ``jsum_fp`` — is exact; ``n_strong`` counts pairs at or above
     jaccard 1/2 with the same determinism.  Plan: the pair frame is
-    the keyed-cached verified family frame
-    (:func:`cached_jaccard_pairs` — r16 verdict order #4: every
-    consumer used to re-execute the whole verify subtree, 60 Exchanges
-    in this query's r16 before-plan; now an InMemoryTableScan leaf);
-    attributing sources is two doc_id-keyed joins against a narrow
+    the stored ``dedup_ngram_jaccard`` result (a ``Scan ExistingRDD``
+    leaf, not the verify subtree's ~60 Exchanges); attributing sources is two doc_id-keyed joins against a narrow
     (doc_id, source) projection — corpus-scaling, so NOT
     broadcast-hinted (the round-2 policy); AQE picks the strategy.
     The final aggregate is at most |sources|² rows.
     """
-    pairs = cached_jaccard_pairs(spark, sf_dir)
+    pairs = dedup_ngram_jaccard(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa"))
     sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("sb"))
@@ -2793,17 +2764,13 @@ def _bloom_flag_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dedup.bloom_corpus",
             spark,
             sf_dir,
-            lambda: fp.filter(~is_batch).select("lead_fp").distinct().cache(),
+            lambda: fp.filter(~is_batch).select("lead_fp").distinct(),
         )
 
     def build_bits() -> DataFrame:
-        return (
-            corpus_index().select(
-                F.explode(_bloom_positions("lead_fp")).alias("bit")
-            )
-            .distinct()
-            .cache()
-        )
+        return corpus_index().select(
+            F.explode(_bloom_positions("lead_fp")).alias("bit")
+        ).distinct()
 
     corpus_fp = corpus_index()
     bits = corpus_cache("dedup.bloom_bits", spark, sf_dir, build_bits)

@@ -138,7 +138,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescan the corpus.
     """
     return corpus_cache(
-        "lm.scored", spark, sf_dir, lambda: _lm_scored(spark, sf_dir).cache()
+        "lm.scored", spark, sf_dir, lambda: _lm_scored(spark, sf_dir)
     )
 
 
@@ -282,7 +282,7 @@ def nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nb_scored_builder`` pseudo-entry in tools/explain_audit.py.
     """
     return corpus_cache(
-        "lm.nb_scored", spark, sf_dir, lambda: _nb_scored(spark, sf_dir).cache()
+        "lm.nb_scored", spark, sf_dir, lambda: _nb_scored(spark, sf_dir)
     )
 
 
@@ -311,11 +311,10 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE Spark action, with no ``.first()`` driver jobs re-running the
     sample pipeline for scalars (the r13 per-call-scalar fix; same
     recipe as ``search_bm25_topk`` / ``negative_sampling_table``).
-    The sample frame is ``persist()``-ed — it is bounded
-    (≤ ``LM_SAMPLE_CAP`` docs, the same bound the collected bpe/unigram
-    vocab tables rely on) and feeds both the model and the constants,
-    and Spark's cache manager keys on the canonicalized plan so
-    repeated builder calls share one entry.  Per-token ``dbits`` is
+    The sample (≤ ``LM_SAMPLE_CAP`` docs, the same bound the collected
+    bpe/unigram vocab tables rely on) feeds both the model and the
+    constants; it is not persisted, so the registry's one build reads
+    it twice and leaves nothing in Spark's cache.  Per-token ``dbits`` is
     precomputed on the vocab-sized model frame, so the corpus pass
     sums plain integers instead of evaluating 2 ``length(bin(·))``
     string ops per token occurrence; OOV tokens contribute a constant
@@ -349,12 +348,6 @@ def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("g"),
         )
-        # bounded (≤ LM_SAMPLE_CAP docs) and shared by the model +
-        # constants subtrees.  Deliberately never unpersisted: the
-        # builder returns a LAZY frame, so there is no post-action
-        # hook; the cache manager keys on the canonicalized plan, so a
-        # long session holds at most one small entry per sf_dir.
-        .persist()
     )
     tok_class = (
         sample.select("g", F.explode("toks").alias("tok"))
@@ -766,7 +759,7 @@ def moore_lewis_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     LLM-pipeline extension tier (SURVEY.md §6).
     """
     return corpus_cache(
-        "lm.ml_scored", spark, sf_dir, lambda: _ml_scored(spark, sf_dir).cache()
+        "lm.ml_scored", spark, sf_dir, lambda: _ml_scored(spark, sf_dir)
     )
 
 

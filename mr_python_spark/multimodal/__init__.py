@@ -888,7 +888,7 @@ def _phash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multimodal.phash",
         spark,
         sf_dir,
-        lambda: _phash_hashes(spark, sf_dir).cache(),
+        lambda: _phash_hashes(spark, sf_dir),
     )
 
 
@@ -1169,7 +1169,7 @@ def multimodal_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multimodal.resize",
         spark,
         sf_dir,
-        lambda: _resize_stats(spark, sf_dir).cache(),
+        lambda: _resize_stats(spark, sf_dir),
     )
 
 

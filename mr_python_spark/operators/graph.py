@@ -16,7 +16,8 @@ every intermediate round, not just approximately at the end.
 Scale notes: each iteration is one join + one aggregate on the EDGE
 list (the corpus is never re-read), the same alternating
 join-aggregate shape GraphX uses; iteration count is fixed (3), and
-per-round frames are cached and unpersisted like the components loop.
+per-round frames are cached, then unpersisted once the fixed point is
+pinned, like the components loop.
 """
 
 from __future__ import annotations
@@ -120,24 +121,19 @@ def neardup_bidir(spark: SparkSession, sf_dir: str):
 
     Shared by :func:`pagerank_dedup_graph` (3 join-aggregate rounds)
     and :func:`reach_flagged_neighborhood` (a recursive CTE that
-    re-scans the edge list once per recursion depth): both previously
-    built their own copy, and the CTE's per-step re-execution re-ran
-    the whole verify pipeline each hop.  Bounded by the LSH candidate
-    budget like the pair frame itself.  The pair source is the shared
-    keyed-cached verified family frame (r17: the bidirect build reads
-    the InMemoryTableScan leaf instead of re-planning the verify
-    subtree)."""
-    from mr_python_spark.dedup import cached_jaccard_pairs
+    re-scans the edge list once per recursion depth), so neither
+    re-runs the verify pipeline.  Bounded by the LSH candidate budget
+    like the pair frame itself, which it reads as the stored
+    ``dedup_ngram_jaccard`` result."""
+    from mr_python_spark.dedup import dedup_ngram_jaccard
 
     def build():
-        pairs = cached_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        bidir = pairs.select(
+        pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        return pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         ).union(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        ).cache()
-        bidir.count()
-        return bidir
+        )
 
     return corpus_cache("graph.bidir", spark, sf_dir, build)
 
@@ -189,12 +185,9 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             rank = pagerank_round(edges, verts, rank, base).cache()
             inter.append(rank)
         out = rank.select("doc_id", F.col("rank").cast("long").alias("rank"))
-        # pin the fixed point via localCheckpoint (lineage-free store of
-        # the |verts| rows): unpersisting ANY ancestor frame recompiles
-        # and empties dependent cache entries (Spark's non-cascading
-        # uncache), so a plain .cache() on out could never survive the
-        # cleanup below.  After the checkpoint every builder frame is
-        # released; bidir stays — it is owned by the shared keyed cache.
+        # pin the fixed point (the |verts| rows, lineage-free) before
+        # the loop frames are released; the registry stores it as it
+        # is, and bidir stays — the registry owns it
         out = out.localCheckpoint(eager=True)
         for df in inter:
             df.unpersist()

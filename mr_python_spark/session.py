@@ -264,22 +264,37 @@ def with_conf(df: DataFrame, conf: dict) -> DataFrame:
     return bind(df, session)
 
 
-def _evict_frame(df: DataFrame) -> None:
-    """Release an evicted cached frame's storage — BOTH tiers.
+def _checkpoint_rdd(df: DataFrame):
+    """The RDD that holds ``df``'s rows if ``df`` is a local checkpoint
+    (a ``LogicalRDD`` leaf over a checkpointed RDD), else ``None``."""
+    plan = df._jdf.queryExecution().logical()  # noqa: SLF001
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        return plan.rdd()
+    return None
 
-    ``df.unpersist()`` only clears SQL CacheManager entries; a
-    ``localCheckpoint``-pinned frame (the graph fixed points) stores
-    its rows as RDD blocks OUTSIDE the CacheManager, reachable through
-    the checkpointed Dataset's LogicalRDD leaf.  Without releasing that
-    RDD, evicting a regenerated corpus leaked the old label/rank blocks
-    for the application lifetime (r16 ADVICE).  Non-checkpointed frames
-    have no ``rdd()`` accessor on their logical plan — the probe just
-    no-ops for them."""
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
-    except Exception:
-        pass  # not a LogicalRDD-backed (checkpointed) frame
-    df.unpersist()
+
+def _pin(df: DataFrame) -> DataFrame:
+    """``df`` stored as an eager local checkpoint.
+
+    The checkpoint's leaf is a lineage-free ``LogicalRDD`` that no
+    other plan contains, so Spark's CacheManager never substitutes a
+    registry frame into a later plan: a consumer plans the same
+    ``Scan ExistingRDD`` read whatever ran before it.  The leaf does
+    not keep an adaptive plan's output partitioning, so a consumer
+    that needs the rows clustered by a key re-shuffles them.  A frame
+    that already is a checkpoint (a fixed point that pinned its result
+    before releasing its loop frames) is stored as it is."""
+    return df if _checkpoint_rdd(df) is not None else df.localCheckpoint(eager=True)
+
+
+def _evict_frame(df: DataFrame) -> None:
+    """Release the blocks of a stored checkpoint.
+
+    ``SparkContext.unpersistRDD`` rather than ``RDD.unpersist``: the
+    latter logs a warning for every locally checkpointed RDD, and the
+    bench evicts the registry before each query."""
+    rdd = df._jdf.queryExecution().logical().rdd()  # noqa: SLF001
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 #: (name, applicationId, table realpath, mtime_ns) → (value, keys of
@@ -307,8 +322,11 @@ def corpus_cache(name: str, spark: SparkSession, sf_dir: str, build, *,
     * one re-entrant lock guards the store and is held across builds,
       so concurrent callers of one name build it once.
 
-    An evicted ``DataFrame`` is released through :func:`_evict_frame`;
-    any other value is dropped.
+    A ``DataFrame`` that a build returns is stored as an eager local
+    checkpoint (:func:`_pin`), so builds end in no ``.cache()`` of
+    their own, and eviction releases the checkpoint's blocks
+    (:func:`_evict_frame`).  Any other value is stored and dropped as
+    it is.
     """
     path = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
     key = (name, spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
@@ -317,7 +335,10 @@ def corpus_cache(name: str, spark: SparkSession, sf_dir: str, build, *,
             _drop([k for k in _CORPUS if k[1:3] == key[1:3] and k[3] != key[3]])
             _BUILDING.append(key)
             try:
-                _CORPUS[key] = (build(), set())
+                value = build()
+                if isinstance(value, DataFrame):
+                    value = _pin(value)
+                _CORPUS[key] = (value, set())
             finally:
                 _BUILDING.pop()
         value, dependents = _CORPUS[key]

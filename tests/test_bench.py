@@ -65,22 +65,29 @@ def test_short_line_keeps_every_query():
 
 
 def test_jaccard_never_reads_the_pair_cache(spark):
-    """``dedup_cross_source_matrix`` builds ``dedup.ngram_pairs``, whose
-    cached frame would turn ``dedup_ngram_jaccard`` into a cache read."""
+    """``dedup_cross_source_matrix`` stores ``dedup.ngram_pairs``, the
+    very frame ``dedup_ngram_jaccard`` returns.  The query's cold run
+    must not find the matrix's entry: it builds its own, and its warm
+    runs read that one."""
     from conftest import SF_DIR
 
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    seen = []
+    stored, returned = [], []
 
     def jaccard(spark, sf_dir):
-        seen.append(any(key[0] == "dedup.ngram_pairs" for key in session._CORPUS))  # noqa: SLF001
-        return qs["dedup_ngram_jaccard"](spark, sf_dir)
+        stored.append([v for k, (v, _) in session._CORPUS.items()  # noqa: SLF001
+                       if k[0] == "dedup.ngram_pairs"])
+        returned.append(qs["dedup_ngram_jaccard"](spark, sf_dir))
+        return returned[-1]
 
     names = ["dedup_cross_source_matrix", "dedup_ngram_jaccard"]
     samples = bench.measure(spark, dict(qs, dedup_ngram_jaccard=jaccard), names, SF_DIR)
-    assert seen == [False] * (1 + bench.WARM_RUNS)
+    cold = returned[0]
+    assert stored[0] == [] and len(stored) == 1 + bench.WARM_RUNS
+    assert all(len(w) == 1 and w[0] is cold for w in stored[1:])
+    assert all(r is cold for r in returned)
     assert list(samples) == names
     for s in samples.values():
         assert s["cold_s"] > 0

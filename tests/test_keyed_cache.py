@@ -6,9 +6,10 @@ self-review found three drifting inline copies); these tests pin the
 contract every consumer relies on: hit on same identity, rebuild on a
 rewritten file with every entry built on the old identity evicted,
 recorded dependencies cascading on ``evict``, one build under
-concurrent lookups, and evicted frames released.  The stub-based tests
-need no SparkSession — a stub with the one attribute the registry
-reads keeps them sub-second.
+concurrent lookups, every stored frame pinned as a local checkpoint
+and released on eviction, and registry plans that do not depend on
+call order.  A stub session with the one attribute the registry reads
+stands in for the application; the stored frames are real ones.
 """
 
 from __future__ import annotations
@@ -16,17 +17,19 @@ from __future__ import annotations
 import glob
 import os
 import re
+import sys
 import threading
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+import pytest
 
 from mr_python_spark import session
 from mr_python_spark.session import corpus_cache, evict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 class _StubSpark:
@@ -36,21 +39,13 @@ class _StubSpark:
     sparkContext = _SC()
 
 
-class _StubFrame(DataFrame):
-    """A DataFrame the registry can release without a JVM: records
-    each ``unpersist`` call in ``log``."""
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: SLF001
 
-    _jdf = None  # no checkpoint RDD to release
 
-    def __new__(cls, *args, **kwargs):
-        return object.__new__(cls)
-
-    def __init__(self, log: list):
-        self.log = log
-
-    def unpersist(self, blocking: bool = False):
-        self.log.append(self)
-        return self
+def _stored_rdd(frame) -> int:
+    """The id of the checkpointed RDD behind a stored frame."""
+    return session._checkpoint_rdd(frame).id()  # noqa: SLF001
 
 
 def _write_docs(d, text="x"):
@@ -61,26 +56,36 @@ def _entries(name: str) -> list:
     return [k for k in session._CORPUS if k[0] == name]
 
 
-def test_corpus_cache_hit_rebuild_and_eviction(tmp_path):
+def test_corpus_cache_hit_rebuild_and_eviction(spark, tmp_path):
     _write_docs(tmp_path)
-    frames, unpersisted = [], []
+    built = []
 
     def build():
-        frames.append(_StubFrame(unpersisted))
-        return frames[-1]
+        built.append(spark.range(len(built) + 1))
+        return built[-1]
 
-    spark = _StubSpark()
-    a = corpus_cache("test.hit", spark, str(tmp_path), build)
-    b = corpus_cache("test.hit", spark, str(tmp_path), build)
-    assert a is b is frames[0] and len(frames) == 1 and not unpersisted
+    stub, sf = _StubSpark(), str(tmp_path)
+    a = corpus_cache("test.hit", stub, sf, build)
+    assert corpus_cache("test.hit", stub, sf, build) is a and len(built) == 1
+    # stored pinned: a checkpoint of the build's frame, not the frame
+    assert a is not built[0] and a.count() == 1
+    assert _stored_rdd(a) in _persistent_rdds(spark)
 
-    # rewritten file (new mtime_ns) -> rebuild, stale entry evicted
+    # rewritten file (new mtime_ns) -> rebuild, stale entry released
     time.sleep(0.01)
     _write_docs(tmp_path, text="y")
-    c = corpus_cache("test.hit", spark, str(tmp_path), build)
-    assert c is frames[1] and unpersisted == [frames[0]]
+    c = corpus_cache("test.hit", stub, sf, build)
+    assert len(built) == 2 and c.count() == 2
+    assert _stored_rdd(a) not in _persistent_rdds(spark)
     assert len(_entries("test.hit")) == 1
     evict("test.hit")
+    assert _stored_rdd(c) not in _persistent_rdds(spark)
+
+    # a frame that already is a checkpoint is stored as it is
+    pinned = spark.range(3).localCheckpoint(eager=True)
+    assert corpus_cache("test.pinned", stub, sf, lambda: pinned) is pinned
+    evict("test.pinned")
+    assert _stored_rdd(pinned) not in _persistent_rdds(spark)
 
 
 def test_corpus_cache_table_parameter(tmp_path):
@@ -117,20 +122,18 @@ def test_evict_cascades_to_entries_built_on_it(tmp_path):
     evict("test.inner")
 
 
-def test_new_file_identity_evicts_every_name_built_on_it(tmp_path):
+def test_new_file_identity_evicts_every_name_built_on_it(spark, tmp_path):
     _write_docs(tmp_path)
-    spark, sf = _StubSpark(), str(tmp_path)
-    unpersisted: list = []
-    frame = _StubFrame(unpersisted)
-    corpus_cache("test.frame", spark, sf, lambda: frame)
-    corpus_cache("test.scalar", spark, sf, lambda: 7)
+    stub, sf = _StubSpark(), str(tmp_path)
+    frame = corpus_cache("test.frame", stub, sf, lambda: spark.range(1))
+    corpus_cache("test.scalar", stub, sf, lambda: 7)
 
     time.sleep(0.01)
     _write_docs(tmp_path, text="y")
     # a lookup of ONE name sees the new identity ...
-    assert corpus_cache("test.scalar", spark, sf, lambda: 8) == 8
+    assert corpus_cache("test.scalar", stub, sf, lambda: 8) == 8
     # ... and the other name's stale entry is gone and released too
-    assert unpersisted == [frame]
+    assert _stored_rdd(frame) not in _persistent_rdds(spark)
     assert not _entries("test.frame") and len(_entries("test.scalar")) == 1
     evict("test.scalar")
 
@@ -201,22 +204,17 @@ def test_scan_cache_serves_per_session_and_evicts_stale(spark, tmp_path):
 
 
 def test_cached_jaccard_pairs_shared_and_consistent(spark):
-    """r17: the verified pair frame is cached and consumed by the
-    family (cross-source matrix, graph edge builds) — repeat calls must
-    return the SAME cached object, and its rows must equal a fresh
-    uncached build of dedup_ngram_jaccard (evicting the cache first so
-    the CacheManager cannot rewrite the fresh plan to the cached
-    relation)."""
+    """The verified pair frame is stored once and read by the family
+    (cross-source matrix, graph edge builds) through
+    ``dedup_ngram_jaccard``: repeat calls return the SAME stored
+    object, and its rows equal a fresh run of the verify join."""
     from mr_python_spark import dedup
 
     sf = "/root/testdata/sf0.001"
-    p1 = dedup.cached_jaccard_pairs(spark, sf)
-    assert dedup.cached_jaccard_pairs(spark, sf) is p1  # cache hit
+    p1 = dedup.dedup_ngram_jaccard(spark, sf)
+    assert dedup.dedup_ngram_jaccard(spark, sf) is p1  # cache hit
     got = sorted(tuple(r) for r in p1.collect())
-    evict("dedup.ngram_pairs")
-    fresh = sorted(
-        tuple(r) for r in dedup.dedup_ngram_jaccard(spark, sf).collect()
-    )
+    fresh = sorted(tuple(r) for r in dedup._ngram_pairs(spark, sf).collect())
     assert got == fresh
 
 
@@ -229,7 +227,6 @@ def test_evict_shingles_cascades_to_verified_pairs(spark):
     from mr_python_spark import dedup
 
     before = sorted(tuple(r) for r in dedup.dedup_ngram_jaccard(spark, sf).collect())
-    dedup.cached_jaccard_pairs(spark, sf).count()
     assert _entries("dedup.ngram_pairs")
     evict("dedup.shingles")
     assert not _entries("dedup.ngram_pairs")
@@ -237,22 +234,65 @@ def test_evict_shingles_cascades_to_verified_pairs(spark):
     assert after == before
 
 
-def test_dedup_caches_all_go_through_the_registry(spark):
-    """Evicting every registry name leaves the CacheManager empty after
-    the exact tier and ``dedup_minhash_lsh`` on custom docs ran: neither
-    may ``.cache()`` a frame the registry cannot release."""
+def _evict_all():
+    evict(*{key[0] for key in session._CORPUS})  # noqa: SLF001
+
+
+def _plan(df) -> str:
+    """``df``'s executed plan with the ids that differ between two
+    builds of one plan masked: expression ids (lambda variables carry
+    theirs in the name), RDD ids and plan ids."""
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1#", plan)
+    plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[]", plan)
+    return re.sub(r"plan_id=\d+", "plan_id=", plan)
+
+
+@pytest.fixture(scope="module")
+def cold_warm_plans(spark):
+    """The executed plan of each ``PROBES["cold_warm"]`` consumer twice:
+    right after evicting the registry, and after all of them ran.  The
+    run starts with no frame that another test cached or persisted."""
+    import __spark_entry__ as entry
+    from conftest import SF_DIR as sf
+
+    from tools.probe import PROBES
+
+    _evict_all()
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():  # noqa: SLF001
+        rdd.unpersist(False)
+    qs = entry.queries()
+    names = PROBES["cold_warm"]["queries"]
+    cold = {}
+    for name in names:
+        _evict_all()
+        cold[name] = _plan(qs[name](spark, sf))
+    for name in names:
+        qs[name](spark, sf).write.format("noop").mode("overwrite").save()
+    return {name: (cold[name], _plan(qs[name](spark, sf))) for name in names}
+
+
+def test_registry_plans_do_not_depend_on_call_order(cold_warm_plans):
+    changed = [name for name, (cold, warm) in cold_warm_plans.items() if cold != warm]
+    assert changed == []
+
+
+def test_dedup_caches_all_go_through_the_registry(spark, cold_warm_plans):
+    """Evicting every registry name leaves the CacheManager and Spark's
+    persistent RDDs empty after the cold/warm consumers, the exact tier
+    and ``dedup_minhash_lsh`` on custom docs ran: none may ``.cache()``
+    or ``.persist()`` a frame the registry cannot release."""
     from conftest import SF_DIR as sf
 
     from mr_python_spark import dedup
     from mr_python_spark.session import load_table
 
-    def evict_all():
-        evict(*{key[0] for key in session._CORPUS})
-
-    evict_all()
-    spark.catalog.clearCache()
+    assert len(cold_warm_plans) == 20  # the consumers ran first
     dedup.dedup_ngram_jaccard_exact(spark, sf).collect()
     docs = load_table(spark, sf, "documents")
     dedup.dedup_minhash_lsh(spark, sf, docs=docs).collect()
-    evict_all()
+    _evict_all()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _persistent_rdds(spark) == set()

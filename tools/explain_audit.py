@@ -30,7 +30,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from mr_python_spark.session import evict  # noqa: E402
+from mr_python_spark import dedup, multimodal  # noqa: E402
+from mr_python_spark.functions import lm, pipeline, text  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -309,17 +310,12 @@ AUDITS: dict[str, dict] = {
     # size-GATED hint (gated_verify_frame): fires at audit SF because the
     # pruned frame is measured tiny; tests/test_determinism.py pins the
     # gate-OFF path (0 BroadcastExchange, identical output)
-    # r17: the verified pair frame is keyed-cached for the family's
-    # consumers (cached_jaccard_pairs — verdict order #4), and Spark's
-    # CacheManager rewrites ANY logically-equal plan to the cached
-    # relation once a consumer registered it, so this entry's plan is
-    # the verify join OR an InMemoryTableScan leaf depending on call
-    # order.  The join shape + broadcast-hint policy is therefore
-    # asserted on the UNCACHED builder (ngram_pairs_builder below,
-    # which evicts the pair cache first); here only the always-true
-    # invariants stay.
+    # the query returns the stored verified pair frame (registry name
+    # dedup.ngram_pairs, read by the family's consumers too), a
+    # Scan ExistingRDD leaf in every call order; the verify join and
+    # its size-GATED hints are policed on ngram_pairs_builder below
     "dedup_ngram_jaccard": dict(
-        must=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
     ),
     "dedup_ngram_jaccard_exact": dict(
@@ -378,8 +374,8 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         hinted_broadcasts=0,
     ),
-    # (the exact-cosine truth side rides the keyed-cached pair frame —
-    # consumers plan an InMemoryTableScan leaf, so no MapInPandas here)
+    # (the exact-cosine truth side rides the stored pair frame —
+    # consumers plan a Scan ExistingRDD leaf, so no MapInPandas here)
     "dedup_rp_recall_envelope": dict(
         must=[r"Join"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
@@ -691,7 +687,7 @@ AUDITS: dict[str, dict] = {
     # iteration kernel's join-aggregate structure is policed on the
     # pagerank_round_builder pseudo-entry below
     "pagerank_dedup_graph": dict(
-        must=[r"Scan ExistingRDD|InMemoryTableScan"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
     ),
     # decontamination: hash equi-join of two inverted indexes, both
@@ -759,13 +755,13 @@ AUDITS: dict[str, dict] = {
     # Cavnar–Trenkle langid: JVM trigram explode, word-count-shaped
     # profile aggregates, PARTITIONED rank windows (per lang / per
     # doc), |langs|-bounded broadcast fan-out for the classify join
-    # the (doc_id, lang, tri, c) frame is keyed-cached (round 16):
-    # both consumers plan an InMemoryTableScan leaf, so the explode /
+    # the (doc_id, lang, tri, c) frame is stored in the registry:
+    # both consumers plan a Scan ExistingRDD leaf, so the explode /
     # raw-stream shuffle is policed on the langid_dp_builder
     # pseudo-entry below; here the hint is the |langs|-bounded
     # classify crossJoin
     "lang_id_ngram_profile": dict(
-        must=[r"InMemoryTableScan", r"partial_", r"Window"],
+        must=[r"Scan ExistingRDD", r"partial_", r"Window"],
         must_not=[r"CartesianProduct"],
         hinted_broadcasts=1,
     ),
@@ -856,7 +852,7 @@ AUDITS: dict[str, dict] = {
     "doremi_domain_weights": dict(
         must=[r"Window", r"HashAggregate|SortAggregate", r"partial_"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
-        hinted_broadcasts=0,  # LM frame is a cached leaf; see builder entry
+        hinted_broadcasts=0,  # LM frame is a stored leaf; see builder entry
         # both global-total windows sit above the |sources|-row
         # aggregate — bounded single partitions, never corpus rows
         unpartitioned_windows=["agg:source", "agg:source"],
@@ -893,17 +889,13 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct"],
         hinted_broadcasts=2,
     ),
-    # bigram LM scoring: model frames are sample-bounded (safe to hint
-    # broadcast at any sf); bigrams built in-array (no Window shuffle);
-    # the TakeOrdered cap bounds the training sample without a global
-    # sort; per-doc aggregate partial-combines map-side
+    # bigram LM scoring: the query returns the stored scored frame, a
+    # Scan ExistingRDD LEAF, so the walk sees ZERO hints here; the
+    # plan shape and the model hints are policed on the builder (the
+    # lm_scored_builder pseudo-entry below)
     "bigram_lm_perplexity": dict(
-        must=[r"BroadcastHashJoin", r"TakeOrderedAndProject", r"partial_"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"SortMergeJoin", r"Window"],
-        # the scored frame is keyed-cached (round 9): consumers plan an
-        # InMemoryTableScan LEAF, so the walk sees ZERO hints here; the
-        # model hints are policed on the UNCACHED builder instead (the
-        # lm_scored_builder pseudo-entry below)
         hinted_broadcasts=0,
     ),
     # last-touch attribution: JOIN-FREE — one user-keyed window
@@ -948,18 +940,19 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Join"],
         hinted_broadcasts=0,
     ),
-    # perceptual-hash dedup: one Arrow decode+hash pass over the
-    # spread scan, then the hash-keyed cluster window — no joins; the
-    # Window is PARTITIONED by the hash pair (never single-partition)
+    # perceptual-hash dedup: the stored hash frame (its Arrow
+    # decode+hash pass is policed on phash_builder), then the
+    # hash-keyed cluster window — no joins; the Window is PARTITIONED
+    # by the hash pair (never single-partition)
     "multimodal_phash_dedup": dict(
-        must=[r"MapInPandas", r"Window"],
+        must=[r"Scan ExistingRDD", r"Window"],
         must_not=[r"CartesianProduct", r"Join"],
         hinted_broadcasts=0,
     ),
-    # nearest-neighbor resize: one spread Arrow decode pass, only the
-    # payload length shuffles, nothing after the map
+    # nearest-neighbor resize: the query returns the stored stats frame;
+    # its decode pass is policed on resize_builder
     "multimodal_resize_nearest": dict(
-        must=[r"MapInPandas"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"Join", r"Window",
                   r"Exchange hashpartitioning"],
         hinted_broadcasts=0,
@@ -970,21 +963,21 @@ AUDITS: dict[str, dict] = {
     # lm_scored_builder); bigrams built in-array, per-doc aggregates
     # partial-combine, the final join shuffles five-integer rows only
     "moore_lewis_selection": dict(
-        must=[r"partial_"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"Window"],
-        # keyed-cached (round 14): consumers plan an InMemoryTableScan
-        # leaf; the in-domain model hints are policed on the UNCACHED
+        # the query returns the stored frame, a Scan ExistingRDD leaf;
+        # its aggregates and in-domain model hints are policed on the
         # builder (ml_scored_builder below)
         hinted_broadcasts=0,
     ),
-    # NB calibration: keyed-cached per-doc NB frame (r15 — shared with
+    # NB calibration: the stored per-doc NB frame (r15 — shared with
     # the classifier, so this query no longer re-runs the corpus pass)
     # + one narrow weak-label scan + a four-integer doc_id join +
     # |bins| aggregate
     "nb_calibration_report": dict(
         must=[r"partial_", r"HashAggregate"],
         must_not=[r"CartesianProduct", r"Window"],
-        # the NB parent plans as an InMemoryTableScan leaf; its model +
+        # the NB parent plans as a Scan ExistingRDD leaf; its model +
         # constant hints are policed on nb_scored_builder below
         hinted_broadcasts=0,
     ),
@@ -1025,12 +1018,11 @@ AUDITS: dict[str, dict] = {
     # and training all inside the TakeOrdered sample, corpus scored in
     # one scan with a partial-agged per-doc reduce
     "nb_quality_classifier": dict(
-        must=[r"BroadcastHashJoin", r"TakeOrderedAndProject", r"partial_"],
+        must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"SortMergeJoin", r"Window"],
-        # keyed-cached (round 15): consumers plan an InMemoryTableScan
-        # leaf (the must regexes still match on the printed cached
-        # plan), so the walk sees ZERO hints; the model + constant
-        # hints are policed on the UNCACHED builder instead (the
+        # the query returns the stored frame, a Scan ExistingRDD leaf,
+        # so the walk sees ZERO hints; the plan shape and the model +
+        # constant hints are policed on the builder (the
         # nb_scored_builder pseudo-entry below)
         hinted_broadcasts=0,
     ),
@@ -1342,9 +1334,9 @@ AUDITS: dict[str, dict] = {
     # per-language window over narrow integer rows (text never enters
     # the window shuffle); no extra hints beyond the LM's
     "ccnet_perplexity_buckets": dict(
-        must=[r"Window", r"BroadcastHashJoin", r"partial_"],
+        must=[r"Window", r"BroadcastHashJoin", r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct"],
-        hinted_broadcasts=0,  # LM frame is a cached leaf; see builder entry
+        hinted_broadcasts=0,  # LM frame is a stored leaf; see builder entry
     ),
     # phrase retrieval: adjacency counted IN-ARRAY — the only Generate
     # is the 3-rows-per-doc stack() pivot, never a token explode — and
@@ -1395,41 +1387,56 @@ AUDITS: dict[str, dict] = {
     ),
     # ablation curve: distributed exact rank (per-key counts + bounded
     # offsets window + per-key row_number) — NO single-partition NTILE
-    # over corpus rows; LM joins from the keyed cache (its two model
-    # hints are inside the cached plan, like ccnet's)
+    # over corpus rows; LM joins from the registry (its two model
+    # hints are policed on the builder, like ccnet's)
     "quality_ablation_curve": dict(
         must=[r"partial_", r"HashAggregate", r"Window"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         # the bounded distinct-q_fp offsets frame (≤ 2^20+1 rows by
         # construction) is hinted back onto the ranked rows; the LM
-        # frame stays a cached leaf — see the builder entry
+        # frame stays a stored leaf — see the builder entry
         hinted_broadcasts=1,
         # the offsets window (running offset + grand total in one
         # WindowExec) sits above the distinct-q_fp aggregate —
         # bounded by construction, never corpus rows
         unpartitioned_windows=["agg:q_fp"],
     ),
-    # UNCACHED LM builder frame: the keyed cache makes every consumer
-    # plan an InMemoryTableScan leaf (hints invisible to the policy
-    # walk, by design — order-independence), so the broadcast policy
-    # for the LM's two sample-bounded model tables is asserted on the
-    # builder itself via FRAME_BUILDERS
-    # UNCACHED quality-frame builder (consumers plan it as a cached
-    # leaf): one scan, the dup-hash window count, no joins anywhere
+    # BUILDER frames (FRAME_BUILDERS): every consumer plans a stored
+    # frame as a Scan ExistingRDD leaf, so the plan shape and the
+    # broadcast policy of the frame itself are asserted on its builder
+    # quality-frame builder: one scan, the dup-hash window count, no
+    # joins anywhere
     "quality_fp_builder": dict(
         must=[r"Window", r"PushedFilters|Scan parquet"],
         must_not=[r"CartesianProduct", r"Join"],
         hinted_broadcasts=0,
     ),
+    # bigram LM scorer: model frames are sample-bounded (safe to hint
+    # broadcast at any sf); bigrams built in-array (no Window shuffle);
+    # the TakeOrdered cap bounds the training sample without a global
+    # sort; per-doc aggregate partial-combines map-side
     "lm_scored_builder": dict(
-        must=[r"BroadcastHashJoin", r"partial_"],
-        must_not=[r"CartesianProduct", r"SortMergeJoin"],
+        must=[r"BroadcastHashJoin", r"TakeOrderedAndProject", r"partial_"],
+        must_not=[r"CartesianProduct", r"SortMergeJoin", r"Window"],
         hinted_broadcasts=2,  # unigram + bigram model tables
     ),
     "ml_scored_builder": dict(
         must=[r"BroadcastHashJoin", r"TakeOrderedAndProject", r"partial_"],
-        must_not=[r"CartesianProduct"],
+        must_not=[r"CartesianProduct", r"Window"],
         hinted_broadcasts=2,  # in-domain unigram + bigram model tables
+    ),
+    # image builders: one Arrow decode pass over the spread scan, no
+    # joins; the resize pass shuffles only the payload length
+    "phash_builder": dict(
+        must=[r"MapInPandas"],
+        must_not=[r"CartesianProduct", r"Join"],
+        hinted_broadcasts=0,
+    ),
+    "resize_builder": dict(
+        must=[r"MapInPandas"],
+        must_not=[r"CartesianProduct", r"Join", r"Window",
+                  r"Exchange hashpartitioning"],
+        hinted_broadcasts=0,
     ),
     # round-15 tokenizer envelopes: the stats pair re-run the parent's
     # distributed Arrow encode (MapInPandas) and join the n_chars
@@ -1472,7 +1479,7 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Join", r"Window"],
         hinted_broadcasts=0,
     ),
-    # UNCACHED NB builder frame (consumers plan it as a cached leaf):
+    # NB builder frame (consumers plan it as a stored leaf):
     # model table + the 1-row constant frames (sample-agg, consts
     # feeding the model, consts feeding the final projection — the
     # consts subtree materializes per consumer): no driver .first()
@@ -1482,7 +1489,7 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"SortMergeJoin", r"Window"],
         hinted_broadcasts=5,
     ),
-    # UNCACHED lang-id per-doc trigram count frame: one explode, one
+    # lang-id per-doc trigram count frame: one explode, one
     # partial-agged shuffle — no join, no window, nothing broadcast
     "langid_dp_builder": dict(
         must=[r"Generate", r"partial_"],
@@ -1504,17 +1511,17 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         hinted_broadcasts=0,
     ),
-    # UNCACHED CC edge build: posting self-join (equi on the shingle
-    # hash), two size equi-joins, threshold filter — no cartesian
+    # CC edge build over a fresh shingling: posting self-join (equi on
+    # the shingle hash), two size equi-joins, threshold filter — no
+    # cartesian
     "cc_edges_builder": dict(
         must=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", r"xxhash64"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         hinted_broadcasts=0,
     ),
-    # UNCACHED verified-pair builder (r17: consumers plan the keyed-
-    # cached pair frame as an InMemoryTableScan leaf): the verify join
-    # with the size-GATED broadcast hints — the policy that used to
-    # live on the dedup_ngram_jaccard entry itself
+    # verified-pair builder (dedup_ngram_jaccard and its consumers
+    # plan the stored pair frame as a Scan ExistingRDD leaf): the
+    # verify join with the size-GATED broadcast hints
     "ngram_pairs_builder": dict(
         must=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
@@ -1523,53 +1530,8 @@ AUDITS: dict[str, dict] = {
 }
 
 
-def _lm_scored_builder(spark, sf_dir):
-    # evict the cached frame first: once any consumer has cached the
-    # scored frame, the CacheManager rewrites every logically-equal
-    # plan (this fresh build included) to the InMemoryRelation, hiding
-    # the hints this entry exists to police
-    from mr_python_spark.functions import lm
-
-    evict("lm.scored")
-    return lm._lm_scored(spark, sf_dir)
-
-
-def _quality_fp_builder(spark, sf_dir):
-    # same eviction rule as the LM builder (see above)
-    from mr_python_spark.functions import pipeline
-
-    evict("pipeline.quality_fp")
-    return pipeline._quality_fp(spark, sf_dir)
-
-
-def _ml_scored_builder(spark, sf_dir):
-    # same eviction rule as the LM builder (see above); the GENERAL-LM
-    # cache is deliberately left warm — its model hints are policed by
-    # lm_scored_builder, so this entry isolates the IN-DOMAIN hints
-    from mr_python_spark.functions import lm
-
-    evict("lm.ml_scored")
-    return lm._ml_scored(spark, sf_dir)
-
-
-def _nb_scored_builder(spark, sf_dir):
-    # same eviction rule as the LM builder (see above)
-    from mr_python_spark.functions import lm
-
-    evict("lm.nb_scored")
-    return lm._nb_scored(spark, sf_dir)
-
-
-def _langid_dp_builder(spark, sf_dir):
-    # same eviction rule as the LM builder (see above)
-    from mr_python_spark.functions import text
-
-    evict("text.langid_dp")
-    return text._langid_dp(spark, sf_dir)
-
-
 def _pagerank_round_builder(spark, sf_dir):
-    # one iteration of the kernel over the (cached-leaf) edge frame —
+    # one iteration of the kernel over the (stored-leaf) edge frame —
     # the joins/aggregate above the leaf are what this entry polices
     from pyspark.sql import functions as F
 
@@ -1585,8 +1547,7 @@ def _pagerank_round_builder(spark, sf_dir):
 
 def _cc_shingle_sets(spark, sf_dir):
     # the uncached shingling (docs= bypasses the dedup.shingles cache),
-    # so the audited plan shows the xxhash64 pass, not a cached leaf
-    from mr_python_spark import dedup
+    # so the audited plan shows the xxhash64 pass, not a stored leaf
     from mr_python_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1595,8 +1556,6 @@ def _cc_shingle_sets(spark, sf_dir):
 
 def _cc_round_builder(spark, sf_dir):
     from pyspark.sql import functions as F
-
-    from mr_python_spark import dedup
 
     edges = dedup._cc_edges(_cc_shingle_sets(spark, sf_dir))
     bidir = edges.union(
@@ -1611,34 +1570,23 @@ def _cc_round_builder(spark, sf_dir):
 
 
 def _cc_edges_builder(spark, sf_dir):
-    from mr_python_spark import dedup
-
     return dedup._cc_edges(_cc_shingle_sets(spark, sf_dir))
 
 
-def _ngram_pairs_builder(spark, sf_dir):
-    # evict the cached pair frame first (same rule as the LM builder):
-    # once any consumer materialized it, the CacheManager rewrites this
-    # logically-equal fresh build to the InMemoryRelation, hiding the
-    # verify-join hints this entry polices
-    from mr_python_spark import dedup
-
-    evict("dedup.ngram_pairs")
-    return dedup.dedup_ngram_jaccard(spark, sf_dir)
-
-
-#: pseudo-entries auditing UNCACHED builder frames that registry
-#: queries only ever consume through a keyed cache
+#: pseudo-entries auditing the builders whose frames registry queries
+#: only ever read as a stored ``Scan ExistingRDD`` leaf
 FRAME_BUILDERS = {
-    "lm_scored_builder": _lm_scored_builder,
-    "quality_fp_builder": _quality_fp_builder,
-    "ml_scored_builder": _ml_scored_builder,
-    "nb_scored_builder": _nb_scored_builder,
-    "langid_dp_builder": _langid_dp_builder,
+    "lm_scored_builder": lm._lm_scored,
+    "quality_fp_builder": pipeline._quality_fp,
+    "ml_scored_builder": lm._ml_scored,
+    "nb_scored_builder": lm._nb_scored,
+    "langid_dp_builder": text._langid_dp,
     "pagerank_round_builder": _pagerank_round_builder,
     "cc_round_builder": _cc_round_builder,
     "cc_edges_builder": _cc_edges_builder,
-    "ngram_pairs_builder": _ngram_pairs_builder,
+    "ngram_pairs_builder": dedup._ngram_pairs,
+    "phash_builder": multimodal._phash_hashes,
+    "resize_builder": multimodal._resize_stats,
 }
 
 
@@ -1651,14 +1599,11 @@ def formatted_plan(df) -> str:
 def count_broadcast_exchanges(df) -> int:
     """Count BroadcastExchangeExec nodes in a DataFrame's physical plan.
 
-    Walks the JVM plan tree instead of grepping the formatted string:
-    ``InMemoryTableScan`` is a LEAF of the plan tree, so a cached
-    frame's stored plan — fixed at materialization time, possibly with
-    stats-based broadcasting enabled by an earlier audit entry's
-    must-check derivation — is excluded, which keeps the hint count
-    order-independent (the formatted string prints cached plans inline
-    and made the old textual count flap between runs).
-    ``AdaptiveSparkPlan`` is unwrapped to its current physical plan.
+    Walks the JVM plan tree instead of grepping the formatted string,
+    so only operators of this plan count.  A stored registry frame is
+    a ``Scan ExistingRDD`` leaf: the hints of the plan that built it
+    are policed on its builder entry.  ``AdaptiveSparkPlan`` is
+    unwrapped to its current physical plan.
     """
 
     def walk(node) -> int:

@@ -20,15 +20,18 @@ cold/warm probe evicted one family's root caches and kept the caches
 upstream of them warm; its record is ``docs/cold_warm_r17.json``.)
 
 :func:`fixture` is the one replica recipe the probes in ``tools/``
-share.
+share; :func:`derived` keys every other generated probe input by its
+source and recipe.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
+import zlib
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -189,6 +192,24 @@ def fixture(src: str, replicas: int, tables, root: str = DATA) -> str:
         out = os.path.join(dst, f"{t}.parquet")
         con.sql(f"COPY ({query}) TO '{out}.tmp' (FORMAT parquet)")
         os.replace(f"{out}.tmp", out)
+    return dst
+
+
+def derived(src: str, recipe: str, make=None) -> str:
+    """The directory of the inputs that ``recipe`` derives from ``src``:
+    ``<DATA>/<basename(src)>_<crc32(recipe)>``, so another source or
+    another recipe never reuses it.  If it does not exist yet and
+    ``make`` is given, ``make(tmp)`` writes the inputs into a
+    temporary directory that is then renamed, so a directory that
+    exists is whole."""
+    name = f"{os.path.basename(src.rstrip('/'))}_{zlib.crc32(recipe.encode()):08x}"
+    dst = os.path.join(DATA, name)
+    if make is not None and not os.path.isdir(dst):
+        tmp = f"{dst}.tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        make(tmp)
+        os.replace(tmp, dst)
     return dst
 
 

@@ -61,24 +61,25 @@ BOILER24 = (
 FIXTURES = {"boiler3": BOILER3, "boiler24": BOILER24}
 
 
-def generate(label: str, boiler: str, sf1: str) -> str:
-    dst = os.path.join(REPO, ".data", f"skew_{label}")
-    out = os.path.join(dst, "documents.parquet")
-    if os.path.exists(out):
-        return dst
+def generate(boiler: str, sf1: str) -> str:
+    """``sf1``'s documents with ``boiler`` prepended to every text, made
+    once per source and boilerplate by :func:`tools.probe.derived`."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    os.makedirs(dst, exist_ok=True)
-    t = pq.read_table(os.path.join(sf1, "documents.parquet"))
-    text = pc.binary_join_element_wise(
-        pa.array([boiler] * t.num_rows), t.column("text").combine_chunks(), " "
-    )
-    cols = {n: t.column(n) for n in t.column_names}
-    cols["text"] = text
-    pq.write_table(pa.table(cols), out)
-    return dst
+    from tools.probe import derived
+
+    def make(dst: str) -> None:
+        t = pq.read_table(os.path.join(sf1, "documents.parquet"))
+        text = pc.binary_join_element_wise(
+            pa.array([boiler] * t.num_rows), t.column("text").combine_chunks(), " "
+        )
+        cols = {n: t.column(n) for n in t.column_names}
+        cols["text"] = text
+        pq.write_table(pa.table(cols), os.path.join(dst, "documents.parquet"))
+
+    return derived(sf1, f"documents prefixed with {boiler!r}", make)
 
 
 def probe_fixture(spark, label: str, sf_dir: str, n_boiler_words: int) -> dict:
@@ -331,7 +332,7 @@ def main() -> None:
     spark = get_spark("skew_dedup_probe")
     result = {"fixtures": []}
     for label, boiler in FIXTURES.items():
-        sf_dir = generate(label, boiler, sf1)
+        sf_dir = generate(boiler, sf1)
         rep = probe_fixture(
             spark, label, sf_dir, n_boiler_words=len(boiler.split())
         )

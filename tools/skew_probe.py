@@ -4,7 +4,7 @@
 only on the driver fixtures, whose l_returnflag distribution is
 near-uniform — correct, but silent on whether salting actually helps
 under skew.  This tool builds a **pathologically skewed** lineitem
-under ``<repo>/.data/skew`` (sf0.1 facts replicated 10×, l_returnflag
+under ``<repo>/.data`` (sf0.1 facts replicated 10×, l_returnflag
 reassigned 90% / 9% / 1% by a deterministic row hash — the hot-key
 shape of a zipfian key at 3-key cardinality), then
 
@@ -23,7 +23,7 @@ shape of a zipfian key at 3-key cardinality), then
 
 Writes ``docs/skew_probe.json``.  Usage::
 
-    python tools/skew_probe.py            # generate (once) + gate + probe
+    python tools/skew_probe.py   # generate (once per source and recipe) + gate + probe
 """
 
 from __future__ import annotations
@@ -36,38 +36,41 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools.probe import derived  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
-DST = os.path.join(REPO, ".data", "skew")
 REPLICAS = 10
 N_SALT = 16
+#: the skewed lineitem: the facts replicated REPLICAS times, with a
+#: 90/9/1 hot-key reassignment on a deterministic row hash — the
+#: worst-case grouped/join key at cardinality 3 (a zipfian head
+#: compressed to three ranks)
+LINEITEM = f"""
+SELECT l_orderkey + i * {{offset}} AS l_orderkey,
+       l_partkey, l_suppkey, l_linenumber, l_quantity,
+       l_extendedprice, l_discount, l_tax,
+       CASE WHEN hash(l_orderkey + i * {{offset}}, l_linenumber) % 100 < 90
+            THEN 'N'
+            WHEN hash(l_orderkey + i * {{offset}}, l_linenumber) % 100 < 99
+            THEN 'A'
+            ELSE 'R' END AS l_returnflag,
+       l_linestatus, l_shipdate
+FROM '{SRC}/lineitem.parquet' CROSS JOIN range({REPLICAS}) t(i)
+"""
+#: the skewed fixture, keyed by its source and the lineitem recipe
+DST = derived(SRC, LINEITEM)
 
 
-def generate() -> None:
+def generate(dst: str) -> None:
     import duckdb
 
-    os.makedirs(DST, exist_ok=True)
     con = duckdb.connect()
     offset = con.sql(
         f"SELECT MAX(o_orderkey) + 1 FROM '{SRC}/orders.parquet'"
     ).fetchone()[0]
-    # 90/9/1 hot-key reassignment on a deterministic row hash: the
-    # worst-case grouped/join key at cardinality 3 (a zipfian head
-    # compressed to three ranks)
     con.sql(
-        f"""
-        COPY (
-          SELECT l_orderkey + i * {offset} AS l_orderkey,
-                 l_partkey, l_suppkey, l_linenumber, l_quantity,
-                 l_extendedprice, l_discount, l_tax,
-                 CASE WHEN hash(l_orderkey + i * {offset}, l_linenumber) % 100 < 90
-                      THEN 'N'
-                      WHEN hash(l_orderkey + i * {offset}, l_linenumber) % 100 < 99
-                      THEN 'A'
-                      ELSE 'R' END AS l_returnflag,
-                 l_linestatus, l_shipdate
-          FROM '{SRC}/lineitem.parquet' CROSS JOIN range({REPLICAS}) t(i)
-        ) TO '{DST}/lineitem.parquet' (FORMAT parquet)
-        """
+        f"COPY ({LINEITEM.format(offset=offset)}) "
+        f"TO '{dst}/lineitem.parquet' (FORMAT parquet)"
     )
     # the harness mounts all ten tables; copy the rest unchanged
     for tbl in (
@@ -75,7 +78,7 @@ def generate() -> None:
     ).split():
         con.sql(
             f"COPY (SELECT * FROM '{SRC}/{tbl}.parquet') "
-            f"TO '{DST}/{tbl}.parquet' (FORMAT parquet)"
+            f"TO '{dst}/{tbl}.parquet' (FORMAT parquet)"
         )
 
 
@@ -179,9 +182,7 @@ def probe() -> dict:
 def main() -> None:
     import duckdb
 
-    if not os.path.exists(os.path.join(DST, "lineitem.parquet")):
-        print("generating skewed fixture ...", flush=True)
-        generate()
+    derived(SRC, LINEITEM, generate)
     stats = duckdb.sql(
         f"""
         SELECT l_returnflag, COUNT(*) AS n

@@ -41,52 +41,53 @@ import uuid
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-STAGE = os.path.join(REPO, ".data", "stream_rate_stage")
 N_FILES = 24
 FILES_PER_TRIGGER = 2
 
 
 def stage_files(sf_dir: str, sentinel: bool) -> str:
     """Event-time-sorted chunks with ascending mtimes (+ optional
-    far-future sentinel chunk last, for event-time-timeout flushing)."""
+    far-future sentinel chunk last, for event-time-timeout flushing),
+    staged once per source and recipe by :func:`tools.probe.derived`."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    dst = STAGE + ("_sent" if sentinel else "")
-    if os.path.exists(os.path.join(dst, "part_000.parquet")):
-        return dst
-    os.makedirs(dst, exist_ok=True)
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    t = t.sort_by("ts")
-    n = t.num_rows
-    base_mtime = time.time() - 3600
-    step = (n + N_FILES - 1) // N_FILES
-    for k in range(N_FILES):
-        chunk = t.slice(k * step, step)
-        p = os.path.join(dst, f"part_{k:03d}.parquet")
-        pq.write_table(chunk, p)
-        os.utime(p, (base_mtime + k, base_mtime + k))
-    if sentinel:
-        ts_max = pc.max(t["ts"]).as_py()
-        far = ts_max + __import__("datetime").timedelta(days=1)
-        etypes = pc.unique(t["event_type"]).to_pylist()
-        cols = {
-            "event_id": [-(i + 1) for i in range(len(etypes))],
-            "ts": [far] * len(etypes),
-            "user_id": [-(i + 1) for i in range(len(etypes))],
-            "event_type": etypes,
-            "value": [0.0] * len(etypes),
-            "props": ["{}"] * len(etypes),
-        }
-        rows = pa.table(
-            {f.name: pa.array(cols[f.name], type=f.type) for f in t.schema},
-            schema=t.schema,
-        )
-        p = os.path.join(dst, "part_sentinel.parquet")
-        pq.write_table(rows, p)
-        os.utime(p, (base_mtime + N_FILES + 1, base_mtime + N_FILES + 1))
-    return dst
+    from tools.probe import derived
+
+    def make(dst: str) -> None:
+        t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+        t = t.sort_by("ts")
+        n = t.num_rows
+        base_mtime = time.time() - 3600
+        step = (n + N_FILES - 1) // N_FILES
+        for k in range(N_FILES):
+            chunk = t.slice(k * step, step)
+            p = os.path.join(dst, f"part_{k:03d}.parquet")
+            pq.write_table(chunk, p)
+            os.utime(p, (base_mtime + k, base_mtime + k))
+        if sentinel:
+            ts_max = pc.max(t["ts"]).as_py()
+            far = ts_max + __import__("datetime").timedelta(days=1)
+            etypes = pc.unique(t["event_type"]).to_pylist()
+            cols = {
+                "event_id": [-(i + 1) for i in range(len(etypes))],
+                "ts": [far] * len(etypes),
+                "user_id": [-(i + 1) for i in range(len(etypes))],
+                "event_type": etypes,
+                "value": [0.0] * len(etypes),
+                "props": ["{}"] * len(etypes),
+            }
+            rows = pa.table(
+                {f.name: pa.array(cols[f.name], type=f.type) for f in t.schema},
+                schema=t.schema,
+            )
+            p = os.path.join(dst, "part_sentinel.parquet")
+            pq.write_table(rows, p)
+            os.utime(p, (base_mtime + N_FILES + 1, base_mtime + N_FILES + 1))
+
+    recipe = f"events by ts in {N_FILES} chunks, sentinel={sentinel}"
+    return derived(sf_dir, recipe, make)
 
 
 def rate_limited_stream(spark, stage_dir: str):

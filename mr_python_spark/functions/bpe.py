@@ -10,6 +10,12 @@ closure and every document encodes in an Arrow-batched ``mapInPandas``
 pass with a per-batch word cache (Zipf makes the cache hit rate high —
 each distinct word BPE-encodes once per batch).
 
+The sample and the encode pass are the whole subword family's: the
+unigram-LM trainer (functions/unigram.py) reads the same
+``tokenizer.word_freq`` registry entry (:func:`sample_word_freq`), and
+every per-document stats query — BPE, unigram and their bake-off —
+is one :func:`token_stats` pass with one encoder per model.
+
 Determinism: training picks the most frequent pair each round with
 ties broken by the lexicographically smallest pair, and greedy
 encoding merges the lowest-rank adjacent pair with ties broken by the
@@ -111,38 +117,46 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
+def sample_word_freq(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """The word-frequency table both subword trainers learn from, cached
+    per file identity as ``tokenizer.word_freq``: stride-
+    ``BPE_SAMPLE_STRIDE`` docs, ``ORDER BY doc_id LIMIT
+    BPE_SAMPLE_CAP``, word counts aggregated DISTRIBUTED (only the
+    bounded freq table reaches the driver, never the text).  The BPE
+    and unigram model entries are built on it, so evicting it evicts
+    both models."""
+
+    def build() -> dict[str, int]:
+        sample = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % BPE_SAMPLE_STRIDE == 0)
+            .orderBy("doc_id")
+            .limit(BPE_SAMPLE_CAP)
+        )
+        words = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+        rows = (
+            sample.select(F.explode(words).alias("word"))
+            .groupBy("word")
+            .agg(F.count(F.lit(1)).alias("f"))
+            .collect()
+        )
+        return {r.word: r.f for r in rows}
+
+    return corpus_cache("tokenizer.word_freq", spark, sf_dir, build)
+
+
 def trained_bpe_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[str, str]], frozenset]:
-    """``(merges, alphabet)`` for a corpus, cached per file identity
-    like the k-means/PQ models: stride-``BPE_SAMPLE_STRIDE`` docs,
-    ``ORDER BY doc_id LIMIT BPE_SAMPLE_CAP``, word-frequency aggregated
-    DISTRIBUTED (only the ≤vocab-size freq table reaches the driver,
-    never the text).  ``alphabet`` is the set of base symbols the
+    """``(merges, alphabet)`` for a corpus, trained on
+    :func:`sample_word_freq` and cached per file identity like the
+    k-means/PQ models.  ``alphabet`` is the set of base symbols the
     training sample produced (chars plus last-char+``</w>``); the full
     vocab is ``alphabet ∪ {a+b for each merge}``, which is what the
     OOV-free coverage column of :func:`bpe_token_stats` tests."""
 
     def build() -> tuple[list[tuple[str, str]], frozenset]:
-        docs = load_table(spark, sf_dir, "documents")
-        sample = (
-            docs.filter(F.col("doc_id") % BPE_SAMPLE_STRIDE == 0)
-            .orderBy("doc_id")
-            .limit(BPE_SAMPLE_CAP)
-        )
-        freq_rows = (
-            sample.select(
-                F.explode(
-                    F.filter(
-                        F.split(F.lower("text"), r"\s+"), lambda t: t != ""
-                    )
-                ).alias("word")
-            )
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .collect()
-        )
-        wf = {r.word: r.f for r in freq_rows}
+        wf = sample_word_freq(spark, sf_dir)
         alphabet = set()
         for w in wf:
             alphabet.update(w[:-1])
@@ -182,15 +196,69 @@ def bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-_BPE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("n_bpe_tokens", T.IntegerType()),
-        T.StructField("n_unique_bpe_tokens", T.IntegerType()),
-        T.StructField("n_oov_free_words", T.IntegerType()),
-    ]
-)
+def bpe_encoder(ranks: dict[tuple[str, str], int], vocab):
+    """``word -> (tokens, oov_free)`` under the merge ranks; oov_free
+    means every final symbol is in ``vocab``."""
+
+    def encode(w: str) -> tuple[list[str], bool]:
+        toks = encode_word(w, ranks)
+        return toks, all(t in vocab for t in toks)
+
+    return encode
+
+
+def token_stats(spark: SparkSession, sf_dir: str, encoders: dict) -> DataFrame:
+    """Per-document subword counts under one or more tokenizers, in ONE
+    Arrow-batched ``mapInPandas`` pass over the documents' text.
+
+    ``encoders`` maps a column prefix ``p`` to ``word -> (tokens,
+    in_vocab)``.  Each document is word-split once and gets
+    ``(doc_id, n_words)`` plus, per encoder in order, ``p_tokens``,
+    ``p_unique`` (distinct tokens) and ``p_oov_free_words`` (words
+    whose encoding never leaves the model vocab).  The models ship by
+    closure, and a word cache per encoder, kept across a task's
+    batches, makes the cost per distinct word, not per occurrence (Zipf
+    keeps the hit rate high).  Every output is an exact integer.
+    """
+    from typing import Iterator
+
+    import pandas as pd
+
+    cols = [f"{p}_{c}" for p in encoders for c in ("tokens", "unique", "oov_free_words")]
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType())]
+        + [T.StructField(c, T.IntegerType()) for c in ["n_words", *cols]]
+    )
+
+    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        caches = [({}, encode) for encode in encoders.values()]
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            n_words, *counts = [[] for _ in range(1 + len(cols))]
+            for text in pdf["text"]:
+                ws = _words(text)
+                n_words.append(len(ws))
+                for k, (cache, encode) in enumerate(caches):
+                    toks, n_cov = [], 0
+                    for w in ws:
+                        hit = cache.get(w)
+                        if hit is None:
+                            hit = cache[w] = encode(w)
+                        toks += hit[0]
+                        n_cov += hit[1]
+                    counts[3 * k].append(len(toks))
+                    counts[3 * k + 1].append(len(set(toks)))
+                    counts[3 * k + 2].append(n_cov)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "n_words": n_words, **dict(zip(cols, counts))}
+            )
+
+    docs = spread(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        parts=scan_partitions(spark, sf_dir, "documents"),
+    )
+    return docs.mapInPandas(stats, schema)
 
 
 @register("bpe_token_stats")  # udf-oracle in tools/udf_oracles.py
@@ -204,64 +272,18 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     position).
 
     The token-budget accounting step of a pipeline (how many subword
-    tokens does this corpus contribute?).  Encoding is an Arrow-batched
-    ``mapInPandas`` pass; the merge ranks (≤ ``BPE_NUM_MERGES`` pairs)
-    ship by closure, and a per-batch word→tokens cache makes the cost
-    per distinct word, not per occurrence.  All outputs are exact
-    integers — bit-deterministic, gated against an independent DuckDB
-    UDF reimplementation of the full train+encode pipeline.
+    tokens does this corpus contribute?).  Encoding is one
+    :func:`token_stats` pass; the merge ranks (≤ ``BPE_NUM_MERGES``
+    pairs) ship by closure.  All outputs are exact integers —
+    bit-deterministic, gated against an independent DuckDB UDF
+    reimplementation of the full train+encode pipeline.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     merges, alphabet = trained_bpe_model(spark, sf_dir)
     ranks = {p: i for i, p in enumerate(merges)}
-    vocab = alphabet | {a + b for a, b in merges}
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # cache: word -> (tokens, oov_free); keyed per distinct word
-        cache: dict[str, tuple[list[str], bool]] = {}
-
-        def enc(w: str) -> tuple[list[str], bool]:
-            hit = cache.get(w)
-            if hit is None:
-                toks = encode_word(w, ranks)
-                hit = (toks, all(t in vocab for t in toks))
-                cache[w] = hit
-            return hit
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            n_words, n_tok, n_uniq, n_cov = [], [], [], []
-            for text in pdf["text"]:
-                ws = _words(text)
-                toks: list[str] = []
-                cov = 0
-                for w in ws:
-                    wt, ok = enc(w)
-                    toks.extend(wt)
-                    cov += ok
-                n_words.append(len(ws))
-                n_tok.append(len(toks))
-                n_uniq.append(len(set(toks)))
-                n_cov.append(cov)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_words": n_words,
-                    "n_bpe_tokens": n_tok,
-                    "n_unique_bpe_tokens": n_uniq,
-                    "n_oov_free_words": n_cov,
-                }
-            )
-
-    docs = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        parts=scan_partitions(spark, sf_dir, "documents"),
+    encode = bpe_encoder(ranks, alphabet | {a + b for a, b in merges})
+    return token_stats(spark, sf_dir, {"bpe": encode}).toDF(
+        "doc_id", "n_words", "n_bpe_tokens", "n_unique_bpe_tokens", "n_oov_free_words"
     )
-    return docs.mapInPandas(stats, _BPE_STATS_SCHEMA)
 
 
 @register("tokenizer_fertility_report")  # udf-oracle in tools/udf_oracles.py
@@ -356,7 +378,8 @@ def _bool_and(col):
     return F.min(col.cast("boolean"))
 
 
-_BPE_STATS_ENVELOPE_ORACLE = r"""
+#: the model-free oracle of both per-document stats envelopes
+STATS_ENVELOPE_ORACLE = r"""
 WITH d AS (
   SELECT doc_id,
          len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''))
@@ -373,37 +396,42 @@ FROM d
 """
 
 
-@register("bpe_stats_envelope", _BPE_STATS_ENVELOPE_ORACLE)
-def bpe_stats_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-oracle envelope for :func:`bpe_token_stats` (whose trained
-    encode DuckDB can only replay via Python UDFs): runs the parent's
-    full Arrow encode pass and re-shapes each PER-DOCUMENT row into a
-    column the model-free oracle pins exactly (``n_words`` — the same
-    whitespace tokenization on both engines) plus four invariant flags
-    carrying the BPE outputs: fertility >= 1 (every word encodes to
-    >= 1 subword), tokens <= n_chars (merges only shrink symbol
-    counts), distinct tokens <= tokens, and 0 <= OOV-free words <=
-    words.  Per-doc granularity makes the hash gate row-strong (one
-    broken doc flips its own row); the full token-count gate stays on
-    the parent's udf-oracle in the sweep.  Window policy: udf-tier
-    entries never rotate into the driver window — their envelopes do
-    (docs/COVERAGE.md).
+def stats_envelope(
+    spark: SparkSession, sf_dir: str, stats: DataFrame, tokens: str, unique: str
+) -> DataFrame:
+    """SQL-oracle envelope of a per-document subword stats frame (whose
+    trained encode DuckDB can only replay via Python UDFs): each
+    PER-DOCUMENT row re-shaped into a column the model-free oracle pins
+    exactly (``n_words`` — the same whitespace tokenization on both
+    engines) plus four invariant flags carrying the encoder's outputs:
+    fertility >= 1 (every word encodes to >= 1 token), tokens <=
+    n_chars (every token is >= 1 char of its word), distinct tokens <=
+    tokens, and 0 <= OOV-free words <= words.  Per-doc granularity
+    makes the hash gate row-strong (one broken doc flips its own row);
+    the full token-count gate stays on the stats query's udf-oracle in
+    the sweep.  ``tokens`` and ``unique`` name ``stats``' token and
+    distinct-token columns.
     """
-    stats = bpe_token_stats(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    n_tok, n_words, n_cov = F.col(tokens), F.col("n_words"), F.col("n_oov_free_words")
     return stats.join(docs, "doc_id").select(
         "doc_id",
         "n_words",
-        (F.col("n_bpe_tokens") >= F.col("n_words")).alias("fertility_ge_one"),
-        (F.col("n_bpe_tokens") <= F.col("n_chars")).alias("tokens_le_chars"),
-        (F.col("n_unique_bpe_tokens") <= F.col("n_bpe_tokens")).alias(
-            "unique_le_tokens"
-        ),
-        (
-            (F.col("n_oov_free_words") >= 0)
-            & (F.col("n_oov_free_words") <= F.col("n_words"))
-        ).alias("coverage_valid"),
+        (n_tok >= n_words).alias("fertility_ge_one"),
+        (n_tok <= F.col("n_chars")).alias("tokens_le_chars"),
+        (F.col(unique) <= n_tok).alias("unique_le_tokens"),
+        ((n_cov >= 0) & (n_cov <= n_words)).alias("coverage_valid"),
     )
+
+
+@register("bpe_stats_envelope", STATS_ENVELOPE_ORACLE)
+def bpe_stats_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`stats_envelope` of :func:`bpe_token_stats`: runs its full
+    Arrow encode pass.  Window policy: udf-tier entries never rotate
+    into the driver window — their envelopes do (docs/COVERAGE.md).
+    """
+    stats = bpe_token_stats(spark, sf_dir)
+    return stats_envelope(spark, sf_dir, stats, "n_bpe_tokens", "n_unique_bpe_tokens")
 
 
 _BPE_VOCAB_ENVELOPE_ORACLE = """

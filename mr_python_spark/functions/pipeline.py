@@ -1650,15 +1650,8 @@ def quality_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize + stopword + dup-hash scan per (session, corpus identity)
     instead of re-scoring the corpus per query.
     """
-    # stored repartitioned by q_fp, one build-time shuffle.  The
-    # checkpoint does not keep the hash partitioning, so the ablation
-    # curve's rank window re-shuffles: 0.36-0.40 s warm at sf0.1 on 4
-    # cores, with or without the repartition
     return corpus_cache(
-        "pipeline.quality_fp",
-        spark,
-        sf_dir,
-        lambda: _quality_fp(spark, sf_dir).repartition("q_fp"),
+        "pipeline.quality_fp", spark, sf_dir, lambda: _quality_fp(spark, sf_dir)
     )
 
 

@@ -5,10 +5,12 @@ from a rich seed vocabulary and PRUNES, then segments each word by
 lowest total piece cost).
 
 Training is Viterbi-EM (the hard-EM simplification of Kudo 2018) on
-the SAME deterministic bounded sample as the BPE trainer (stride
-subset, ``ORDER BY doc_id LIMIT cap`` — constant driver memory at any
-corpus size), and encoding is the SAME Arrow-batched ``mapInPandas``
-shape with a per-batch word cache.  The model ships to executors by
+the BPE trainer's own sample: both models read the one
+``tokenizer.word_freq`` registry entry (``bpe.sample_word_freq``:
+stride subset, ``ORDER BY doc_id LIMIT cap`` — constant driver memory
+at any corpus size), so a session that trains both runs the sample
+job once.  Encoding is the same ``bpe.token_stats`` pass, which the
+bake-off runs once for both models.  The model ships to executors by
 closure (≤ ``UNIGRAM_VOCAB`` piece→cost entries).
 
 Determinism — the engine's no-float-logs recipe throughout:
@@ -35,15 +37,19 @@ BPE/unigram tokenizer pair (functions/bpe.py is the other half).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mr_python_spark.functions.bpe import (
-    BPE_SAMPLE_CAP,
-    BPE_SAMPLE_STRIDE,
-    _words,
+    STATS_ENVELOPE_ORACLE,
+    bpe_encoder,
+    sample_word_freq,
+    stats_envelope,
+    token_stats,
+    trained_bpe_model,
 )
 from mr_python_spark.registry import register
-from mr_python_spark.session import corpus_cache, load_table, scan_partitions, spread
+from mr_python_spark.session import corpus_cache, load_table
 
 #: longest piece considered anywhere (seeding, Viterbi window)
 UNIGRAM_MAX_PIECE = 8
@@ -175,35 +181,13 @@ def train_unigram(word_freq: dict[str, int]):
 
 
 def trained_unigram(spark: SparkSession, sf_dir: str):
-    """(pieces, counts, costs) for a corpus, cached per file identity
-    (the BPE/k-means/PQ model-cache pattern): stride-``BPE_SAMPLE_
-    STRIDE`` docs, ``ORDER BY doc_id LIMIT BPE_SAMPLE_CAP``,
-    word-frequency aggregated DISTRIBUTED — only the bounded freq
-    table reaches the driver, never the text."""
-    from pyspark.sql import functions as F
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        sample = (
-            docs.filter(F.col("doc_id") % BPE_SAMPLE_STRIDE == 0)
-            .orderBy("doc_id")
-            .limit(BPE_SAMPLE_CAP)
-        )
-        freq_rows = (
-            sample.select(
-                F.explode(
-                    F.filter(
-                        F.split(F.lower("text"), r"\s+"), lambda t: t != ""
-                    )
-                ).alias("word")
-            )
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .collect()
-        )
-        return train_unigram({r.word: r.f for r in freq_rows})
-
-    return corpus_cache("unigram.model", spark, sf_dir, build)
+    """(pieces, counts, costs) for a corpus, trained on the BPE
+    trainer's own sample entry (:func:`~mr_python_spark.functions.bpe.
+    sample_word_freq`) and cached per file identity (the BPE/k-means/PQ
+    model-cache pattern)."""
+    return corpus_cache(
+        "unigram.model", spark, sf_dir, lambda: train_unigram(sample_word_freq(spark, sf_dir))
+    )
 
 
 @register("unigram_vocab")  # deterministic piece table; udf-oracle tier
@@ -231,15 +215,16 @@ def unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-_UNIGRAM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("n_unigram_tokens", T.IntegerType()),
-        T.StructField("n_unique_pieces", T.IntegerType()),
-        T.StructField("n_oov_free_words", T.IntegerType()),
-    ]
-)
+def unigram_encoder(costs: dict[str, int]):
+    """``word -> (pieces, oov_free)`` under ``costs``; oov_free means
+    the Viterbi path never took the single-char UNK fallback (every
+    piece is in the vocab)."""
+
+    def encode(w: str) -> tuple[list[str], bool]:
+        toks = _viterbi(w, costs)
+        return toks, all(t in costs for t in toks)
+
+    return encode
 
 
 @register("unigram_token_stats")  # udf-oracle in tools/udf_oracles.py
@@ -251,64 +236,16 @@ def unigram_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bpe_token_stats``; comparing the two is exactly the
     BPE-vs-unigram evaluation a tokenizer bake-off runs).
 
-    Encoding is an Arrow-batched ``mapInPandas`` pass; the piece→cost
-    model (≤ UNIGRAM_VOCAB entries) ships by closure and a per-batch
-    word→segmentation cache makes the cost per distinct word, not per
-    occurrence.  All outputs are exact integers — bit-deterministic,
-    gated against an independent DuckDB UDF reimplementation of the
-    full train+encode pipeline.
+    Encoding is the shared :func:`~mr_python_spark.functions.bpe.
+    token_stats` pass; the piece→cost model (≤ UNIGRAM_VOCAB entries)
+    ships by closure.  All outputs are exact integers —
+    bit-deterministic, gated against an independent DuckDB UDF
+    reimplementation of the full train+encode pipeline.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     _, _, costs = trained_unigram(spark, sf_dir)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # cache: word -> (pieces, oov_free); oov_free means the Viterbi
-        # path never took the single-char UNK fallback (every piece is
-        # in the trained vocab)
-        cache: dict[str, tuple[list[str], bool]] = {}
-
-        def seg(w: str) -> tuple[list[str], bool]:
-            hit = cache.get(w)
-            if hit is None:
-                toks = _viterbi(w, costs)
-                hit = (toks, all(t in costs for t in toks))
-                cache[w] = hit
-            return hit
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            n_words, n_tok, n_uniq, n_cov = [], [], [], []
-            for text in pdf["text"]:
-                ws = _words(text)
-                toks: list[str] = []
-                cov = 0
-                for w in ws:
-                    wt, ok = seg(w)
-                    toks.extend(wt)
-                    cov += ok
-                n_words.append(len(ws))
-                n_tok.append(len(toks))
-                n_uniq.append(len(set(toks)))
-                n_cov.append(cov)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_words": n_words,
-                    "n_unigram_tokens": n_tok,
-                    "n_unique_pieces": n_uniq,
-                    "n_oov_free_words": n_cov,
-                }
-            )
-
-    docs = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        parts=scan_partitions(spark, sf_dir, "documents"),
+    return token_stats(spark, sf_dir, {"unigram": unigram_encoder(costs)}).toDF(
+        "doc_id", "n_words", "n_unigram_tokens", "n_unique_pieces", "n_oov_free_words"
     )
-    return docs.mapInPandas(stats, _UNIGRAM_STATS_SCHEMA)
 
 
 # --- tokenizer bake-off (BPE vs unigram, shared sample posture) --------
@@ -321,8 +258,6 @@ def budgeted_bpe_model(spark: SparkSession, sf_dir: str):
     the first K merges of the trained table (greedy BPE training is
     sequential, so the K-prefix IS ``train_bpe(wf, K)`` — no retrain)
     plus the full sample alphabet."""
-    from mr_python_spark.functions.bpe import trained_bpe_model
-
     merges, alphabet = trained_bpe_model(spark, sf_dir)
     b = merges[:BAKEOFF_EXTRA_PIECES]
     return {p: i for i, p in enumerate(b)}, alphabet | {x + y for x, y in b}
@@ -341,79 +276,6 @@ def budgeted_unigram_costs(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     return {p: _piece_cost(counts[p], total, v) for p in keep}
 
 
-_BAKEOFF_FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_words", T.IntegerType()),
-        T.StructField("bpe_toks", T.IntegerType()),
-        T.StructField("bpe_cov", T.IntegerType()),
-        T.StructField("uni_toks", T.IntegerType()),
-        T.StructField("uni_cov", T.IntegerType()),
-    ]
-)
-
-
-def _fused_stats_pass(docs, bpe_enc, uni_enc) -> DataFrame:
-    """Arrow-batched per-doc stats for BOTH tokenizers in ONE pass over
-    the text (per-batch distinct-word cache per model).
-
-    This was two ``mapInPandas`` passes joined on doc_id; the fusion
-    halves the dominant costs — the corpus text crossing the Python
-    boundary and the per-doc word split — and removes the stats join
-    entirely (guide §4.1: the Python boundary is paid per column pass;
-    §2.4: one fewer exchange/broadcast).  The per-doc integers are
-    computed by the identical encode calls, so the fused frame is
-    row-for-row the old joined frame.
-    """
-    from typing import Iterator
-
-    import pandas as pd
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache_b: dict[str, tuple[int, bool]] = {}
-        cache_u: dict[str, tuple[int, bool]] = {}
-
-        def enc(w: str, cache: dict, encode) -> tuple[int, bool]:
-            hit = cache.get(w)
-            if hit is None:
-                toks, ok = encode(w)
-                hit = (len(toks), ok)
-                cache[w] = hit
-            return hit
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            n_words, b_tok, b_cov, u_tok, u_cov = [], [], [], [], []
-            for text in pdf["text"]:
-                ws = _words(text)
-                tb = cb = tu = cu = 0
-                for w in ws:
-                    nt, ok = enc(w, cache_b, bpe_enc)
-                    tb += nt
-                    cb += ok
-                    nt, ok = enc(w, cache_u, uni_enc)
-                    tu += nt
-                    cu += ok
-                n_words.append(len(ws))
-                b_tok.append(tb)
-                b_cov.append(cb)
-                u_tok.append(tu)
-                u_cov.append(cu)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_words": n_words,
-                    "bpe_toks": b_tok,
-                    "bpe_cov": b_cov,
-                    "uni_toks": u_tok,
-                    "uni_cov": u_cov,
-                }
-            )
-
-    return docs.mapInPandas(stats, _BAKEOFF_FUSED_SCHEMA)
-
-
 @register("tokenizer_bakeoff_report")  # udf-oracle in tools/udf_oracles.py
 def tokenizer_bakeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Side-by-side BPE-vs-unigram evaluation at a MATCHED vocab budget
@@ -423,8 +285,9 @@ def tokenizer_bakeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget for both models so the segmentation algorithm, not the
     vocabulary size, is what's measured).
 
-    Both models train from the SAME bounded sample posture (stride +
-    ``ORDER BY doc_id LIMIT`` cap) and are restricted to the same
+    Both models train from the SAME sample entry
+    (:func:`~mr_python_spark.functions.bpe.sample_word_freq`) and are
+    restricted to the same
     ``BAKEOFF_EXTRA_PIECES`` multi-char budget — necessary here
     because at full budget both memorize this corpus' tiny word
     inventory and every metric degenerates to 1.0.  Per language:
@@ -432,52 +295,32 @@ def tokenizer_bakeoff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     and OOV-free coverage (fraction of words whose encoding never
     leaves the model vocab) for BOTH tokenizers.
 
-    ONE fused Arrow-batched ``mapInPandas`` pass computes BOTH models'
-    per-doc stats (the text crosses the Python boundary once and each
-    doc is word-split once — this was two passes + a doc_id stats
-    join until r16-opt), one equi-join attaches the documents
-    metadata, then a |langs|-row aggregate: every sum is an exact
-    integer; each ratio is a final single IEEE division on identical
-    operands — bit-deterministic cross-engine.  At 100 TB the stats
-    pass streams (per-batch word cache per model, models ship by
-    closure), the doc_id join is an AQE-planned shuffle of narrow int
-    frames (text never shuffles), and the aggregate is partial →
-    |langs| rows.
+    ONE :func:`~mr_python_spark.functions.bpe.token_stats` pass
+    computes BOTH models' per-doc stats (the text crosses the Python
+    boundary once and each doc is word-split once), one equi-join
+    attaches the documents metadata, then a |langs|-row aggregate:
+    every sum is an exact integer; each ratio is a final single IEEE
+    division on identical operands — bit-deterministic cross-engine.
+    At 100 TB the stats pass streams (per-batch word cache per model,
+    models ship by closure), the doc_id join is an AQE-planned shuffle
+    of narrow int frames (text never shuffles), and the aggregate is
+    partial → |langs| rows.
     """
-    from pyspark.sql import functions as F
-
-    from mr_python_spark.functions.bpe import encode_word
-    from mr_python_spark.session import load_table, scan_partitions, spread
-
-    b_ranks, b_vocab = budgeted_bpe_model(spark, sf_dir)
-    u_costs = budgeted_unigram_costs(spark, sf_dir)
-
-    def bpe_enc(w: str) -> tuple[list[str], bool]:
-        toks = encode_word(w, b_ranks)
-        return toks, all(t in b_vocab for t in toks)
-
-    def uni_enc(w: str) -> tuple[list[str], bool]:
-        toks = _viterbi(w, u_costs)
-        return toks, all(t in u_costs for t in toks)
-
-    docs = load_table(spark, sf_dir, "documents")
-    text = spread(
-        docs.select("doc_id", "text"),
-        parts=scan_partitions(spark, sf_dir, "documents"),
-    )
-    fused = _fused_stats_pass(text, bpe_enc, uni_enc)
-    meta = docs.select("doc_id", "lang", "n_chars")
+    encoders = {
+        "bpe": bpe_encoder(*budgeted_bpe_model(spark, sf_dir)),
+        "unigram": unigram_encoder(budgeted_unigram_costs(spark, sf_dir)),
+    }
+    sums = [f"{p}_{c}" for p in encoders for c in ("tokens", "oov_free_words")]
+    meta = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     g = (
-        fused.join(meta, "doc_id")
+        token_stats(spark, sf_dir, encoders)
+        .join(meta, "doc_id")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_words").alias("n_words"),
             F.sum("n_chars").alias("n_chars"),
-            F.sum("bpe_toks").alias("bpe_tokens"),
-            F.sum("uni_toks").alias("unigram_tokens"),
-            F.sum("bpe_cov").alias("bpe_oov_free_words"),
-            F.sum("uni_cov").alias("unigram_oov_free_words"),
+            *(F.sum(c).alias(c) for c in sums),
         )
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
@@ -543,8 +386,6 @@ def tokenizer_bakeoff_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate stays on the parent's udf-oracle in the sweep.  Same device
     as ``tokenizer_fertility_envelope``.
     """
-    from pyspark.sql import functions as F
-
     rep = tokenizer_bakeoff_report(spark, sf_dir)
     return rep.select(
         "lang",
@@ -570,58 +411,13 @@ def tokenizer_bakeoff_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIGRAM_STATS_ENVELOPE_ORACLE = r"""
-WITH d AS (
-  SELECT doc_id,
-         len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''))
-           AS nw
-  FROM documents
-)
-SELECT doc_id,
-       CAST(nw AS INTEGER) AS n_words,
-       TRUE AS fertility_ge_one,
-       TRUE AS tokens_le_chars,
-       TRUE AS unique_le_tokens,
-       TRUE AS coverage_valid
-FROM d
-"""
-
-
-@register("unigram_stats_envelope", _UNIGRAM_STATS_ENVELOPE_ORACLE)
+@register("unigram_stats_envelope", STATS_ENVELOPE_ORACLE)
 def unigram_stats_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-oracle envelope for :func:`unigram_token_stats` (whose
-    Viterbi encode DuckDB can only replay via Python UDFs): runs the
-    parent's full Arrow encode pass and re-shapes each PER-DOCUMENT
-    row into a column the model-free oracle pins exactly (``n_words``
-    — the same whitespace tokenization on both engines) plus four
-    invariant flags carrying the Viterbi outputs: fertility >= 1
-    (every word segments to >= 1 piece), pieces <= n_chars (every
-    piece is >= 1 char of its word), distinct pieces <= pieces, and
-    0 <= OOV-free words <= words.  The BPE twin is
-    ``bpe_stats_envelope``; the full piece-count gate stays on the
-    parent's udf-oracle in the sweep.
-    """
-    from pyspark.sql import functions as F
-
+    """:func:`~mr_python_spark.functions.bpe.stats_envelope` of
+    :func:`unigram_token_stats`: runs its full Arrow encode pass.  The
+    BPE twin is ``bpe_stats_envelope``."""
     stats = unigram_token_stats(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return stats.join(docs, "doc_id").select(
-        "doc_id",
-        "n_words",
-        (F.col("n_unigram_tokens") >= F.col("n_words")).alias(
-            "fertility_ge_one"
-        ),
-        (F.col("n_unigram_tokens") <= F.col("n_chars")).alias(
-            "tokens_le_chars"
-        ),
-        (F.col("n_unique_pieces") <= F.col("n_unigram_tokens")).alias(
-            "unique_le_tokens"
-        ),
-        (
-            (F.col("n_oov_free_words") >= 0)
-            & (F.col("n_oov_free_words") <= F.col("n_words"))
-        ).alias("coverage_valid"),
-    )
+    return stats_envelope(spark, sf_dir, stats, "n_unigram_tokens", "n_unique_pieces")
 
 
 _UNIGRAM_VOCAB_ENVELOPE_ORACLE = """
@@ -650,8 +446,6 @@ def unigram_vocab_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     piece-for-piece equality stays on the udf-oracle + the pytest
     differential trainer.  The BPE twin is ``bpe_vocab_envelope``.
     """
-    from pyspark.sql import functions as F
-
     v = unigram_vocab(spark, sf_dir)
     n = F.count(F.lit(1))
     n_singles = F.sum((F.length("piece") == 1).cast("long"))

@@ -940,14 +940,16 @@ def _quantized_zigzag(comps, w: int, h: int, np):
     return out
 
 
-def _frame_segments(w: int, h: int, sof_marker: int) -> bytes:
-    """DQT + SOF + DHT segments shared by the two encoders."""
+def segment(marker: int, body: bytes) -> bytes:
+    """One marker segment: ``FF marker``, the big-endian length (which
+    counts itself), then ``body``."""
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
-    dqt = seg(0xDB, b"\x00" + bytes(QT_LUMA)) + seg(0xDB, b"\x01" + bytes(QT_CHROMA))
-    sof = seg(
+def _quant_and_frame(w: int, h: int, sof_marker: int) -> bytes:
+    """DQT + SOF segments of a 3-component 4:4:4 frame."""
+    dqt = segment(0xDB, b"\x00" + bytes(QT_LUMA)) + segment(0xDB, b"\x01" + bytes(QT_CHROMA))
+    return dqt + segment(
         sof_marker,
         struct.pack(">BHHB", 8, h, w, 3)
         + struct.pack(">BBB", 1, 0x11, 0)
@@ -955,9 +957,13 @@ def _frame_segments(w: int, h: int, sof_marker: int) -> bytes:
         + struct.pack(">BBB", 3, 0x11, 1),
     )
 
+
+def _frame_segments(w: int, h: int, sof_marker: int) -> bytes:
+    """DQT + SOF + DHT segments shared by the two encoders."""
+
     def dht(tc: int, th: int, table) -> bytes:
         bits, huffval = table
-        return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(huffval))
+        return segment(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(huffval))
 
     dhts = (
         dht(0, 0, HT_DC_LUMA)
@@ -965,7 +971,7 @@ def _frame_segments(w: int, h: int, sof_marker: int) -> bytes:
         + dht(0, 1, HT_DC_CHROMA)
         + dht(1, 1, HT_AC_CHROMA)
     )
-    return dqt + sof + dhts
+    return _quant_and_frame(w, h, sof_marker) + dhts
 
 
 def _frame_segments_arith(w: int, h: int) -> bytes:
@@ -973,20 +979,8 @@ def _frame_segments_arith(w: int, h: int) -> bytes:
     no Huffman tables; the DAC carries the default conditioning
     explicitly (DC tables 0/1: Cs = (U=1)<<4 | (L=0); AC tables 0/1:
     Cs = Kx = 5) so decoders exercise the marker, not the default."""
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    dqt = seg(0xDB, b"\x00" + bytes(QT_LUMA)) + seg(0xDB, b"\x01" + bytes(QT_CHROMA))
-    sof = seg(
-        0xC9,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + struct.pack(">BBB", 1, 0x11, 0)
-        + struct.pack(">BBB", 2, 0x11, 1)
-        + struct.pack(">BBB", 3, 0x11, 1),
-    )
-    dac = seg(0xCC, bytes([0x00, 0x10, 0x01, 0x10, 0x10, 5, 0x11, 5]))
-    return dqt + sof + dac
+    dac = segment(0xCC, bytes([0x00, 0x10, 0x01, 0x10, 0x10, 5, 0x11, 5]))
+    return _quant_and_frame(w, h, 0xC9) + dac
 
 
 def encode_jpeg(
@@ -1062,16 +1056,13 @@ def encode_jpeg(
                     bw.write(code, length)
     bw.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    sos = seg(
+    sos = segment(
         0xDA,
         b"\x03" + struct.pack(">BB", 1, 0x00) + struct.pack(">BB", 2, 0x11)
         + struct.pack(">BB", 3, 0x11) + b"\x00\x3f\x00",
     )
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        segment(0xDD, struct.pack(">H", restart_interval))
         if restart_interval
         else b""
     )
@@ -1110,9 +1101,6 @@ def encode_jpeg_progressive(
     by_count = -(-h // 8)
     bx_count = -(-w // 8)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
     out = bytearray(b"\xff\xd8" + _frame_segments(w, h, 0xC2))
 
     # ---- scan 1: interleaved DC, all three components ----
@@ -1131,7 +1119,7 @@ def encode_jpeg_progressive(
                 if s:
                     bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
     bw.flush()
-    out += seg(
+    out += segment(
         0xDA,
         b"\x03"
         + struct.pack(">BB", 1, 0x00)
@@ -1177,7 +1165,7 @@ def encode_jpeg_progressive(
                         code, length = ac_t[0x00]
                         bw.write(code, length)
             bw.flush()
-            out += seg(
+            out += segment(
                 0xDA,
                 b"\x01"
                 + struct.pack(">BB", ci + 1, ti)  # Td unused, Ta = ti
@@ -1248,18 +1236,15 @@ def encode_jpeg_lossless(
                     bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
     bw.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
     nf = len(planes)
-    sof = seg(
+    sof = segment(
         0xC3,
         struct.pack(">BHHB", 8, h, w, nf)
         + b"".join(struct.pack(">BBB", i + 1, 0x11, 0) for i in range(nf)),
     )
     bits, huffval = HT_DC_LUMA
-    dht = seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(huffval))
-    sos = seg(
+    dht = segment(0xC4, bytes([0x00]) + bytes(bits) + bytes(huffval))
+    sos = segment(
         0xDA,
         bytes([nf])
         + b"".join(struct.pack(">BB", i + 1, 0x00) for i in range(nf))

@@ -508,6 +508,7 @@ def encode_jpeg_arith(
         _frame_segments_arith,
         _quantized_zigzag,
         _raster_planes,
+        segment,
     )
 
     grids = _quantized_zigzag(_raster_planes(w, h, rgb, seed, np), w, h, np)
@@ -534,10 +535,7 @@ def encode_jpeg_arith(
                 _encode_ac_coefs(enc, ac_stats[ti], fixed, kx, zz)
     body = enc.flush()
 
-    def seg(marker: int, data: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(data) + 2) + data
-
-    sos = seg(
+    sos = segment(
         0xDA,
         b"\x03" + struct.pack(">BB", 1, 0x00) + struct.pack(">BB", 2, 0x11)
         + struct.pack(">BB", 3, 0x11) + b"\x00\x3f\x00",

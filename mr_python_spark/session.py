@@ -76,14 +76,10 @@ def get_spark(app_name: str = "mr_python_spark", cpus: int | None = None) -> Spa
         # 4 MB keeps them parallel AND still collapses the byte-tiny
         # frames whose scheduling latency the parallelismFirst=false
         # setting exists to remove.  A 100 TB deployment ships the
-        # 64-256 MB guidance (docs/SCALE.md) — stage inputs there dwarf
-        # the advisory so coalescing never binds.  Overridable via env
-        # so deployments apply that guidance without patching this
-        # factory; the 4m default is the local-bench tuning.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_SIZE", "4m"),
-        )
+        # 64-256 MB guidance (docs/SCALE.md) on the session it brings
+        # to ``ensure_session`` — stage inputs there dwarf the advisory
+        # so coalescing never binds.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -234,6 +234,36 @@ def test_evict_shingles_cascades_to_verified_pairs(spark):
     assert after == before
 
 
+def test_tokenizer_models_share_one_sample_entry(spark, monkeypatch):
+    """The BPE and unigram trainers read one ``tokenizer.word_freq``
+    entry: training both builds the sample once, and evicting it evicts
+    both models."""
+    from conftest import SF_DIR as sf
+
+    from mr_python_spark.functions import bpe, unigram
+
+    builds = []
+
+    def counted(name, spark, sf_dir, build, **kwargs):
+        def build_counted():
+            builds.append(name)
+            return build()
+
+        return corpus_cache(name, spark, sf_dir, build_counted, **kwargs)
+
+    monkeypatch.setattr(bpe, "corpus_cache", counted)
+    monkeypatch.setattr(unigram, "corpus_cache", counted)
+    evict("tokenizer.word_freq", "bpe.model", "unigram.model")
+    merges = bpe.trained_merges(spark, sf)
+    pieces = unigram.trained_unigram(spark, sf)[0]
+    assert sorted(builds) == ["bpe.model", "tokenizer.word_freq", "unigram.model"]
+    evict("tokenizer.word_freq")
+    assert not _entries("bpe.model") and not _entries("unigram.model")
+    assert bpe.trained_merges(spark, sf) == merges
+    assert unigram.trained_unigram(spark, sf)[0] == pieces
+    assert builds.count("tokenizer.word_freq") == 2
+
+
 def _evict_all():
     evict(*{key[0] for key in session._CORPUS})  # noqa: SLF001
 

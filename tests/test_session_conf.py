@@ -9,7 +9,9 @@ process-global ``RDD.toDF`` still points where it did after a stream
 or a clone, a spy on the caller's ``RuntimeConfig`` while the
 conf-bound queries are built and collected, and a threaded re-run of
 those queries (plus three whose plans depend on the session's
-broadcast threshold) compared exactly with the serial run.
+broadcast threshold, and the corpus-registry consumers of the
+cold/warm probe, whose registry builds then run concurrently)
+compared exactly with the serial run.
 """
 
 from __future__ import annotations
@@ -46,6 +48,13 @@ FOREACH_BATCH = ["streaming_parquet_sink", "streaming_incremental_mv", "streamin
 MEMORY_SINK = ["streaming_sessions_tws", "streaming_stateful_sessions", "pyds_stream_ticks"]
 
 
+def _registry_consumers() -> list[str]:
+    """The corpus-registry consumers the cold/warm probe times."""
+    from tools.probe import PROBES
+
+    return PROBES["cold_warm"]["queries"]
+
+
 def _sorted(df):
     pdf = df.toPandas()
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
@@ -69,6 +78,17 @@ def test_no_conf_writes_outside_session_module():
     ]
     assert len(paths) > 40
     assert hits == []
+
+
+def test_package_reads_no_other_env_knob():
+    """The package reads the core count and the driver memory from the
+    environment, and nothing else: a deployment configures the session
+    it brings to ``ensure_session``."""
+    pattern = re.compile(r"SPARK_GRAFT_\w+")
+    paths = glob.glob(os.path.join(REPO, "mr_python_spark", "**", "*.py"), recursive=True)
+    names = {m.group(0) for p in paths for m in pattern.finditer(open(p, encoding="utf-8").read())}
+    assert len(paths) > 30
+    assert names <= {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 
 def test_with_conf_leaves_caller_and_rdd_to_df_alone(spark):
@@ -122,13 +142,14 @@ def serial(spark):
     for name in originals:
         setattr(RuntimeConfig, name, spy(name))
     conf_before = dict(spark.conf.getAll)
+    names = CONF_BOUND + BROADCAST_DEPENDENT + _registry_consumers()
     try:
-        frames = {name: queries[name](spark, SF) for name in CONF_BOUND + BROADCAST_DEPENDENT}
+        frames = {name: queries[name](spark, SF) for name in names}
         rows = {name: _sorted(df) for name, df in frames.items()}
     finally:
         for name, original in originals.items():
             setattr(RuntimeConfig, name, original)
-    return dict(queries=queries, frames=frames, rows=rows, calls=calls,
+    return dict(names=names, queries=queries, frames=frames, rows=rows, calls=calls,
                 conf_before=conf_before)
 
 
@@ -142,8 +163,13 @@ def test_no_query_writes_its_callers_conf(spark, serial):
 
 
 def test_threaded_queries_match_serial(spark, serial):
-    names = CONF_BOUND + BROADCAST_DEPENDENT
-    queries = serial["queries"]
+    """Four threads run every query of the serial pass on an empty
+    corpus registry, so its builds (the subword trainers' shared
+    sample among them) run concurrently under the registry lock."""
+    from mr_python_spark import session
+
+    names, queries = serial["names"], serial["queries"]
+    session.evict(*{key[0] for key in session._CORPUS})  # noqa: SLF001
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-4)  # interleave the driver-side builds finely
     try:

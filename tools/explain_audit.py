@@ -857,8 +857,9 @@ AUDITS: dict[str, dict] = {
         # aggregate — bounded single partitions, never corpus rows
         unpartitioned_windows=["agg:source", "agg:source"],
     ),
-    # bake-off: TWO Arrow encode passes (budgeted models by closure),
-    # doc_id equi-joins of narrow int frames, |langs|-row aggregate
+    # bake-off: ONE Arrow encode pass for both budgeted models (shipped
+    # by closure), one doc_id equi-join of narrow int frames against the
+    # documents metadata, |langs|-row aggregate
     "tokenizer_bakeoff_report": dict(
         must=[r"MapInPandas", r"partial_"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],

@@ -448,6 +448,13 @@ def _encode_png(w: int, h: int, channels: int, seed: int) -> bytes:
     )
 
 
+def _fixture_dims(plen: int) -> tuple[int, int]:
+    """The fixture image's (width, height), derived from the document's
+    payload length (the SQL oracles restate it as ``1 + len % 64``,
+    ``1 + (len * 3) % 64``)."""
+    return 1 + plen % 64, 1 + (plen * 3) % 64
+
+
 _DECODE_ORACLE = """
 SELECT
   doc_id,
@@ -483,7 +490,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     raster length would FAIL the gate, which is exactly what the
     fake-probe queries cannot promise.
 
-    Scale (round 16 — the ``_phash_hashes`` move applied here): the
+    Scale (round 16 — the move of :func:`_image_feature_pass`): the
     fixture encoder derives everything from (doc_id, payload length),
     so only the LENGTH rides the ``spread`` repartition — corpus
     bytes never shuffle — and the CPU-heavy decode runs on every
@@ -525,7 +532,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def encode(doc_id: int, plen: int) -> bytes:
-        w, h = 1 + plen % 64, 1 + (plen * 3) % 64
+        w, h = _fixture_dims(plen)
         fmt = doc_id % 4
         if fmt == 0:
             return encode_bmp(w, h)
@@ -767,22 +774,25 @@ def multimodal_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload.mapInPandas(keyframes, _KEYFRAME_SCHEMA)
 
 
-# --- perceptual-hash image dedup ----------------------------------------
+# --- image features: one decode per image for the pHash and resize queries
 
-_PHASH_SCHEMA = T.StructType(
+#: side of the nearest-neighbour resize grid (16×16 samples)
+_RESIZE_N = 16
+
+_FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("phash_hi", T.LongType()),
         T.StructField("phash_lo", T.LongType()),
+        T.StructField("pix_sum", T.LongType()),
+        T.StructField("pix_min", T.IntegerType()),
+        T.StructField("pix_max", T.IntegerType()),
     ]
 )
 
-#: The oracle recomputes the 64-bit dHash from the fixtures'
-#: closed-form raster law (pixel byte at line ``y``, in-line byte
-#: offset ``i`` is ``(seed + 31*y + 7*i) % 251``) — so a corrupted
-#: PNG inflate/unfilter or JPEG predictor decode on the Spark side
-#: flips hash bits and fails the value gate, not just the row count.
-_PHASH_BITS_CTES = """
+#: the oracles' fixture images: dims from the payload length, channels
+#: and seed from doc_id, BMP (≡ 0 mod 4) left out
+_IMGS_CTE = """
 WITH imgs AS (
   SELECT doc_id,
          1 + octet_length(encode(text)) % 64 AS w,
@@ -791,7 +801,14 @@ WITH imgs AS (
               ELSE 3 END AS ch,
          doc_id % 97 AS seed
   FROM documents WHERE doc_id % 4 <> 0
-),
+),"""
+
+#: The oracle recomputes the 64-bit dHash from the fixtures'
+#: closed-form raster law (pixel byte at line ``y``, in-line byte
+#: offset ``i`` is ``(seed + 31*y + 7*i) % 251``) — so a corrupted
+#: PNG inflate/unfilter or JPEG predictor decode on the Spark side
+#: flips hash bits and fails the value gate, not just the row count.
+_PHASH_BITS_CTES = _IMGS_CTE + """
 vals AS (
   SELECT doc_id, gi.i AS gi, gj.j AS gj,
          (seed + 31 * ((gi.i * h) // 8) + 7 * (((gj.j * w) // 9) * ch)) % 251 AS g
@@ -854,10 +871,11 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Paeth branch, bad JPEG predictor) flips grid bits and fails the
     hash gate.
 
-    Scale: decode + hash ride one Arrow-batched ``mapInPandas`` pass
-    (per-image work is O(grid) after the decode, payloads never
-    shuffle); the only shuffle is the hash-keyed window for cluster
-    sizes — the exact-dedup shape (hash, doc_id).  Hamming-NEAR
+    Scale: decode + hash ride the one Arrow-batched ``mapInPandas``
+    pass of :func:`_image_feature_pass` (per-image work is O(grid)
+    after the decode, payloads never shuffle); the only shuffle is the
+    hash-keyed window for cluster sizes — the exact-dedup shape
+    (hash, doc_id).  Hamming-NEAR
     duplicates at 100 TB use the ``dedup_simhash`` banding trick on
     these same bits: split the 64 bits into 4 × 16-bit bands and
     bucket-join per band — same posture as the text LSH family, no
@@ -868,7 +886,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    hashed = _phash_frame(spark, sf_dir)
+    hashed = _image_features(spark, sf_dir)
     w = Window.partitionBy("phash_hi", "phash_lo")
     return hashed.select(
         "doc_id",
@@ -879,27 +897,14 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _phash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, phash_hi, phash_lo) over real decodes, keyed-cached
-    per (session, documents file identity) — the decode is the
-    expensive part and both phash queries consume the same bits; see
-    :func:`multimodal_phash_dedup` for the hash definition."""
-    return corpus_cache(
-        "multimodal.phash",
-        spark,
-        sf_dir,
-        lambda: _phash_hashes(spark, sf_dir),
-    )
-
-
 def _fixture_image_decode(d: int, plen: int):
     """Encode-then-REAL-decode one fixture image: format/seed derive
     from doc_id, dimensions from the payload length, pixels from the
     raster law ``(seed + 31y + 7i) % 251``.  THE single definition of
-    the fixture law on the engine side (the phash and resize passes
-    both call it; the SQL CTEs restate it independently — that pair
-    is the cross-check).  Returns (w, h, channels, raster_bytes);
-    raises on decode failure (the gate's whole point: loud)."""
+    the fixture law on the engine side (the image-feature pass calls
+    it; the SQL CTEs restate it independently — that pair is the
+    cross-check).  Returns (w, h, channels, raster_bytes); raises on
+    decode failure (the gate's whole point: loud)."""
     import numpy as np
 
     from mr_python_spark.multimodal.jpeg import (
@@ -915,7 +920,7 @@ def _fixture_image_decode(d: int, plen: int):
         ).tobytes()
 
     fmt, seed = d % 4, d % 97
-    w, h = 1 + plen % 64, 1 + (plen * 3) % 64
+    w, h = _fixture_dims(plen)
     if fmt == 3:
         payload = encode_jpeg_lossless(
             w, h, rgb=law_raster(w, h, 3, seed), seed=seed
@@ -944,52 +949,77 @@ def _fixture_image_decode(d: int, plen: int):
     return dec
 
 
-def _phash_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _image_feature_row(d: int, plen: int) -> tuple:
+    """(doc_id, phash_hi, phash_lo, pix_sum, pix_min, pix_max) of ONE
+    real decode of fixture image ``d``.
+
+    Both grids read channel 0 at ``x_j = j*w // cols``,
+    ``y_i = i*h // rows`` from one (h, w·ch) view of the raster:
+
+    * the 8×9 dHash grid: bit ``i*8 + j`` is set when sample ``j`` of
+      grid row ``i`` is below sample ``j + 1``; ``phash_lo`` holds bits
+      0-31 and ``phash_hi`` bits 32-63;
+    * the ``_RESIZE_N``×``_RESIZE_N`` nearest-neighbour grid, reduced
+      to its sum, min and max.
+    """
+    import numpy as np
+
+    n = _RESIZE_N
+    w, h, ch, raster = _fixture_image_decode(d, plen)
+    g = np.frombuffer(raster, np.uint8).reshape(h, w * ch)
+    dh = g[np.ix_(np.arange(8) * h // 8, np.arange(9) * w // 9 * ch)]
+    bits = np.packbits(dh[:, :-1] < dh[:, 1:], bitorder="little")
+    nn = g[np.ix_(np.arange(n) * h // n, np.arange(n) * w // n * ch)]
+    return (
+        d,
+        int.from_bytes(bits[4:].tobytes(), "little"),
+        int.from_bytes(bits[:4].tobytes(), "little"),
+        int(nn.sum()),
+        int(nn.min()),
+        int(nn.max()),
+    )
+
+
+def _image_feature_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_image_feature_row` of every non-BMP fixture image in one
+    Arrow-batched pass: ONE real decode per image feeds both image
+    features.
+
+    Only the payload LENGTH reaches the fixture encoder (dims derive
+    from it, seed/format from doc_id), so the ``spread`` repartition
+    of the narrow single-file scan never shuffles corpus bytes, and
+    the CPU-bound decode runs on every core.
+    """
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 4 != 0
     )
-    # only the payload LENGTH reaches the fixture encoder (dims derive
-    # from it, seed/format from doc_id) — shipping just the length
-    # keeps the spread repartition from shuffling corpus bytes, which
-    # is also what makes the "payloads never shuffle" scale claim true
-    with_payload = docs.select(
+    with_len = spread(docs.select(
         "doc_id", F.octet_length(F.col("text").cast("binary")).alias("plen")
-    )
+    ), parts=scan_partitions(spark, sf_dir, "documents"))
 
-    def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            his, los = [], []
-            for d, plen in zip(pdf["doc_id"], pdf["plen"]):
-                d, plen = int(d), int(plen)
-                dw, dh, dch, raster = _fixture_image_decode(d, plen)
-                stride = dw * dch
-                hi = lo = 0
-                for i in range(8):
-                    y = (i * dh) // 8
-                    row = raster[y * stride : (y + 1) * stride]
-                    gs = [row[((j * dw) // 9) * dch] for j in range(9)]
-                    for j in range(8):
-                        if gs[j] < gs[j + 1]:
-                            b = i * 8 + j
-                            if b >= 32:
-                                hi |= 1 << (b - 32)
-                            else:
-                                lo |= 1 << b
-                his.append(hi)
-                los.append(lo)
             yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "phash_hi": his, "phash_lo": los}
+                [_image_feature_row(int(d), int(p))
+                 for d, p in zip(pdf["doc_id"], pdf["plen"])],
+                columns=_FEATURE_SCHEMA.fieldNames(),
             )
 
-    # the lossless-JPEG encode/decode is CPU-bound Python on a narrow
-    # single-file scan — spread it across the cluster (no broadcast
-    # state rides this operator, so the shingling rule applies, not
-    # the broadcast-state counter-rule)
-    from mr_python_spark.session import spread
+    return with_len.mapInPandas(features, _FEATURE_SCHEMA)
 
-    return spread(with_payload).mapInPandas(phash, _PHASH_SCHEMA)
+
+def _image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stored :func:`_image_feature_pass` frame, one registry entry
+    per (session, documents file identity): the three image queries
+    select from it, so a session decodes each image once."""
+    return corpus_cache(
+        "multimodal.image_features",
+        spark,
+        sf_dir,
+        lambda: _image_feature_pass(spark, sf_dir),
+    )
 
 
 #: near-dup acceptance: dHash Hamming distance ≤ this (the standard
@@ -1045,16 +1075,16 @@ def multimodal_phash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact-duplicate pairs (hamming 0) are included by construction —
     this operator is the superset report; ``multimodal_phash_dedup``
-    is the exact-collision clustering view of the same frame (shared
-    keyed cache, one decode pass between them).
+    is the exact-collision clustering view of the same frame (one
+    stored image-feature frame, one decode pass between them).
 
     Verification is inline (each bucket's struct list carries both
     hashes, so ``bit_count(hi⊕hi') + bit_count(lo⊕lo')`` needs no
-    join back), and the whole pipeline after the cached hash frame is
-    JVM codegen.  Hash-gated against the same closed-form raster law
-    as the parent.
+    join back), and the whole pipeline after the stored image-feature
+    frame is JVM codegen.  Hash-gated against the same closed-form
+    raster law as the parent.
     """
-    hashed = _phash_frame(spark, sf_dir)
+    hashed = _image_features(spark, sf_dir)
     bands = hashed.select(
         "doc_id",
         "phash_hi",
@@ -1097,33 +1127,11 @@ def multimodal_phash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- nearest-neighbor resize (the feature-extract/resize pipeline step) -
 
-_RESIZE_N = 16
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("out_w", T.IntegerType()),
-        T.StructField("out_h", T.IntegerType()),
-        T.StructField("pix_sum", T.LongType()),
-        T.StructField("pix_min", T.IntegerType()),
-        T.StructField("pix_max", T.IntegerType()),
-    ]
-)
-
 #: the oracle resamples the fixtures' closed-form raster law on the
 #: SAME nearest-neighbor grid (x_j = (j*w)//16, y_i = (i*h)//16), so
 #: any off-by-one in the engine's decode OR its sampling arithmetic
 #: shifts a pixel and fails the value gate
-_RESIZE_ORACLE = f"""
-WITH imgs AS (
-  SELECT doc_id,
-         1 + octet_length(encode(text)) % 64 AS w,
-         1 + (octet_length(encode(text)) * 3) % 64 AS h,
-         CASE CAST(doc_id % 4 AS INTEGER) WHEN 1 THEN 1 WHEN 2 THEN 4
-              ELSE 3 END AS ch,
-         doc_id % 97 AS seed
-  FROM documents WHERE doc_id % 4 <> 0
-),
+_RESIZE_ORACLE = _IMGS_CTE + f"""
 samples AS (
   SELECT doc_id,
          (seed + 31 * ((gi.i * h) // {_RESIZE_N})
@@ -1156,58 +1164,23 @@ def multimodal_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical sampling grid, so a flipped byte anywhere in decode or
     an off-by-one in the resample arithmetic fails the VALUE gate.
 
-    100 TB posture: one spread Arrow pass; only the payload LENGTH is
-    shuffled to the workers (dims/seed derive from it — the same
-    "payloads never shuffle" trick as `_phash_hashes`); per-image
-    work is O(w·h) decode + O(256) sampling, no shuffle after the
-    map.  With a real object store the pass reads bytes via
-    ``binaryfile_scan``'s source instead of synthesizing them.  The
-    result frame is keyed-cached per (session, file identity) like
-    ``_phash_frame`` — repeated consumers pay the decode once.
+    100 TB posture: the one spread Arrow pass of
+    :func:`_image_feature_pass` (shared with the pHash queries); only
+    the payload LENGTH is shuffled to the workers; per-image work is
+    O(w·h) decode + O(256) sampling, no shuffle after the map.  With a
+    real object store the pass reads bytes via ``binaryfile_scan``'s
+    source instead of synthesizing them.  The query selects from the
+    stored image-feature frame, so a session that ran either pHash
+    query pays no decode here.
     """
-    return corpus_cache(
-        "multimodal.resize",
-        spark,
-        sf_dir,
-        lambda: _resize_stats(spark, sf_dir),
+    return _image_features(spark, sf_dir).select(
+        "doc_id",
+        F.lit(_RESIZE_N).alias("out_w"),
+        F.lit(_RESIZE_N).alias("out_h"),
+        "pix_sum",
+        "pix_min",
+        "pix_max",
     )
-
-
-def _resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 4 != 0
-    )
-    with_len = spread(docs.select(
-        "doc_id", F.octet_length(F.col("text").cast("binary")).alias("plen")
-    ), parts=scan_partitions(spark, sf_dir, "documents"))
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _RESIZE_N
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = {
-                "doc_id": [], "out_w": [], "out_h": [],
-                "pix_sum": [], "pix_min": [], "pix_max": [],
-            }
-            for d, plen in zip(pdf["doc_id"], pdf["plen"]):
-                d, plen = int(d), int(plen)
-                dw, dh, dch, raster = _fixture_image_decode(d, plen)
-                stride = dw * dch
-                vals = [
-                    raster[((i * dh) // n) * stride + ((j * dw) // n) * dch]
-                    for i in range(n)
-                    for j in range(n)
-                ]
-                rows["doc_id"].append(d)
-                rows["out_w"].append(n)
-                rows["out_h"].append(n)
-                rows["pix_sum"].append(sum(vals))
-                rows["pix_min"].append(min(vals))
-                rows["pix_max"].append(max(vals))
-            yield pd.DataFrame(rows)
-
-    return with_len.mapInPandas(resize, _RESIZE_SCHEMA)
 
 
 # --- audio decimation (sample-rate conversion shape) --------------------

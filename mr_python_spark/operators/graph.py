@@ -15,9 +15,9 @@ every intermediate round, not just approximately at the end.
 
 Scale notes: each iteration is one join + one aggregate on the EDGE
 list (the corpus is never re-read), the same alternating
-join-aggregate shape GraphX uses; iteration count is fixed (3), and
-per-round frames are cached, then unpersisted once the fixed point is
-pinned, like the components loop.
+join-aggregate shape GraphX uses; iteration count is fixed (3).  Each
+round's ranks feed the next round exactly once, so the rounds compose
+into one lazy plan that the registry pins; nothing is cached per round.
 """
 
 from __future__ import annotations
@@ -141,10 +141,7 @@ def neardup_bidir(spark: SparkSession, sf_dir: str):
 def pagerank_round(edges, verts, rank, base: int):
     """ONE PageRank round — the iteration kernel the fixed point
     repeats: neighbor-contribution aggregate (equi-join on the edge
-    list, partial+final sum) re-joined onto the vertex set.  Extracted
-    so tools/explain_audit.py's ``pagerank_round_builder`` pseudo-entry
-    audits the exact plan the loop executes (the registry query itself
-    returns the checkpointed fixed point, a plan-less leaf)."""
+    list, partial+final sum) re-joined onto the vertex set."""
     contrib = (
         edges.join(rank, edges.src == rank.doc_id)
         .select("dst", F.expr("rank div d").alias("c"))
@@ -157,6 +154,25 @@ def pagerank_round(edges, verts, rank, base: int):
     )
 
 
+def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``PR_ITERATIONS`` rounds over the stored edge frame as one
+    lazy plan: each round's ranks feed the next round exactly once, so
+    no round is recomputed without a cache, and the registry pins the
+    result.  ``tools/explain_audit.py`` audits this plan as
+    ``pagerank_builder``."""
+    bidir = neardup_bidir(spark, sf_dir)
+    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    edges = bidir.join(deg, "src")  # (src, dst, d)
+    verts = bidir.select(F.col("src").alias("doc_id")).distinct()
+    n = verts.count()  # driver scalar: one long, the loop's constant
+    init = PR_SCALE // n
+    base = (15 * init) // 100
+    rank = verts.select("doc_id", F.lit(init).cast("long").alias("rank"))
+    for _ in range(PR_ITERATIONS):
+        rank = pagerank_round(edges, verts, rank, base)
+    return rank.select("doc_id", F.col("rank").cast("long").alias("rank"))
+
+
 @register("pagerank_dedup_graph", _oracle())
 def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank (3 rounds, d=0.85) on the near-dup graph.
@@ -167,35 +183,12 @@ def pagerank_dedup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor division on ``PR_SCALE`` units (see module docstring), so
     the output is bit-identical to the SQL oracle.  Per round: one
     shuffle to aggregate neighbor contributions, one broadcast-size
-    join back onto the vertex set; the edge list is cached once.  The
-    materialized fixed point is deterministic, so it is cached per
-    corpus like the CC labels.
+    join back onto the vertex set.  The fixed point is deterministic,
+    so it is stored per corpus like the CC labels.
     """
-    def build():
-        bidir = neardup_bidir(spark, sf_dir)
-        deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        edges = bidir.join(deg, "src").cache()  # (src, dst, d)
-        verts = bidir.select(F.col("src").alias("doc_id")).distinct().cache()
-        n = verts.count()  # driver scalar: one long, the loop's constant
-        init = PR_SCALE // n
-        base = (15 * init) // 100
-        rank = verts.select("doc_id", F.lit(init).cast("long").alias("rank"))
-        inter = []
-        for _ in range(PR_ITERATIONS):
-            rank = pagerank_round(edges, verts, rank, base).cache()
-            inter.append(rank)
-        out = rank.select("doc_id", F.col("rank").cast("long").alias("rank"))
-        # pin the fixed point (the |verts| rows, lineage-free) before
-        # the loop frames are released; the registry stores it as it
-        # is, and bidir stays — the registry owns it
-        out = out.localCheckpoint(eager=True)
-        for df in inter:
-            df.unpersist()
-        verts.unpersist()
-        edges.unpersist()
-        return out
-
-    return corpus_cache("graph.pagerank", spark, sf_dir, build)
+    return corpus_cache(
+        "graph.pagerank", spark, sf_dir, lambda: _pagerank(spark, sf_dir)
+    )
 
 
 _REACH_ORACLE = """

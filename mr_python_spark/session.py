@@ -278,7 +278,7 @@ def _pin(df: DataFrame) -> DataFrame:
     ``Scan ExistingRDD`` read whatever ran before it.  The leaf does
     not keep an adaptive plan's output partitioning, so a consumer
     that needs the rows clustered by a key re-shuffles them.  A frame
-    that already is a checkpoint (a fixed point that pinned its result
+    that already is a checkpoint (the components loop pins its result
     before releasing its loop frames) is stored as it is."""
     return df if _checkpoint_rdd(df) is not None else df.localCheckpoint(eager=True)
 

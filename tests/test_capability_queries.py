@@ -381,6 +381,46 @@ def test_decode_png_rejects_corrupt_streams():
     assert _decode_png_pixels(rebuild()) is not None  # rebuild() itself is valid
 
 
+def test_image_feature_row_matches_per_pixel_reference():
+    """The numpy grid sampling of ``_image_feature_row`` equals a
+    per-pixel loop over the same decoded raster (dHash bits and the
+    16×16 nearest-neighbour sum/min/max) for every non-BMP format:
+    grayscale PNG, RGBA PNG, lossless WebP and lossless JPEG, at
+    several image sizes."""
+    from mr_python_spark.multimodal import (
+        _RESIZE_N,
+        _fixture_image_decode,
+        _image_feature_row,
+    )
+
+    def reference(d, plen):
+        w, h, ch, raster = _fixture_image_decode(d, plen)
+        stride = w * ch
+        hi = lo = 0
+        for i in range(8):
+            row = raster[((i * h) // 8) * stride:][:stride]
+            gs = [row[((j * w) // 9) * ch] for j in range(9)]
+            for j in range(8):
+                if gs[j] < gs[j + 1]:
+                    b = i * 8 + j
+                    if b >= 32:
+                        hi |= 1 << (b - 32)
+                    else:
+                        lo |= 1 << b
+        n = _RESIZE_N
+        vals = [
+            raster[((i * h) // n) * stride + ((j * w) // n) * ch]
+            for i in range(n)
+            for j in range(n)
+        ]
+        return (d, hi, lo, sum(vals), min(vals), max(vals))
+
+    cases = [(d, plen) for d in (1, 2, 5, 6, 18, 34) for plen in (0, 8, 63, 100, 1234)]
+    cases += [(d, plen) for d in (3, 7) for plen in (0, 63, 100)]
+    for d, plen in cases:
+        assert _image_feature_row(d, plen) == reference(d, plen), (d, plen)
+
+
 def test_typed_surfaces_schemas(spark):
     """The decimal query must genuinely compute in DecimalType (the
     string render is hash plumbing only) and the interval query must

@@ -234,14 +234,44 @@ def test_evict_shingles_cascades_to_verified_pairs(spark):
     assert after == before
 
 
-def test_tokenizer_models_share_one_sample_entry(spark, monkeypatch):
-    """The BPE and unigram trainers read one ``tokenizer.word_freq``
-    entry: training both builds the sample once, and evicting it evicts
-    both models."""
+def _shared_root_family(family: str):
+    """(root entry, the entries its members build, the modules whose
+    registry lookups are counted, the members) of a family whose
+    members read one shared root."""
+    if family == "tokenizer":
+        from mr_python_spark.functions import bpe, unigram
+
+        return (
+            "tokenizer.word_freq",
+            ["bpe.model", "tokenizer.word_freq", "unigram.model"],
+            [bpe, unigram],
+            [bpe.trained_merges, lambda spark, sf: unigram.trained_unigram(spark, sf)[0]],
+        )
+    from mr_python_spark import multimodal
+
+    return (
+        "multimodal.image_features",
+        ["multimodal.image_features"],
+        [multimodal],
+        [multimodal.multimodal_phash_dedup, multimodal.multimodal_resize_nearest],
+    )
+
+
+def _value(v):
+    return sorted(tuple(r) for r in v.collect()) if hasattr(v, "collect") else v
+
+
+@pytest.mark.parametrize("family", ["tokenizer", "images"])
+def test_family_shares_one_root_entry(spark, monkeypatch, family):
+    """The members of a family read one root entry: calling them all
+    builds the root once and nothing but their own entries, evicting
+    the root leaves no entry of the family, and the rebuilt members
+    return what they returned before.  The BPE and unigram trainers
+    read one ``tokenizer.word_freq`` sample; the pHash and resize
+    queries read one ``multimodal.image_features`` decode."""
     from conftest import SF_DIR as sf
 
-    from mr_python_spark.functions import bpe, unigram
-
+    root, built, modules, members = _shared_root_family(family)
     builds = []
 
     def counted(name, spark, sf_dir, build, **kwargs):
@@ -251,17 +281,16 @@ def test_tokenizer_models_share_one_sample_entry(spark, monkeypatch):
 
         return corpus_cache(name, spark, sf_dir, build_counted, **kwargs)
 
-    monkeypatch.setattr(bpe, "corpus_cache", counted)
-    monkeypatch.setattr(unigram, "corpus_cache", counted)
-    evict("tokenizer.word_freq", "bpe.model", "unigram.model")
-    merges = bpe.trained_merges(spark, sf)
-    pieces = unigram.trained_unigram(spark, sf)[0]
-    assert sorted(builds) == ["bpe.model", "tokenizer.word_freq", "unigram.model"]
-    evict("tokenizer.word_freq")
-    assert not _entries("bpe.model") and not _entries("unigram.model")
-    assert bpe.trained_merges(spark, sf) == merges
-    assert unigram.trained_unigram(spark, sf)[0] == pieces
-    assert builds.count("tokenizer.word_freq") == 2
+    for module in modules:
+        monkeypatch.setattr(module, "corpus_cache", counted)
+    evict(*built)
+    before = [_value(member(spark, sf)) for member in members]
+    assert sorted(builds) == built
+    evict(root)
+    spaces = {name.split(".")[0] for name in built}
+    assert not [k for k in session._CORPUS if k[0].split(".")[0] in spaces]  # noqa: SLF001
+    assert [_value(member(spark, sf)) for member in members] == before
+    assert builds.count(root) == 2
 
 
 def _evict_all():

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 
 from mr_python_spark import dedup, multimodal  # noqa: E402
 from mr_python_spark.functions import lm, pipeline, text  # noqa: E402
+from mr_python_spark.operators import graph  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -681,11 +682,9 @@ AUDITS: dict[str, dict] = {
         must=[r"Window", r"HashAggregate|SortAggregate", r"partial_"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
     ),
-    # the registry query returns the checkpointed fixed point (a
-    # lineage-free leaf — r16: the loop's unpersists emptied any plain
-    # cache entry, so every consumer re-ran all 3 rounds); the
-    # iteration kernel's join-aggregate structure is policed on the
-    # pagerank_round_builder pseudo-entry below
+    # the registry query returns the stored fixed point (a
+    # lineage-free leaf); the rounds' join-aggregate structure is
+    # policed on the pagerank_builder pseudo-entry below
     "pagerank_dedup_graph": dict(
         must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
@@ -941,8 +940,8 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Join"],
         hinted_broadcasts=0,
     ),
-    # perceptual-hash dedup: the stored hash frame (its Arrow
-    # decode+hash pass is policed on phash_builder), then the
+    # perceptual-hash dedup: the stored image-feature frame (its Arrow
+    # decode pass is policed on image_features_builder), then the
     # hash-keyed cluster window — no joins; the Window is PARTITIONED
     # by the hash pair (never single-partition)
     "multimodal_phash_dedup": dict(
@@ -950,8 +949,8 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Join"],
         hinted_broadcasts=0,
     ),
-    # nearest-neighbor resize: the query returns the stored stats frame;
-    # its decode pass is policed on resize_builder
+    # nearest-neighbor resize: a select over the stored image-feature
+    # frame; its decode pass is policed on image_features_builder
     "multimodal_resize_nearest": dict(
         must=[r"Scan ExistingRDD"],
         must_not=[r"CartesianProduct", r"Join", r"Window",
@@ -1426,14 +1425,9 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Window"],
         hinted_broadcasts=2,  # in-domain unigram + bigram model tables
     ),
-    # image builders: one Arrow decode pass over the spread scan, no
-    # joins; the resize pass shuffles only the payload length
-    "phash_builder": dict(
-        must=[r"MapInPandas"],
-        must_not=[r"CartesianProduct", r"Join"],
-        hinted_broadcasts=0,
-    ),
-    "resize_builder": dict(
+    # image-feature builder: one Arrow decode pass over the spread
+    # scan, no joins; only the payload length is shuffled
+    "image_features_builder": dict(
         must=[r"MapInPandas"],
         must_not=[r"CartesianProduct", r"Join", r"Window",
                   r"Exchange hashpartitioning"],
@@ -1497,10 +1491,9 @@ AUDITS: dict[str, dict] = {
         must_not=[r"CartesianProduct", r"Join", r"Window"],
         hinted_broadcasts=0,
     ),
-    # ONE PageRank round (the kernel the checkpointed fixed point
-    # repeats): equi-joins on the edge list + partial+final sum,
-    # never a cartesian or nested loop
-    "pagerank_round_builder": dict(
+    # the PageRank rounds the registry pins: equi-joins on the edge
+    # list + partial+final sum, never a cartesian or nested loop
+    "pagerank_builder": dict(
         must=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", r"partial_sum"],
         must_not=[r"CartesianProduct", r"BroadcastNestedLoopJoin"],
         hinted_broadcasts=0,
@@ -1529,21 +1522,6 @@ AUDITS: dict[str, dict] = {
         hinted_broadcasts=2,  # gated verify broadcast, sa + sb sides
     ),
 }
-
-
-def _pagerank_round_builder(spark, sf_dir):
-    # one iteration of the kernel over the (stored-leaf) edge frame —
-    # the joins/aggregate above the leaf are what this entry polices
-    from pyspark.sql import functions as F
-
-    from mr_python_spark.operators.graph import neardup_bidir, pagerank_round
-
-    bidir = neardup_bidir(spark, sf_dir)
-    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges = bidir.join(deg, "src")
-    verts = bidir.select(F.col("src").alias("doc_id")).distinct()
-    rank = verts.select("doc_id", F.lit(1).cast("long").alias("rank"))
-    return pagerank_round(edges, verts, rank, 0)
 
 
 def _cc_shingle_sets(spark, sf_dir):
@@ -1582,12 +1560,11 @@ FRAME_BUILDERS = {
     "ml_scored_builder": lm._ml_scored,
     "nb_scored_builder": lm._nb_scored,
     "langid_dp_builder": text._langid_dp,
-    "pagerank_round_builder": _pagerank_round_builder,
+    "pagerank_builder": graph._pagerank,
     "cc_round_builder": _cc_round_builder,
     "cc_edges_builder": _cc_edges_builder,
     "ngram_pairs_builder": dedup._ngram_pairs,
-    "phash_builder": multimodal._phash_hashes,
-    "resize_builder": multimodal._resize_stats,
+    "image_features_builder": multimodal._image_feature_pass,
 }
 
 

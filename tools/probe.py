@@ -135,7 +135,7 @@ PROBES = {
     },
     # one consumer or two per keyed-cache family: shingles, verified
     # pairs, MinHash signatures, the graph fixed points, the LM frames,
-    # span df, image hashes, Bloom bits, sketches, planning scalars and
+    # span df, image features, Bloom bits, sketches, planning scalars and
     # driver-trained models
     "cold_warm": {
         "replicas": (1,),
